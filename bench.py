@@ -332,6 +332,7 @@ def main() -> None:
     # the sidecar write fails.
     sidecar = {"runs": raw_runs, "steal_pct": steal_pcts}
     sidecar_name = "bench_raw_runs.json"
+    raw_runs_file = None
     try:
         sidecar_path = os.path.join(
             os.path.dirname(os.path.abspath(__file__)), sidecar_name
@@ -339,6 +340,7 @@ def main() -> None:
         with open(sidecar_path, "w") as fh:
             json.dump(sidecar, fh)
         print(f"[bench] raw runs -> {sidecar_path}", file=sys.stderr)
+        raw_runs_file = sidecar_name
     except OSError as e:
         print(f"[bench] sidecar write failed: {e}", file=sys.stderr)
     print(
@@ -356,7 +358,7 @@ def main() -> None:
                 "baseline_ratios": ratios,
                 "retried": retried,
                 "errors": errors,
-                "raw_runs_file": sidecar_name,
+                "raw_runs_file": raw_runs_file,
                 "host_stall_suspects": stall_suspects,
                 "host_stall_detector": (
                     "3x ratio with >=250ms spread, or 10x ratio with "

@@ -13,15 +13,10 @@ battery coverage fails the suite until it is covered or justified.
 from __future__ import annotations
 
 import ast
-import json
 import re
 from pathlib import Path
 
-import pytest
-
-from weather_etl_spark.registry import load_all
-
-ROOT = Path(__file__).resolve().parent.parent
+from weather_etl_spark.registry import driver_lineage, load_all
 
 #: Never-driver-checked rows for which a fabricated-data battery is
 #: genuinely uninformative, each with the reason and the differential
@@ -90,19 +85,6 @@ JUSTIFIED: dict[str, str] = {
 }
 
 
-def _lineage() -> set[str]:
-    checked: set[str] = set()
-    for p in sorted(ROOT.glob("CORRECTNESS_r*.json")):
-        for name, row in json.loads(p.read_text()).items():
-            ok = row.get("err") is None or (
-                row.get("err") == "no_oracle"
-                and row.get("spark_rows") is not None
-            )
-            if ok:
-                checked.add(name)
-    return checked
-
-
 _NAME = re.compile(r"^(?:q|llm|src|snk|pipe|st|udtf)_[a-z0-9_]+$")
 
 
@@ -145,7 +127,7 @@ def _battery_covered() -> set[str]:
 
 def test_every_never_checked_row_is_stressed_or_justified():
     specs = load_all()
-    never = set(specs) - _lineage()
+    never = set(specs) - set(driver_lineage())
     covered = _battery_covered()
     residue = never - covered
     unjustified = sorted(residue - set(JUSTIFIED))

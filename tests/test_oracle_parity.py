@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import pytest
 
-pytestmark = pytest.mark.full  # heavy lane (see pytest.ini)
-
 from weather_etl_spark.registry import load_all
 from tests.oracle_utils import compare_to_oracle
 

@@ -49,72 +49,6 @@ def test_readme_counts_match_registry():
     assert oracled == sum(1 for s in reg.values() if s.oracle is not None)
 
 
-def test_freshness_ledger_matches_correctness_lineage():
-    """FRESHNESS.json (the committed driver-verdict freshness ledger,
-    r8 verdict order #7) must equal the map recomputed from
-    CORRECTNESS_r*.json: one entry per registered query, value = round
-    of its latest driver verdict (0 = never checked).  Regenerate with
-    `PYTHONPATH=. python tools/emit_freshness.py` after each round's
-    CORRECTNESS file lands — stale-lineage age is a pinned artifact,
-    not something re-derived by hand-diffing the round files."""
-    import json
-
-    ledger_path = SURVEY.parent / "FRESHNESS.json"
-    assert ledger_path.exists(), (
-        "FRESHNESS.json missing — run tools/emit_freshness.py"
-    )
-    committed = json.loads(ledger_path.read_text())
-
-    latest: dict[str, int] = {}
-    for p in sorted(SURVEY.parent.glob("CORRECTNESS_r*.json")):
-        rnd = int(re.search(r"r(\d+)", p.stem).group(1))
-        for name, row in json.loads(p.read_text()).items():
-            ok = row.get("err") is None or (
-                row.get("err") == "no_oracle"
-                and row.get("spark_rows") is not None
-            )
-            if ok:
-                latest[name] = max(latest.get(name, 0), rnd)
-    want = {name: latest.get(name, 0) for name in load_all()}
-    assert committed == want, (
-        "FRESHNESS.json drifted from CORRECTNESS_r*.json lineage — "
-        "regenerate with tools/emit_freshness.py; diff: "
-        f"{ {k: (committed.get(k), want[k]) for k in want if committed.get(k) != want[k]} }"
-    )
-
-
-def test_driver_window_priority_head_fits_in_window():
-    """The driver checks only the first 50 queries. Never-verified rows
-    rank ahead of the priority list, so every op added in a round
-    displaces one queued re-check from the window. This guard fails
-    loudly when the head of DRIVER_WINDOW_PRIORITY (the rows the last
-    verdict ORDERED re-checked: stale lineage + changed oracles) no
-    longer fits — rebalance before registering another query."""
-    from weather_etl_spark.registry import (
-        DRIVER_VERIFIED,
-        DRIVER_WINDOW_PRIORITY,
-        load_all,
-    )
-
-    assert len(set(DRIVER_WINDOW_PRIORITY)) == len(DRIVER_WINDOW_PRIORITY), (
-        "duplicate name in DRIVER_WINDOW_PRIORITY — the LAST index wins "
-        "in the rotation, silently demoting the head entry"
-    )
-    reg = list(load_all())
-    window = set(reg[:50])
-    n_new = sum(1 for n in reg if n not in DRIVER_VERIFIED)
-    # round 7: the ENTIRE 50-slot window is verdict-ordered (46
-    # never-checked in registration order + 4 forced includes), so the
-    # whole priority list must land in the window — any new
-    # registration would evict the tail and break the freeze.
-    head = DRIVER_WINDOW_PRIORITY[:50]
-    missing = [n for n in head if n not in window]
-    assert not missing, (
-        f"{n_new} unverified rows push these ordered re-checks out of "
-        f"the 50-slot driver window: {missing}"
-    )
-
-
 def test_bench_sections_name_registered_queries():
     """bench.py filters each section with `n in specs`, so a renamed or
     deleted query would silently VANISH from the bench record (and its
@@ -131,90 +65,4 @@ def test_bench_sections_name_registered_queries():
     assert not stale_baselines, (
         f"bench.BASELINE_SF01 has baselines for unregistered queries: "
         f"{stale_baselines}"
-    )
-
-
-def test_rewritten_implementations_are_queued_for_driver_recheck():
-    """The "implementation changed => driver lineage stale" rule, made
-    mechanical (r9 verdict order #3: q_agg_mannwhitney's rank-ledger
-    rewrite and q_win_rolling_corr's guard shipped in r9 while their
-    driver verdicts stayed at r7, and only the builder's memory queued
-    them).  IMPL_FINGERPRINTS.json pins, per query, the AST hash of the
-    registered callable at its last driver verdict; any query whose
-    current hash differs MUST sit in DRIVER_WINDOW_PRIORITY (queued for
-    a fresh verdict).  Refresh the ledger per round with
-    `tools/emit_impl_fingerprints.py --round N` after CORRECTNESS_r{N}
-    lands.  Helper-level rewrites don't move the hash — those still
-    need manual queueing (documented in the tool)."""
-    import json
-
-    from weather_etl_spark.registry import DRIVER_WINDOW_PRIORITY
-
-    sys_path_root = str(SURVEY.parent)
-    import sys as _sys
-    if sys_path_root not in _sys.path:
-        _sys.path.insert(0, sys_path_root)
-    from tools.emit_impl_fingerprints import current_hashes
-
-    ledger_path = SURVEY.parent / "IMPL_FINGERPRINTS.json"
-    assert ledger_path.exists(), (
-        "IMPL_FINGERPRINTS.json missing — run "
-        "tools/emit_impl_fingerprints.py --all"
-    )
-    committed = json.loads(ledger_path.read_text())
-    now = current_hashes()
-    assert set(committed) == set(now), (
-        "fingerprint ledger rows drifted from the registry — "
-        f"only-in-ledger={sorted(set(committed) - set(now))} "
-        f"only-in-registry={sorted(set(now) - set(committed))}"
-    )
-    window = set(DRIVER_WINDOW_PRIORITY)
-    unqueued = sorted(
-        n for n in now if committed[n] != now[n] and n not in window
-    )
-    assert not unqueued, (
-        "these queries' implementations changed since their recorded "
-        "driver verdict but are NOT queued in DRIVER_WINDOW_PRIORITY "
-        f"for a re-check: {unqueued} — add them to the window (or, if "
-        "a verdict already covers the new code, refresh the ledger "
-        "with tools/emit_impl_fingerprints.py --round N)"
-    )
-
-
-def test_impl_fingerprint_hash_tracks_semantics_not_formatting(tmp_path):
-    """Self-test for the fingerprint primitive (the auditors-get-
-    audited rule from r9): the AST hash must move when the body
-    changes and must NOT move for comment/whitespace-only edits —
-    otherwise the rewritten-implementation tripwire above is hollow.
-    Exercises the PRODUCTION impl_hash on real imported functions
-    (a local re-implementation of the hash would keep this test green
-    while the real primitive regressed)."""
-    import importlib.util
-    import sys as _sys
-
-    root = str(SURVEY.parent)
-    if root not in _sys.path:
-        _sys.path.insert(0, root)
-    from tools.emit_impl_fingerprints import impl_hash
-
-    def load(src: str):
-        mod_path = tmp_path / "fp_probe.py"
-        mod_path.write_text(src)
-        spec = importlib.util.spec_from_file_location("fp_probe", mod_path)
-        mod = importlib.util.module_from_spec(spec)
-        spec.loader.exec_module(mod)
-        import linecache
-        linecache.clearcache()  # same path, new contents
-        return mod.f
-
-    base = impl_hash(load("def f(x):\n    return x + 1\n"))
-    reformatted = impl_hash(load(
-        "def f(x):\n    # a comment\n    return (x + 1)\n"
-    ))
-    changed = impl_hash(load("def f(x):\n    return x + 2\n"))
-    assert base == reformatted, (
-        "comment/formatting edits must not move the fingerprint"
-    )
-    assert base != changed, (
-        "a body change must move the fingerprint"
     )

@@ -489,7 +489,7 @@ def q_llm_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fingerprint table feeds the df aggregate AND both sides of the
     # pair self-join, and Catalyst re-plans the whole
     # scan+md5-transform+explode subtree under each consumer — the
-    # before-plan shows EIGHT documents.parquet scans, each re-hashing
+    # before-plan shows FOUR documents.parquet scans, each re-hashing
     # every character position of the corpus.  Checkpoint the
     # (doc_id, fp) table once: the per-position md5 work runs exactly
     # once per query and every downstream pass reads 16-byte rows.  At

@@ -7,6 +7,13 @@ driver contract (``__spark_entry__.py``) simply re-exports this
 registry; the engine's own pytest suite differentially verifies every
 entry against DuckDB before it is ever declared.
 
+Driver order: the external driver checks only the first 50 entries of
+``queries()`` per round and records each round in the repo root's
+``CORRECTNESS_r{N}.json``.  :func:`load_all` derives the order from
+those files on every load (never-checked rows first, then the stalest
+green round, oracled before rows-only, then registration order), so a
+new verdict file re-orders the registry with no ledger to edit.
+
 Oracle-hardening rules (SURVEY.md §7.4) every registered query follows:
   1. money sums via DECIMAL(18,2) casts, emitted as DOUBLE;
   2. other float outputs ROUND(x, 4) in both engines;
@@ -19,8 +26,10 @@ Oracle-hardening rules (SURVEY.md §7.4) every registered query follows:
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable
 from dataclasses import dataclass, field
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -148,444 +157,42 @@ def register(
     return deco
 
 
-#: Queries with a green (or rows-only-accounted) row in a prior driver
-#: CORRECTNESS round.  The external driver evaluates only the FIRST 50
-#: entries of ``queries()`` per round, so ordering is a rotation: rows
-#: that still need a driver verdict come first, already-verified rows
-#: last (they stay regression-guarded by tests/test_oracle_parity.py).
-#: Update after each round from CORRECTNESS_r{N}.json.
-DRIVER_VERIFIED: frozenset[str] = frozenset({
-    # round 12 first verdict (1): registered mid-r11, hash-green in
-    # CORRECTNESS_r12.json (the other 49 r12 window rows were already
-    # verified in earlier rounds)
-    "src_fetch_values",
-    # round 1 green (42) + rows-only-by-design rows that got a row (2)
-    "q_fn_string", "q_fn_regexp", "q_fn_split", "q_fn_date", "q_fn_ts",
-    "q_fn_math", "q_fn_cond",
-    "q_agg_q1", "q_agg_global_max", "q_agg_count_distinct",
-    "q_agg_approx_cd", "q_agg_rollup", "q_agg_cube", "q_agg_gsets",
-    "q_agg_having", "q_agg_percentile", "q_agg_skew_salted",
-    "q_agg_pivot", "q_agg_unpivot", "q_agg_stats",
-    "q_join_bcast", "q_join_smj", "q_join_left", "q_join_full",
-    "q_join_semi", "q_join_anti", "q_join_cross", "q_join_range",
-    "q_join_asof", "q_join_star", "q_join_bucketed", "q_join_dpp",
-    "q_llm_exact_dedup", "q_llm_fingerprint", "q_llm_ngram_jaccard",
-    "llm_near_dedup", "q_llm_embed_dedup", "q_llm_tokenstats",
-    "q_llm_tfidf", "q_llm_docprofile", "q_llm_langid", "q_llm_quality",
-    "q_llm_cosine_pairs", "q_llm_knn",
-    # round 2 green (49 hash-verified + llm_ann_lsh rows-only-accounted),
-    # per CORRECTNESS_r02.json
-    "q_filter_ts_cursor", "q_scan_project", "q_scan_count",
-    "q_filter_cmp", "q_filter_in_between", "q_null_norm",
-    "q_seq_timeaxis",
-    "q_fn_array", "q_fn_json", "q_fn_cast_decimal", "q_agg_collect",
-    "q_llm_simhash", "q_llm_tokencount",
-    "q_win_rownum", "q_win_rank", "q_win_lag", "q_win_runsum",
-    "q_win_moving", "q_win_rangeframe", "q_win_ntile",
-    "q_win_firstlast", "q_topk_group",
-    "q_sort_multikey", "q_topk_global", "q_set_union_all",
-    "q_set_union", "q_set_intersect", "q_set_except",
-    "q_udf_py", "q_udf_pandas", "q_udaf_pandas", "udtf_mapinpandas",
-    "q_udtf_py",
-    "snk_append_idem", "snk_partitioned", "snk_csv_roundtrip",
-    "snk_json_roundtrip",
-    "q_stream_tumbling", "q_stream_sliding", "q_stream_session",
-    "q_stream_static_join",
-    "q_llm_centroid", "llm_knn_blocked", "llm_multimodal",
-    "llm_mm_framesample", "llm_embed_dedup_blocked", "llm_mm_decode",
-    "llm_ann_lsh", "src_fetch_profile", "pipe_reference_e2e",
-    # round 3 green (40 hash-verified + 10 rows-only-accounted), per
-    # CORRECTNESS_r03.json
-    "q_tpch_q3", "q_tpch_q5", "q_join_lateral", "q_join_cbo",
-    "q_win_percent", "q_udf_arrow", "q_udf_grouped_map",
-    "q_fn_variant", "q_fn_try", "q_scan_filemeta", "q_set_union_byname",
-    "snk_schema_evolution", "q_time_rollup", "q_llm_editdist",
-    "q_llm_dedup_components", "q_llm_split", "q_llm_winnow",
-    "q_llm_winnow_pairs", "q_llm_repetition", "llm_cosine_pairs_blocked",
-    "st_watermark", "st_dedup_wm", "st_foreachbatch",
-    "st_trigger_availnow", "st_stateful_sessionizer",
-    "st_stream_stream_join", "st_transform_with_state",
-    "src_fetch", "src_pyds", "llm_ann_ivf",
-    "q_fn_bitwise", "q_fn_string2", "q_fn_hash_encode",
-    "q_agg_minmax_by", "q_time_gapfill", "q_agg_boolean", "q_agg_median",
-    "q_join_null_safe", "llm_jaccard_prefix", "llm_editdist_banded",
-    "llm_minhash_banded", "llm_components_starcontract",
-    "llm_doc_embed_cohesion", "llm_mm_pixel_dedup", "q_set_except_all",
-    "q_set_intersect_all", "q_sql_cte_window", "q_win_cume_nth",
-    # round 5 green (50/50, zero err) per CORRECTNESS_r05.json — the 22
-    # queries added in r5 plus the NTZ re-greens / r2-stale rotations
-    "q_fn_sql_udf", "q_fn_map", "q_agg_mode", "q_time_interp",
-    "q_agg_regr", "q_agg_hll_portable", "q_agg_kmv_portable",
-    "q_join_asof_fwd", "q_llm_c4_filter", "q_llm_corpus_stats",
-    "q_llm_length_hist", "q_llm_pack", "q_llm_perplexity",
-    "llm_mm_audio_window", "q_sample_hash", "q_sample_stratified",
-    "snk_orc_roundtrip", "snk_xml_roundtrip", "q_sql_pipe",
-    "q_sql_recursive_cte", "q_win_sessionize", "q_win_islands",
-    # round 6 green (49 hash-verified + llm_ann_lsh rows-only), per
-    # CORRECTNESS_r06.json — the r2/r3-stale rotations + r6-changed
-    # oracles already appear in earlier blocks; these 22 are the rows
-    # whose FIRST driver verdict was round 6
-    "q_fn_url", "q_fn_format",
-    "q_agg_listagg", "q_agg_filter_clause", "q_agg_grouping_id",
-    "q_graph_degree", "q_graph_pagerank",
-    "q_join_interval_overlap", "q_join_salted",
-    "q_llm_decontaminate", "q_llm_pii_scrub", "q_llm_zipf", "q_llm_ttr",
-    "q_llm_gopher_filter", "q_llm_chunk", "q_llm_domain_mix",
-    "q_llm_lang_entropy", "llm_embed_quantize", "llm_mm_resize",
-    "q_sql_groupby_all", "q_win_ignore_nulls", "q_win_range_interval",
-    # round 7 green (50/50 hash-pass, zero err) per CORRECTNESS_r07.json
-    # — the whole window drawn from the never-checked backlog
-    "q_fn_math2", "q_fn_array_lambda", "q_fn_regexp2", "q_fn_date_iso",
-    "q_fn_collate", "q_fn_geo",
-    "q_agg_cms_portable", "q_agg_bitmap_portable", "q_agg_hist_quantile",
-    "q_agg_kmv_intersect", "q_agg_hll_rollup", "q_agg_quantile_eval",
-    "q_funnel", "q_cohort_retention", "q_sample_weighted",
-    "q_scd2_intervals", "q_cdc_upsert", "q_dq_audit", "q_skew_profile",
-    "q_kanonymity", "q_ab_metrics", "q_time_downsample",
-    "q_join_scd2_lookup", "q_agg_ab_srm", "q_dq_checksum",
-    "q_ab_cuped", "q_ab_power", "q_cohort_ltv", "q_ldiversity",
-    "q_event_pvm_decomp", "q_join_bitemporal",
-    "q_agg_gini", "q_agg_ks_test", "q_time_resample_ohlc",
-    "q_event_cooccurrence", "q_agg_autocorr", "q_agg_pareto",
-    "q_event_bursts", "q_agg_benford", "q_time_seasonal",
-    "q_agg_ttest", "q_agg_mannwhitney", "q_agg_hhi",
-    "q_agg_mutual_info", "q_agg_kl_divergence", "q_agg_js_divergence",
-    "llm_mm_phash_dedup", "llm_mm_scenechange",
-    "snk_manifest", "q_win_rolling_corr",
-    # round 8 green (50/50 hash-pass, zero err) per CORRECTNESS_r08.json
-    # — the whole window drawn from the never-checked backlog: all of
-    # eventseq.py (21) + stats_ext.py (8) + layout.py (3) + 18 TPC-H rows
-    "q_time_ewma", "q_time_anomaly", "q_event_transitions",
-    "q_snapshot_diff", "q_rank_fusion", "q_event_attribution",
-    "q_event_trigrams", "q_time_holt", "q_time_cusum",
-    "q_event_interarrival", "q_event_dau_wau", "q_event_lifecycle",
-    "q_event_survival", "q_time_backtest", "q_event_markov2",
-    "q_event_decay_score", "q_time_mad", "q_event_pattern",
-    "q_event_time_to_convert", "q_event_next_pred", "q_time_changepoint",
-    "q_llm_domain_cap", "q_agg_corr_matrix", "q_agg_weighted_median",
-    "q_agg_entropy", "q_event_rfm", "q_agg_winsorize",
-    "q_llm_feature_hash", "q_agg_anova",
-    "q_layout_zorder", "q_layout_compaction", "q_join_spatial_grid",
-    "q_tpch_q10", "q_sql_subqueries", "q_tpch_q18", "q_tpch_q14",
-    "q_tpch_q21", "q_tpch_q17", "q_tpch_q22", "q_tpch_q19",
-    "q_tpch_q4", "q_tpch_q6", "q_tpch_q13", "q_tpch_q16",
-    "q_tpch_q7", "q_tpch_q8", "q_tpch_q15", "q_tpch_q2",
-    "q_tpch_q9", "q_tpch_q12",
-    # round 9 green (50/50 hash-pass, zero err) per CORRECTNESS_r09.json
-    # — the whole window drawn from the never-checked backlog: all 22
-    # llm_prep.py + all 11 llm_vector.py + all 9 llm_text.py + all 5
-    # graph.py + 3 llm_dedup.py rows
-    "q_llm_bpe_pairs", "q_llm_keywords", "q_llm_dsir",
-    "q_llm_dedup_weights", "q_llm_strip_markup", "q_llm_encoding_check",
-    "q_llm_sentences", "q_llm_token_budget", "q_llm_gram_novelty",
-    "q_llm_readability", "q_llm_prefix_dup", "q_llm_bpe_train",
-    "q_llm_apply_bpe", "q_llm_vocab_coverage", "q_llm_span_corruption",
-    "q_llm_preference_pairs", "q_llm_boilerplate", "q_llm_distinct_n",
-    "q_llm_blocklist_filter", "q_llm_heaps_law", "q_llm_collocations",
-    "q_llm_cooccur_window",
-    "q_llm_semdedup", "q_llm_embed_truncate", "q_llm_embed_pq",
-    "q_llm_hard_negatives", "q_dq_embeddings", "q_llm_retrieval_eval",
-    "q_llm_mmr_select", "q_llm_ood_score", "q_llm_prf_expand",
-    "q_llm_align_uniform", "q_llm_hubness",
-    "q_llm_ppl_bucket", "q_llm_entropy_rate", "q_llm_bm25",
-    "q_llm_filter_funnel", "q_llm_rouge", "q_llm_bleu",
-    "q_llm_kneser_ney", "q_llm_ppl_holdout", "q_llm_log_odds",
-    "q_graph_triangles", "q_graph_adamic_adar", "q_graph_lpa_communities",
-    "q_graph_kcore", "q_graph_assortativity",
-    "q_llm_dup_size_hist", "q_llm_dedup_incremental", "q_llm_minhash_eval",
-    # round 10 green (49/50 hash-pass + src_binaryfile rows-only by
-    # declaration) per CORRECTNESS_r10.json — the 43 never-checked
-    # backlog rows drained to zero (the 7 slack re-checks were already
-    # listed above from their first verdict)
-    "q_agg_runs_test", "q_agg_chisq", "q_agg_spearman", "q_agg_theilsen",
-    "q_agg_bootstrap_ci", "q_agg_ols2", "q_agg_kruskal", "q_agg_levene",
-    "q_agg_cohens_kappa", "q_event_calibration", "q_agg_cohens_d",
-    "q_agg_dispersion", "q_agg_quantile_norm", "q_time_stl_strength",
-    "q_join_bloom", "q_join_asof_tol", "q_join_time_window_semi",
-    "q_join_time_window_anti", "q_join_mark", "q_join_asof_nearest",
-    "q_win_distinct_running", "q_win_peaks", "q_win_slope",
-    "q_win_rolling_median", "q_win_drawdown",
-    "src_binaryfile", "src_csv_malformed", "src_json_malformed",
-    "q_scan_column_stats", "q_scan_partition_prune", "q_sample_split3",
-    "snk_text_roundtrip", "snk_csv_quoted", "src_parquet_merge",
-    "q_udf_pandas_iter", "udtf_mapinarrow", "q_sql_params",
-    "pipe_events_e2e", "pipe_llm_corpus_e2e",
-    "q_tpch_q11", "q_tpch_q20",
-    "q_llm_dedup_curve", "q_llm_minhash_mae",
-})
-
-#: Explicit order for the round-13 driver window (50 slots).
-#: Composition: snk_jdbc_idem first (the only registry row with no
-#: driver verdict — registered mid-r12, deferred to r13), then every
-#: rewritten-since-verdict row (the IMPL_FINGERPRINTS tripwire plus
-#: the hand-maintained shared-helper queue from r12), then the r12
-#: DuckDB-side oracle rewrites, then the stalest lineage rows (all 23
-#: remaining r4 rows + the first 8 r5 rows) in the rotation order
-#: computed by tools/plan_driver_window.py from CORRECTNESS_r01..r12.
-#: Done = CORRECTNESS_r13 50/50 green and zero rows-with-no-verdict.
-#: Beyond slot 50: the remaining r5 rows, queued stalest-first so the
-#: next rotation just promotes them.
-DRIVER_WINDOW_PRIORITY: tuple[str, ...] = (
-    # ===== round-13 window (50 slots) =====
-    # -- first driver verdict (1): embedded-Derby JDBC MERGE sink --
-    "snk_jdbc_idem",
-    # -- rewritten-since-verdict rows (6): the r12/r13 optimization
-    # rewrites (jaccard key compression, minhash signature leg +
-    # verify keys, winnow fingerprint checkpoint, bpe output job,
-    # perplexity c1-from-c2) and q_tpch_q21, whose r12 decorrelation
-    # was REVERTED in r13 (A/B below the revert gate) — re-checked so
-    # the reverted shape carries a fresh verdict --
-    "q_llm_winnow_pairs", "llm_minhash_banded", "q_llm_bpe_train",
-    "q_llm_perplexity", "llm_jaccard_prefix", "q_tpch_q21",
-    # -- r12 oracle rewrites (3): float ROUND -> portable_round4_sql
-    # after the r12 seed campaign (Spark sides unchanged) --
-    "q_time_cusum", "q_time_ewma", "q_time_anomaly",
-    # -- r12 shared-helper rewrite rows (9): ratio_round_sql gained a
-    # negative-numerator NULL guard; every changed call site re-checks
-    # (the fingerprint tripwire can't see shared-helper rewrites) --
-    "q_llm_repetition", "q_agg_cohens_kappa", "q_event_next_pred",
-    "q_llm_ngram_jaccard", "q_llm_minhash_eval", "q_llm_gram_novelty",
-    "q_llm_boilerplate", "q_llm_embed_pq", "q_llm_retrieval_eval",
-    # -- r4 lineage drain (23; 2 rows-only at the tail) --
-    "q_join_smj", "q_join_left", "q_join_full", "q_join_semi",
-    "q_join_anti", "q_join_cross", "q_join_range", "q_join_bucketed",
-    "q_join_dpp", "q_llm_exact_dedup", "q_llm_fingerprint",
-    "q_llm_embed_dedup", "q_llm_tokenstats", "q_llm_langid",
-    "q_llm_cosine_pairs", "q_llm_knn", "src_fetch_profile",
-    "pipe_reference_e2e", "q_scan_project", "snk_append_idem",
-    "q_udf_py", "q_agg_approx_cd", "llm_near_dedup",
-    # -- r5 lineage drain (8): fills the window to 50 --
-    "q_fn_ts", "q_fn_array", "q_fn_json", "q_fn_cast_decimal",
-    "q_fn_sql_udf", "q_agg_global_max", "q_agg_collect",
-    "q_agg_minmax_by",
-    # ===== beyond slot 50: the next-rotation drain queue (remaining
-    # r5 rows, stalest first) =====
-    "q_agg_mode", "q_time_interp", "q_agg_regr",
-    "q_agg_hll_portable", "q_agg_kmv_portable", "q_join_asof",
-    "q_join_asof_fwd", "q_llm_simhash", "q_llm_tokencount",
-    "q_llm_c4_filter", "q_llm_pack", "q_scan_count", "q_filter_cmp",
-    "q_filter_in_between", "q_filter_ts_cursor", "q_null_norm",
-    "q_seq_timeaxis", "q_sample_hash", "q_sample_stratified",
-    "snk_orc_roundtrip", "snk_xml_roundtrip", "q_sql_pipe",
-    "q_sql_recursive_cte", "q_win_rownum", "q_win_rank", "q_win_lag",
-    "q_win_runsum", "q_win_moving", "q_win_rangeframe", "q_win_ntile",
-    "q_win_firstlast", "q_topk_group", "q_win_sessionize",
-    "q_win_islands", "q_stream_tumbling", "q_stream_sliding",
-    "q_stream_session",
-)
+#: Repo root: where the external driver's CORRECTNESS_r{N}.json land.
+ROOT = Path(__file__).resolve().parent.parent
 
 
-#: The never-driver-checked backlog queue (193 rows entering round 7).
-#: These queue BEHIND the planned window — still locally
-#: oracle-verified by tests/test_oracle_parity.py — and rotate into
-#: the driver window 50 at a time (DRIVER_WINDOW_PRIORITY overrides
-#: membership here: _rotation_order checks the priority list first, so
-#: the 50 rows promoted into the r7 window stay listed below without
-#: effect).  Without this queue, every late-round registration would
-#: silently evict one verdict-ordered re-check from the 50-slot window
-#: (guarded by
-#: tests/test_survey_sync.py::test_driver_window_priority_head_fits...).
-DRIVER_DEFERRED: frozenset[str] = frozenset({
-    "q_funnel", "q_cohort_retention", "q_sample_weighted",
-    "q_agg_cms_portable", "q_join_bloom", "q_graph_triangles",
-    "q_llm_bpe_pairs", "q_llm_keywords", "q_llm_dsir",
-    "snk_text_roundtrip",
-    "q_agg_bitmap_portable", "q_agg_hist_quantile",
-    "q_scd2_intervals", "q_cdc_upsert", "q_dq_audit",
-    "q_llm_dedup_weights", "q_agg_kmv_intersect", "q_skew_profile",
-    "q_win_distinct_running", "q_kanonymity", "q_ab_metrics",
-    "src_binaryfile", "q_time_downsample",
-    # second late batch (event-sequence / curation / layout ops)
-    "q_time_ewma", "q_time_anomaly", "q_event_transitions",
-    "q_snapshot_diff", "q_rank_fusion",
-    "q_llm_strip_markup", "q_llm_encoding_check", "q_llm_sentences",
-    "q_llm_token_budget", "q_layout_zorder", "q_layout_compaction",
-    "q_event_attribution", "q_llm_domain_cap", "q_agg_corr_matrix",
-    "q_agg_weighted_median", "q_agg_entropy", "q_event_rfm",
-    "q_llm_gram_novelty", "q_llm_readability", "q_join_spatial_grid",
-    "q_agg_winsorize", "q_llm_feature_hash",
-    "q_agg_gini", "q_agg_ks_test", "q_time_resample_ohlc",
-    "q_event_cooccurrence", "q_agg_autocorr",
-    "q_agg_pareto", "q_event_bursts", "q_agg_benford",
-    "q_llm_prefix_dup",
-    # third late batch (sequence mining / composite SQL / tolerance
-    # as-of / CCNet bucketing)
-    "q_join_asof_tol", "q_event_trigrams", "q_win_peaks",
-    "q_tpch_q10", "q_sql_subqueries", "q_llm_ppl_bucket",
-    "q_time_holt", "q_join_scd2_lookup", "q_agg_ab_srm",
-    "q_graph_adamic_adar", "q_scan_column_stats",
-    "llm_mm_phash_dedup", "q_time_seasonal", "src_csv_malformed",
-    "q_join_time_window_semi", "q_win_slope",
-    "q_join_time_window_anti", "q_llm_bpe_train",
-    "q_tpch_q18", "q_win_rolling_median",
-    "q_llm_semdedup",
-    "q_llm_apply_bpe", "q_graph_lpa_communities", "snk_csv_quoted",
-    "q_join_mark", "src_json_malformed",
-    "q_agg_ttest", "q_time_cusum",
-    "q_agg_mannwhitney", "pipe_llm_corpus_e2e",
-    "q_agg_hll_rollup", "q_join_asof_nearest", "q_fn_math2",
-    "q_fn_array_lambda", "q_agg_hhi", "q_fn_regexp2",
-    "q_agg_mutual_info", "q_event_interarrival", "q_agg_kl_divergence",
-    "q_agg_js_divergence", "q_win_drawdown", "q_llm_entropy_rate",
-    "q_agg_runs_test", "q_scan_partition_prune", "q_udf_pandas_iter",
-    "q_llm_dup_size_hist", "q_sample_split3", "q_event_dau_wau",
-    # twenty-fifth late batch (stats tests / growth accounting /
-    # reconciliation checksums / TPC-H Q14)
-    "q_tpch_q14", "q_agg_chisq", "q_agg_spearman",
-    "q_event_lifecycle", "q_dq_checksum",
-    # twenty-sixth late batch (survival analysis / vocab sizing /
-    # MRL truncation / rolling co-movement / robust trend)
-    "q_event_survival", "q_llm_vocab_coverage", "q_llm_embed_truncate",
-    "q_win_rolling_corr", "q_agg_theilsen",
-    # twenty-seventh late batch (lake manifests / resampling CI /
-    # product quantization / k-core)
-    "snk_manifest", "q_graph_kcore", "q_agg_bootstrap_ci",
-    "q_llm_embed_pq",
-    # twenty-eighth late batch (lexical retrieval / closed-form ML /
-    # forecast backtesting / ISO calendar)
-    "q_llm_bm25", "q_agg_ols2", "q_time_backtest", "q_fn_date_iso",
-    # twenty-ninth late batch (experimentation platform / lake schema
-    # evolution read-side / sequence modeling)
-    "q_ab_cuped", "q_ab_power", "src_parquet_merge", "q_event_markov2",
-    # thirtieth late batch (curation funnel accounting / incremental
-    # ingest dedup / the analytics end-to-end composite)
-    "q_llm_filter_funnel", "q_llm_dedup_incremental", "pipe_events_e2e",
-    # thirty-first late batch (generation-eval metrics / decayed
-    # engagement features / robust outlier screens)
-    "q_llm_rouge", "q_llm_bleu", "q_event_decay_score", "q_time_mad",
-    # thirty-second late batch (the hard TPC-H correlated-subquery
-    # trio / k-sample ANOVA)
-    "q_tpch_q21", "q_tpch_q17", "q_tpch_q22", "q_agg_anova",
-    # thirty-third late batch (contrastive mining / sequence pattern
-    # matching / rank-based k-sample test / disjunctive pushdown)
-    "q_llm_hard_negatives", "q_event_pattern", "q_agg_kruskal",
-    "q_tpch_q19",
-    # thirty-fourth late batch (smoothed LM / conversion latency /
-    # variance homogeneity / LTV curves)
-    "q_llm_kneser_ney", "q_event_time_to_convert", "q_agg_levene",
-    "q_cohort_ltv",
-    # thirty-fifth late batch (denoising-pretraining accounting /
-    # preference mining / graph mixing structure)
-    "q_llm_span_corruption", "q_llm_preference_pairs",
-    "q_graph_assortativity",
-    # thirty-sixth late batch (approximate-index eval / collation
-    # surface / sequence-model backtest)
-    "q_llm_minhash_eval", "q_fn_collate", "q_event_next_pred",
-    # thirty-seventh late batch (TPC-H scan/EXISTS classics /
-    # sketch-accuracy eval / vector data quality)
-    "q_tpch_q4", "q_tpch_q6", "q_agg_quantile_eval", "q_dq_embeddings",
-    # thirty-eighth late batch (outer-join custdist / derived-partsupp
-    # distinct counts / per-pair estimator accuracy)
-    "q_tpch_q13", "q_tpch_q16", "q_llm_minhash_mae",
-    # thirty-ninth late batch (bilateral trade / market share / top
-    # supplier — the multi-dim TPC-H joins)
-    "q_tpch_q7", "q_tpch_q8", "q_tpch_q15",
-    # fortieth late batch (the derived-partsupp and lateness-class
-    # adaptations completing all 22 TPC-H shapes)
-    "q_tpch_q2", "q_tpch_q9", "q_tpch_q12", "q_tpch_q11", "q_tpch_q20",
-    # forty-first late batch (retrieval-quality eval / diversified
-    # MMR selection / inter-rater label QA)
-    "q_llm_retrieval_eval", "q_llm_mmr_select", "q_agg_cohens_kappa",
-    # forty-second late batch (scene-boundary frame sampling /
-    # boilerplate-lexicon mining / changepoint localization)
-    "llm_mm_scenechange", "q_llm_boilerplate", "q_time_changepoint",
-    # forty-third late batch (embedding OOD screen / PRF query
-    # expansion / l-diversity + t-closeness privacy audit)
-    "q_llm_ood_score", "q_llm_prf_expand", "q_ldiversity",
-    # forty-fourth late batch (calibration backtest / revenue bridge /
-    # geodesic function surface)
-    "q_event_calibration", "q_event_pvm_decomp", "q_fn_geo",
-    # forty-fifth late batch (corpus distinct-n diversity / category
-    # blocklist gate / bitemporal restatement audit)
-    "q_llm_distinct_n", "q_llm_blocklist_filter", "q_join_bitemporal",
-    # forty-sixth late batch (alignment/uniformity representation
-    # health / hubness diagnostic / standardized effect size)
-    "q_llm_align_uniform", "q_llm_hubness", "q_agg_cohens_d",
-    # forty-seventh late batch (mapInArrow surface / parameterized
-    # SQL surface / Poisson overdispersion screen)
-    "udtf_mapinarrow", "q_sql_params", "q_agg_dispersion",
-    # forty-eighth late batch (leak-free held-out perplexity /
-    # Monroe log-odds distinguishing terms)
-    "q_llm_ppl_holdout", "q_llm_log_odds",
-    # forty-ninth late batch (Heaps'-law vocabulary-growth fit)
-    "q_llm_heaps_law",
-    # fiftieth late batch (PMI collocation mining / quantile
-    # normalization)
-    "q_llm_collocations", "q_agg_quantile_norm",
-    # fifty-first late batch (near-dedup threshold operating curve)
-    "q_llm_dedup_curve",
-    # fifty-second late batch (STL strength-of-components triage)
-    "q_time_stl_strength",
-    # fifty-third late batch (windowed co-occurrence matrix)
-    "q_llm_cooccur_window",
-    # round-11 late registration (freeze lifted at zero backlog): the
-    # full-payload fetch value twin — queues behind the r11 stale-
-    # drain window, first verdict in r12
-    "src_fetch_values",
-    # round-12 late registration: the embedded-Derby JDBC MERGE sink
-    # (the reference's ON CONFLICT semantics against a real database,
-    # r11 verdict order #8) — queues behind the frozen r12 window,
-    # first verdict in r13
-    "snk_jdbc_idem",
-})
+def driver_lineage(root: Path = ROOT) -> dict[str, int]:
+    """Latest round N whose CORRECTNESS_r{N}.json checked each query
+    green: a hash match, or a rows-only run (``err == "no_oracle"``)
+    that returned a row count.  Queries never checked green are absent."""
+    latest: dict[str, int] = {}
+    for p in root.glob("CORRECTNESS_r*.json"):
+        rnd = int(p.stem.rsplit("_r", 1)[1])
+        for name, row in json.loads(p.read_text()).items():
+            if row.get("hash_match") is True or (
+                row.get("err") == "no_oracle"
+                and row.get("spark_rows") is not None
+            ):
+                latest[name] = max(latest.get(name, 0), rnd)
+    return latest
 
 
-#: Rows whose LATEST driver verdict still dates to round 3 — before
-#: the r4 TIMESTAMP_NTZ runtime flip — per the recorded
-#: CORRECTNESS_r01..r07 lineage (tools/plan_driver_window.py).  All 45
-#: are locally re-validated on the current runtime (2-SF oracle
-#: parity); this constant is the r7 verdict's order #5 bookkeeping:
-#: they sort FIRST within the verified tail, so any window slack
-#: (rounds where fewer than 50 unverified rows remain — r10 on the
-#: current drain rate) rotates the stalest lineage automatically.
-DRIVER_STALE_R3: frozenset[str] = frozenset({
-    "llm_ann_ivf", "llm_components_starcontract",
-    "llm_cosine_pairs_blocked", "llm_doc_embed_cohesion",
-    "llm_editdist_banded", "llm_jaccard_prefix", "llm_minhash_banded",
-    "llm_mm_pixel_dedup", "q_agg_boolean", "q_agg_median",
-    "q_fn_bitwise", "q_fn_hash_encode", "q_fn_string2", "q_fn_try",
-    "q_fn_variant", "q_join_cbo", "q_join_lateral", "q_join_null_safe",
-    "q_llm_dedup_components", "q_llm_editdist", "q_llm_repetition",
-    "q_llm_split", "q_llm_winnow", "q_llm_winnow_pairs",
-    "q_scan_filemeta", "q_set_except_all", "q_set_intersect_all",
-    "q_set_union_byname", "q_sql_cte_window", "q_time_gapfill",
-    "q_time_rollup", "q_tpch_q5", "q_udf_arrow", "q_win_cume_nth",
-    "q_win_percent", "snk_schema_evolution", "src_fetch", "src_pyds",
-    "st_dedup_wm", "st_foreachbatch", "st_stateful_sessionizer",
-    "st_stream_stream_join", "st_transform_with_state",
-    "st_trigger_availnow", "st_watermark",
-})
-
-
-def _rotation_order(reg: dict[str, QuerySpec]) -> dict[str, QuerySpec]:
-    """Order the registry for the driver's 50-entry correctness window:
-    explicit priority list first, then other not-yet-verified rows in
-    registration order (deferred late-round rows behind the window),
-    then driver-verified rows last — stalest lineage first within the
-    verified tail, so window slack re-checks pre-NTZ verdicts."""
-    prio = {n: i for i, n in enumerate(DRIVER_WINDOW_PRIORITY)}
-
-    def key(item: tuple[int, str]) -> tuple[int, int, int]:
-        reg_pos, name = item
-        verified = name in DRIVER_VERIFIED
-        if name in prio and not verified:
-            return (0, prio[name], reg_pos)      # pending, explicit order
-        if not verified and name not in DRIVER_DEFERRED:
-            return (1, 0, reg_pos)               # new this round
-        if name in prio:
-            return (2, prio[name], reg_pos)      # regression re-checks
-        if not verified:
-            return (3, 0, reg_pos)               # deferred to next round
-        if name in DRIVER_STALE_R3:
-            return (4, 0, reg_pos)               # stalest verified lineage
-        return (5, 0, reg_pos)
-
-    ordered = sorted(enumerate(reg), key=key)
-    return {name: reg[name] for _, name in ordered}
+def driver_order(
+    reg: dict[str, QuerySpec], latest: dict[str, int]
+) -> dict[str, QuerySpec]:
+    """Order the registry for the driver, which checks only the first 50
+    entries of ``queries()`` per round: never-checked rows first, then
+    stalest green round, oracled before rows-only within a round; the
+    stable sort keeps registration order among ties."""
+    ordered = sorted(
+        reg, key=lambda n: (latest.get(n, 0), reg[n].oracle is None)
+    )
+    return {name: reg[name] for name in ordered}
 
 
 def load_all() -> dict[str, QuerySpec]:
-    """Import every operator module so registration side effects run."""
+    """Import every operator module so registration side effects run,
+    then return the registry in driver order."""
     # Imports are inside the function to avoid import cycles
     # (operator modules import `register` from here).
     import weather_etl_spark.operators  # noqa: F401
@@ -593,7 +200,7 @@ def load_all() -> dict[str, QuerySpec]:
     import weather_etl_spark.sources  # noqa: F401
     import weather_etl_spark.streaming  # noqa: F401
 
-    return _rotation_order(REGISTRY)
+    return driver_order(REGISTRY, driver_lineage())
 
 
 def queries() -> dict[str, QueryFn]:
