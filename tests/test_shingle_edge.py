@@ -20,6 +20,9 @@ SHINGLE_QUERIES = [
     "q_llm_ngram_jaccard",
     "llm_jaccard_prefix",
     "llm_minhash_banded",
+    "q_llm_minhash_eval",
+    "q_llm_minhash_mae",
+    "q_llm_dedup_curve",
     "q_llm_fingerprint",
 ]
 

@@ -3,28 +3,42 @@
 Usage:  PYTHONPATH=. python tools/capture_plans.py <tag> <suffix> [name ...]
 
 Writes ``plans/<tag>/<query>_<suffix>.txt`` for each named query (default:
-the bench.py headline + LLM + TPCH sections).  Plan-only — nothing is
-executed, so it is safe to run alongside other work.
+the bench.py headline + LLM + TPCH sections) and prints one line per
+query with its ``Scan parquet``, ``Exchange`` (shuffle) and
+``BroadcastNestedLoopJoin`` counts, parsed from the formatted plan's
+``(N) <Node>`` detail headers — plan evidence comes from this output,
+not from greps over the files.  Plan-only — nothing is executed, so it
+is safe to run alongside other work.
 """
 
 from __future__ import annotations
 
+import re
 import sys
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
-from bench import HEADLINE, LLM_SECTION, TPCH_SECTION
-from weather_etl_spark.registry import load_all
-from weather_etl_spark.session import get_spark
+from bench import HEADLINE, LLM_SECTION, TPCH_SECTION  # noqa: E402
+from weather_etl_spark.registry import load_all  # noqa: E402
+from weather_etl_spark.session import get_spark  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.1"
+COUNTED = ("Scan parquet", "Exchange", "BroadcastNestedLoopJoin")
+
+
+def node_counts(plan: str) -> dict[str, int]:
+    """Detail-header counts: ``(7) Exchange`` counts, ``(21)
+    BroadcastExchange`` and ``ReusedExchange`` do not."""
+    headers = re.findall(r"^\(\d+\) (.+?)\s*$", plan, re.MULTILINE)
+    return {node: headers.count(node) for node in COUNTED}
 
 
 def main() -> None:
     tag, suffix = sys.argv[1], sys.argv[2]
     names = sys.argv[3:] or (HEADLINE + LLM_SECTION + TPCH_SECTION)
-    out_dir = Path(__file__).resolve().parent.parent / "plans" / tag
+    out_dir = ROOT / "plans" / tag
     out_dir.mkdir(parents=True, exist_ok=True)
     spark = get_spark(app_name="capture-plans")
     specs = load_all()
@@ -39,7 +53,8 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001
             plan = f"ERROR building plan: {type(e).__name__}: {e}"
         (out_dir / f"{name}_{suffix}.txt").write_text(plan)
-        print(f"{name}: {len(plan)} chars", flush=True)
+        counts = ", ".join(f"{k}={v}" for k, v in node_counts(plan).items())
+        print(f"{name}: {counts}", flush=True)
     spark.stop()
 
 

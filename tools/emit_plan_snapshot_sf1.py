@@ -28,6 +28,10 @@ query:
 selection rule and the sf0.01 snapshot inlines; plan-shape deltas are
 explained in SCALE.md §Round-10.
 
+Rows are refreshed incrementally: a committed row whose inlined
+sf0.01 count still equals the snapshot is kept, every stale, errored
+or missing row is re-run.  Delete the ledger for a full re-measurement.
+
 Run:  PYTHONPATH=. python tools/emit_plan_snapshot_sf1.py [--rebuild] [N]
 """
 
@@ -81,7 +85,16 @@ def main() -> None:
     names = heaviest(int(n_arg[0]) if n_arg else TOP_N)
     sf001 = json.loads(SNAP.read_text())
     specs = load_all()
-    ledger: dict[str, dict] = {}
+    # Incremental: a committed row is current while its inlined sf0.01
+    # count matches the snapshot.  Only stale, errored or missing rows
+    # (the top-N selection plus every row already in the ledger) are
+    # re-run; delete the ledger file for a full re-measurement.
+    old = json.loads(OUT.read_text()) if OUT.exists() else {}
+    ledger = {n: r for n, r in old.items() if n in sf001}
+    names = [
+        n for n in dict.fromkeys(names + sorted(ledger))
+        if ledger.get(n, {}).get("sf001_exchanges") != sf001[n]
+    ]
     for name in names:
         # A failure on row 59/60 must not discard hours of completed
         # measurements: each row is guarded, and the ledger is

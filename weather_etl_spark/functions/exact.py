@@ -45,6 +45,16 @@ def exact_avg(c: Column, alias: str, scale: int = 4) -> Column:
     ).alias(alias)
 
 
+def md5_prefix_int(c: Column | str, digits: int) -> Column:
+    """The first ``digits`` hex digits of the md5 of ``c``'s string form,
+    as a BIGINT — the engine-portable hash (DuckDB: ``CAST('0x' ||
+    substr(md5(c), 1, k) AS BIGINT)``).  ``digits`` <= 15 keeps it
+    non-negative; a NULL input hashes to NULL."""
+    return F.conv(
+        F.substring(F.md5(_col(c).cast("string")), 1, digits), 16, 10
+    ).cast("bigint")
+
+
 def round4(c: Column, alias: str) -> Column:
     return F.round(c, 4).alias(alias)
 

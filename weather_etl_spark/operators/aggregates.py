@@ -18,7 +18,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from weather_etl_spark.functions.exact import dec2, dec6, exact_avg, money_sum
+from weather_etl_spark.functions.exact import (
+    dec2,
+    dec6,
+    exact_avg,
+    md5_prefix_int,
+    money_sum,
+)
 from weather_etl_spark.io import read_table
 from weather_etl_spark.registry import register
 
@@ -973,9 +979,7 @@ def q_agg_kmv_portable(spark, sf_dir):
     from pyspark.sql import Window
 
     ev = read_table(spark, sf_dir, "events")
-    hv = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 13), 16, 10
-    ).cast("bigint")
+    hv = md5_prefix_int("user_id", 13)
     h = ev.select("event_type", hv.alias("hv")).distinct()
     w = Window.partitionBy("event_type").orderBy("hv")
     return (
@@ -1167,24 +1171,10 @@ def q_agg_cms_portable(spark, sf_dir):
     depths = spark.range(4).select(F.col("id").cast("int").alias("d"))
 
     def cms_bucket(d_col, key_col):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            d_col.cast("string"),
-                            F.lit(":"),
-                            key_col.cast("string"),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % 32
+        seeded = F.concat(
+            d_col.cast("string"), F.lit(":"), key_col.cast("string")
         )
+        return md5_prefix_int(seeded, 8) % 32
 
     base = li.groupBy("l_partkey").agg(F.count(F.lit(1)).alias("true_cnt"))
     # Counters count ROWS, so aggregating per-key counts first and
@@ -1396,9 +1386,7 @@ def q_agg_kmv_intersect(spark, sf_dir):
     ev = read_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("view", "purchase")
     )
-    hv = F.conv(
-        F.substring(F.md5(F.col("user_id").cast("string")), 1, 13), 16, 10
-    ).cast("bigint")
+    hv = md5_prefix_int("user_id", 13)
     h = ev.select("event_type", hv.alias("hv")).distinct()
     w = Window.partitionBy("event_type").orderBy("hv")
     bk = (

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from weather_etl_spark.functions.exact import md5_prefix_int
 from weather_etl_spark.io import read_table
 from weather_etl_spark.registry import register
 
@@ -190,13 +191,7 @@ def q_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("o_totalprice") * 100)
         .cast("bigint")
         .alias("w_cents"),
-        F.conv(
-            F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8),
-            16,
-            10,
-        )
-        .cast("bigint")
-        .alias("u32"),
+        md5_prefix_int("o_orderkey", 8).alias("u32"),
     )
     mx = ords.agg(F.max("w_cents").alias("wmax"))
     return (
@@ -893,11 +888,7 @@ FROM counts
 def q_agg_ab_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table(spark, sf_dir, "events")
     arm = F.when(
-        F.conv(
-            F.substring(F.md5(F.col("user_id").cast("string")), 1, 4),
-            16,
-            10,
-        ).cast("int")
+        md5_prefix_int("user_id", 4).cast("int")
         % 2
         == 0,
         "A",
@@ -928,7 +919,7 @@ def _table_checksum(df: DataFrame, table: str, canon) -> DataFrame:
     md5-derived row hashes reduced by order-independent SUM-mod-2^62
     and XOR.  ``canon`` is the canonical-string Column (ints, strings
     and epoch/cents only — never raw float/timestamp rendering)."""
-    h = F.conv(F.substring(F.md5(canon), 1, 15), 16, 10).cast("bigint")
+    h = md5_prefix_int(canon, 15)
     return (
         df.select(h.alias("h"))
         .agg(

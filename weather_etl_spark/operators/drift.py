@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from weather_etl_spark.functions.exact import (
     decimal_mean_round4_sql,
+    md5_prefix_int,
     ratio_round4_sql,
     signed_ratio_round_sql,
 )
@@ -1654,17 +1655,9 @@ def q_agg_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE md5 per row; bit b of the 60-bit hash is resample b's
     # fair-coin membership draw (48 draws from one hash — measured
     # ~7x cheaper than hashing (row, b) pairs at sf0.1).
-    h = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws("_", F.col("l_orderkey"), F.col("l_linenumber"))
-            ),
-            1,
-            15,
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    h = md5_prefix_int(
+        F.concat_ws("_", F.col("l_orderkey"), F.col("l_linenumber")), 15
+    )
     hashed = li.select("l_returnflag", cents.alias("cents"), h.alias("h"))
     # No row fan-out at all: one aggregate with 2 x B conditional
     # accumulators per flag (sum + count per resample), then a stack

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from weather_etl_spark.functions.exact import dec2, dec6
+from weather_etl_spark.functions.exact import dec2, dec6, md5_prefix_int
 from weather_etl_spark.io import read_table, scratch_dir
 from weather_etl_spark.registry import register
 
@@ -856,24 +856,10 @@ def q_join_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     hs = spark.range(3).select(F.col("id").cast("int").alias("j"))
 
     def bloom_bit(j_col, key_col):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            j_col.cast("string"),
-                            F.lit(":"),
-                            key_col.cast("string"),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % 1024
+        seeded = F.concat(
+            j_col.cast("string"), F.lit(":"), key_col.cast("string")
         )
+        return md5_prefix_int(seeded, 8) % 1024
 
     bits = (
         dim.crossJoin(F.broadcast(hs))

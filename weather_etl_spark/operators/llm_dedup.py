@@ -21,7 +21,7 @@ web-scale near-dup pipeline shape.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from weather_etl_spark.checkpoints import (
@@ -29,6 +29,7 @@ from weather_etl_spark.checkpoints import (
     tracked_local_checkpoint,
 )
 from weather_etl_spark.functions.exact import (
+    md5_prefix_int,
     ratio_round4_sql,
     signed_ratio_round_sql,
 )
@@ -64,6 +65,129 @@ def shingles3(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("shingle"),
         )
+    )
+
+
+#: MinHash geometry shared by the banded family: 12 permutations,
+#: banded 4 x 3 (P[collide] = 1 - (1 - J^3)^4).
+N_PERM, BAND_ROWS = 12, 3
+
+
+def minhash_signature(shingles: DataFrame) -> DataFrame:
+    """(doc_id, m0..m11): permutation i's hash of shingle s is the
+    portable md5 prefix of ``i ':' s``; one ``groupBy(doc_id)`` takes
+    all 12 minima, so the shuffle carries 12 longs per doc."""
+    return shingles.groupBy("doc_id").agg(
+        *[
+            F.min(
+                md5_prefix_int(F.concat_ws(":", F.lit(i), "shingle"), 15)
+            ).alias(f"m{i}")
+            for i in range(N_PERM)
+        ]
+    )
+
+
+def band_candidates(sig: DataFrame) -> DataFrame:
+    """Distinct (id_a < id_b) pairs that agree on every row of at least
+    one band; a band key is its 3 minima joined by ','."""
+    m = [F.col(f"m{i}").cast("string") for i in range(N_PERM)]
+    keys = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.concat_ws(",", *m[b * BAND_ROWS : (b + 1) * BAND_ROWS]).alias(
+                "bkey"
+            ),
+        )
+        for b in range(N_PERM // BAND_ROWS)
+    ]
+    bands = sig.select("doc_id", F.inline(F.array(*keys)))
+    a, b = bands.alias("a"), bands.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band") == F.col("b.band"))
+            & (F.col("a.bkey") == F.col("b.bkey"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(
+            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
+        )
+        .distinct()
+    )
+
+
+def overlap_all_pairs(shingles: DataFrame) -> DataFrame:
+    """(id_a, id_b, common, n_a, n_b) for every doc pair sharing a
+    shingle: the inverted-index self-join, cost Σ df(shingle)²."""
+    a, b = shingles.alias("a"), shingles.alias("b")
+    pairs = (
+        a.join(
+            b,
+            (F.col("a.shingle") == F.col("b.shingle"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .groupBy(
+            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
+        )
+        .agg(F.count(F.lit(1)).alias("common"))
+    )
+    card = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    ca = card.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a"))
+    cb = card.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b"))
+    return (
+        pairs.join(ca, "id_a")
+        .join(cb, "id_b")
+        .select("id_a", "id_b", "common", "n_a", "n_b")
+    )
+
+
+def overlap_candidates(shingles: DataFrame, cand: DataFrame) -> DataFrame:
+    """(id_a, id_b, common, n_a, n_b) for the given candidate pairs
+    only: each doc's shingle set is collected once and the pair's
+    overlap is the size of the set intersection."""
+    sets = shingles.groupBy("doc_id").agg(
+        F.collect_list("shingle").alias("sh"),
+        F.count(F.lit(1)).alias("n"),
+    )
+    sa = sets.select(
+        F.col("doc_id").alias("id_a"),
+        F.col("sh").alias("sh_a"),
+        F.col("n").alias("n_a"),
+    )
+    sb = sets.select(
+        F.col("doc_id").alias("id_b"),
+        F.col("sh").alias("sh_b"),
+        F.col("n").alias("n_b"),
+    )
+    return (
+        cand.join(sa, "id_a")
+        .join(sb, "id_b")
+        .select(
+            "id_a",
+            "id_b",
+            F.size(F.array_intersect("sh_a", "sh_b")).alias("common"),
+            "n_a",
+            "n_b",
+        )
+    )
+
+
+def _jaccard() -> Column:
+    """common / |A ∪ B| over an overlap table's columns."""
+    return F.col("common").cast("double") / (
+        F.col("n_a") + F.col("n_b") - F.col("common")
+    )
+
+
+def _jaccard_at_least(overlap: DataFrame, t: float) -> DataFrame:
+    """(id_a, id_b, jaccard) for the overlap rows with Jaccard >= t,
+    rounded by exact integer half-up (rule-8 batch-2 sweep)."""
+    return overlap.filter(_jaccard() >= t).select(
+        "id_a",
+        "id_b",
+        F.expr(ratio_round4_sql("common", "n_a + n_b - common", "div")).alias(
+            "jaccard"
+        ),
     )
 
 
@@ -145,12 +269,7 @@ def _simhash(docs: DataFrame, n_bits: int = 60) -> DataFrame:
     tok = docs.select(
         "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("token")
     )
-    th = tok.select(
-        "doc_id",
-        F.conv(F.substring(F.md5("token"), 1, 15), 16, 10)
-        .cast("bigint")
-        .alias("h"),
-    )
+    th = tok.select("doc_id", md5_prefix_int("token", 15).alias("h"))
     # One aggregate with 60 partial-summed ±1 counters beats the
     # (doc x bit) explode: the shuffle carries 60 longs per doc instead
     # of 60 rows per token.
@@ -203,39 +322,7 @@ WHERE CAST(common AS DOUBLE) / (ca.n + cb.n - common) >= 0.5
     "MinHash banding (llm_near_dedup) bounds it further.",
 )
 def q_llm_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    shingles = shingles3(spark, sf_dir)
-    card = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = shingles.alias("a")
-    b = shingles.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-        )
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    ca = card.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a"))
-    cb = card.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b"))
-    jac = F.col("common").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("common")
-    )
-    return (
-        pairs.join(ca, "id_a")
-        .join(cb, "id_b")
-        .filter(jac >= 0.5)
-        # exact integer half-up (rule-8 batch-2 sweep)
-        .select(
-            "id_a",
-            "id_b",
-            F.expr(
-                ratio_round4_sql("common", "n_a + n_b - common", "div")
-            ).alias("jaccard"),
-        )
-    )
+    return _jaccard_at_least(overlap_all_pairs(shingles3(spark, sf_dir)), 0.5)
 
 
 @register(
@@ -275,7 +362,7 @@ WHERE CAST(common AS DOUBLE) / (ca.n + cb.n - common) >= 0.5
     "inverted index holds only prefix tokens, which are the globally "
     "RAREST shingles of each doc, so boilerplate n-grams never enter "
     "the join. Extra cost is one df aggregate and one per-doc window "
-    "rank; verification joins carry sorted shingle arrays only for "
+    "rank; verification joins carry shingle-key arrays only for "
     "surviving candidates. The size filter t*|A| <= |B| <= |A|/t "
     "prunes cross-length candidates before verification. r12: every "
     "shuffle/compare runs on injective xxhash64 keys (proved per run "
@@ -375,38 +462,8 @@ def llm_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("id_a", "id_b")
     )
-    sets = sh.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list("key")).alias("sh"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    sa = sets.select(
-        F.col("doc_id").alias("id_a"),
-        F.col("sh").alias("sh_a"),
-        F.col("n").alias("n_a"),
-    )
-    sb = sets.select(
-        F.col("doc_id").alias("id_b"),
-        F.col("sh").alias("sh_b"),
-        F.col("n").alias("n_b"),
-    )
-    common = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = F.col("common").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("common")
-    )
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select("id_a", "id_b", common.alias("common"), "n_a", "n_b")
-        .filter(jac >= t)
-        # exact integer half-up (rule-8 batch-2 sweep)
-        .select(
-            "id_a",
-            "id_b",
-            F.expr(
-                ratio_round4_sql("common", "n_a + n_b - common", "div")
-            ).alias("jaccard"),
-        )
-    )
+    keyed = sh.select("doc_id", F.col("key").alias("shingle"))
+    return _jaccard_at_least(overlap_candidates(keyed, cand), t)
 
 
 @register(
@@ -1209,98 +1266,29 @@ WHERE CAST(c AS DOUBLE) / (ca.n + cb.n - c) >= 0.5
     "portable 12-permutation MinHash signature (perm i's hash of "
     "shingle s = md5(i ':' s) — md5 is identical in every engine, "
     "unlike pyspark.ml's private hash family behind llm_near_dedup), "
-    "banded 4 x 3; docs sharing any band become candidates, then exact "
-    "Jaccard >= 0.5 verification. The DuckDB oracle recomputes the "
+    "widened to 12 columns m0..m11 by one groupBy(doc_id) of 12 mins "
+    "(minhash_signature), banded 4 x 3 (band_candidates); docs sharing "
+    "any band become candidates, then exact Jaccard >= 0.5 "
+    "verification by set intersection (overlap_candidates). The "
+    "DuckDB oracle recomputes the "
     "whole pipeline (signatures, bands, collisions, verify), so even "
     "the LSH banding itself is hash-checked. Output = the banded "
     "subset of q_llm_ngram_jaccard's pairs that collide in >= 1 band "
     "(P[collide] = 1-(1-J^3)^4: >= 0.95 at J = 0.8).",
-    scale_notes="The standard web-scale near-dedup shape: signature "
-    "agg shuffles (doc, 12 longs); the candidate join cost is "
-    "Σ(band-bucket²) — bounded by banding, immune to hot shingles "
-    "(a boilerplate shingle moves ONE of 12 minima, not the bucket "
-    "key). Exact verify touches only candidates.",
+    scale_notes="The standard web-scale near-dedup shape: the 12 "
+    "hashes are computed per shingle row in one projection and "
+    "min-reduced map-side, so the signature shuffles one (doc, 12 "
+    "longs) row per doc — no permutation crossJoin, no (doc, i) "
+    "re-grouping; the 4 band keys are exploded from that row. The "
+    "candidate join cost is Σ(band-bucket²) — bounded by banding, "
+    "immune to hot shingles (a boilerplate shingle moves ONE of 12 "
+    "minima, not the bucket key). Exact verify touches only "
+    "candidates. 4 shuffle Exchanges, no nested-loop join.",
 )
 def llm_minhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    n_perm, band_rows = 12, 3
     shingles = shingles3(spark, sf_dir)
-    perms = spark.range(n_perm).select(F.col("id").cast("int").alias("i"))
-    mh = (
-        shingles.crossJoin(F.broadcast(perms))
-        .select(
-            "doc_id",
-            "i",
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws(":", F.col("i"), F.col("shingle"))), 1, 15
-                ),
-                16,
-                10,
-            )
-            .cast("bigint")
-            .alias("h"),
-        )
-        .groupBy("doc_id", "i")
-        .agg(F.min("h").alias("mh"))
-    )
-    bands = (
-        mh.withColumn("band", (F.col("i") / band_rows).cast("int"))
-        .groupBy("doc_id", "band")
-        .agg(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("i", "mh"))),
-                    lambda s: s.getField("mh").cast("string"),
-                ),
-            ).alias("bkey")
-        )
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-        )
-        .distinct()
-    )
-    sets = shingles.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list("shingle")).alias("sh"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    sa = sets.select(
-        F.col("doc_id").alias("id_a"),
-        F.col("sh").alias("sh_a"),
-        F.col("n").alias("n_a"),
-    )
-    sb = sets.select(
-        F.col("doc_id").alias("id_b"),
-        F.col("sh").alias("sh_b"),
-        F.col("n").alias("n_b"),
-    )
-    common = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = F.col("common").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("common")
-    )
-    return (
-        cand.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select("id_a", "id_b", common.alias("common"), "n_a", "n_b")
-        .filter(jac >= 0.5)
-        # exact integer half-up (rule-8 batch-2 sweep)
-        .select(
-            "id_a",
-            "id_b",
-            F.expr(
-                ratio_round4_sql("common", "n_a + n_b - common", "div")
-            ).alias("jaccard"),
-        )
-    )
+    cand = band_candidates(minhash_signature(shingles))
+    return _jaccard_at_least(overlap_candidates(shingles, cand), 0.5)
 
 
 @register(
@@ -1700,101 +1688,30 @@ FROM m
 """,
     doc="Candidate-set quality evaluation of the banded MinHash "
     "pipeline: the 4x3-banded candidate pairs (llm_minhash_banded's "
-    "generator, pre-verification) scored against the TRUE "
+    "12-column signature and band generator, pre-verification) "
+    "scored against the TRUE "
     "Jaccard>=0.5 pair set (q_llm_ngram_jaccard's inverted-index "
     "ground truth) — precision/recall of the approximate index "
     "itself, computed exactly inside the engine. The theoretical "
     "recall floor at J=0.5 is 1-(1-0.5^3)^4 = 0.414; measured "
     "recall above it confirms the banding constants, measured "
     "precision prices the verification pass that follows.",
-    scale_notes="Shares llm_minhash_banded's signature/band physics "
-    "and q_llm_ngram_jaccard's Σdf(shingle)^2 truth join — the "
+    scale_notes="Shares llm_minhash_banded's one-row-per-doc 12-column "
+    "signature and band kernel, and q_llm_ngram_jaccard's "
+    "Σdf(shingle)^2 truth join (overlap_all_pairs) — the "
     "truth side is the expensive leg and exists ONLY for "
     "evaluation (run on a sample at 100 TB; the metrics are "
     "ratios, not corpus state). Ledger joins on (id_a, id_b) "
     "pairs; 1-row head.",
 )
 def q_llm_minhash_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    n_perm, band_rows = 12, 3
-    shingles = shingles3(spark, sf_dir).localCheckpoint()
-    # --- truth: exact Jaccard >= 0.5 via the inverted-index join ---
-    card = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = shingles.alias("ta")
-    b = shingles.alias("tb")
-    pairs = (
-        a.join(
-            b,
-            (F.col("ta.shingle") == F.col("tb.shingle"))
-            & (F.col("ta.doc_id") < F.col("tb.doc_id")),
-        )
-        .groupBy(
-            F.col("ta.doc_id").alias("id_a"),
-            F.col("tb.doc_id").alias("id_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    ca = card.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a"))
-    cb = card.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b"))
-    jac = F.col("common").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("common")
-    )
+    shingles = shingles3(spark, sf_dir)
     truth = (
-        pairs.join(ca, "id_a")
-        .join(cb, "id_b")
-        .filter(jac >= 0.5)
+        overlap_all_pairs(shingles)
+        .filter(_jaccard() >= 0.5)
         .select("id_a", "id_b")
     )
-    # --- candidates: the banded-LSH generator, pre-verification ---
-    perms = spark.range(n_perm).select(F.col("id").cast("int").alias("i"))
-    mh = (
-        shingles.crossJoin(F.broadcast(perms))
-        .select(
-            "doc_id",
-            "i",
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(":", F.col("i"), F.col("shingle"))
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            )
-            .cast("bigint")
-            .alias("h"),
-        )
-        .groupBy("doc_id", "i")
-        .agg(F.min("h").alias("mh"))
-    )
-    bands = (
-        mh.withColumn("band", (F.col("i") / band_rows).cast("int"))
-        .groupBy("doc_id", "band")
-        .agg(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("i", "mh"))),
-                    lambda s: s.getField("mh").cast("string"),
-                ),
-            ).alias("bkey")
-        )
-    )
-    ba, bb = bands.alias("ba"), bands.alias("bb")
-    cand = (
-        ba.join(
-            bb,
-            (F.col("ba.band") == F.col("bb.band"))
-            & (F.col("ba.bkey") == F.col("bb.bkey"))
-            & (F.col("ba.doc_id") < F.col("bb.doc_id")),
-        )
-        .select(
-            F.col("ba.doc_id").alias("id_a"),
-            F.col("bb.doc_id").alias("id_b"),
-        )
-        .distinct()
-    )
+    cand = band_candidates(minhash_signature(shingles))
     merged = truth.withColumn("t", F.lit(1)).join(
         cand.withColumn("c", F.lit(1)), ["id_a", "id_b"], "full"
     )
@@ -1881,157 +1798,64 @@ FROM est JOIN exact USING (id_a, id_b)
     doc="MinHash ESTIMATOR accuracy (the per-pair companion of "
     "q_llm_minhash_eval's set-level precision/recall): for every "
     "banded candidate pair, the signature-agreement Jaccard "
-    "estimate (matching coordinates / 12) against the exact "
+    "estimate (matching columns of the widened m0..m11 signature "
+    "/ 12) against the exact "
     "Jaccard — MAE, signed bias, and the share within the "
     "+-0.25 band that 12 permutations guarantee with ~87% "
     "probability per pair (sd = sqrt(J(1-J)/12) <= 0.145). "
     "Per-pair error terms are ROUND-6 DECIMAL-summed.",
-    scale_notes="Signature-agreement joins run on the 12-long "
-    "(doc, i, mh) table keyed by doc — ledger-sized; the exact-J "
-    "leg touches only candidate pairs (banding bounds it). "
+    scale_notes="The estimate is 12 column equalities on "
+    "signature ⋈ candidates ⋈ signature, both sides the one-row-per-"
+    "doc 12-column signature — no (doc, i) re-join; the exact-J leg "
+    "is llm_minhash_banded's set-intersection verify over candidate "
+    "pairs only (banding bounds it). "
     "Eval-only at 100 TB (sample), like every QA row. 1-row "
     "head.",
 )
 def q_llm_minhash_mae(spark: SparkSession, sf_dir: str) -> DataFrame:
-    n_perm, band_rows = 12, 3
-    shingles = shingles3(spark, sf_dir).localCheckpoint()
-    perms = spark.range(n_perm).select(F.col("id").cast("int").alias("i"))
-    mh = (
-        shingles.crossJoin(F.broadcast(perms))
-        .select(
-            "doc_id",
-            "i",
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(":", F.col("i"), F.col("shingle"))
-                    ),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            )
-            .cast("bigint")
-            .alias("h"),
-        )
-        .groupBy("doc_id", "i")
-        .agg(F.min("h").alias("mh"))
-        .localCheckpoint()
+    shingles = shingles3(spark, sf_dir)
+    sig = minhash_signature(shingles)
+    cand = band_candidates(sig)
+    sig_a = sig.select(
+        F.col("doc_id").alias("id_a"),
+        *[F.col(f"m{i}").alias(f"a{i}") for i in range(N_PERM)],
     )
-    bands = (
-        mh.withColumn("band", (F.col("i") / band_rows).cast("int"))
-        .groupBy("doc_id", "band")
-        .agg(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("i", "mh"))),
-                    lambda s: s.getField("mh").cast("string"),
-                ),
-            ).alias("bkey")
-        )
+    sig_b = sig.select(
+        F.col("doc_id").alias("id_b"),
+        *[F.col(f"m{i}").alias(f"b{i}") for i in range(N_PERM)],
     )
-    ba, bb = bands.alias("ba"), bands.alias("bb")
-    cand = (
-        ba.join(
-            bb,
-            (F.col("ba.band") == F.col("bb.band"))
-            & (F.col("ba.bkey") == F.col("bb.bkey"))
-            & (F.col("ba.doc_id") < F.col("bb.doc_id")),
-        )
-        .select(
-            F.col("ba.doc_id").alias("id_a"),
-            F.col("bb.doc_id").alias("id_b"),
-        )
-        .distinct()
+    agree = sum(
+        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
+        for i in range(N_PERM)
     )
-    ma = mh.select(
-        F.col("doc_id").alias("id_a"), "i", F.col("mh").alias("mh_a")
+    pairs = (
+        overlap_candidates(shingles, cand)
+        .join(sig_a, "id_a")
+        .join(sig_b, "id_b")
     )
-    mb = mh.select(
-        F.col("doc_id").alias("mb_doc"),
-        F.col("i").alias("i_b"),
-        F.col("mh").alias("mh_b"),
-    )
-    est = (
-        cand.join(ma, "id_a")
-        .join(
-            mb,
-            (F.col("id_b") == F.col("mb_doc"))
-            & (F.col("i") == F.col("i_b")),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(
-            (
-                F.sum(
-                    F.when(F.col("mh_a") == F.col("mh_b"), 1).otherwise(0)
-                ).cast("double")
-                / n_perm
-            ).alias("est_j")
-        )
-    )
-    card = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    sa = shingles.alias("sa")
-    sb = shingles.alias("sb")
-    common = (
-        cand.join(sa, F.col("sa.doc_id") == F.col("id_a"))
-        .join(
-            sb,
-            (F.col("sb.doc_id") == F.col("id_b"))
-            & (F.col("sb.shingle") == F.col("sa.shingle")),
-        )
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    exact = (
-        common.join(
-            card.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a")),
-            "id_a",
-        )
-        .join(
-            card.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b")),
-            "id_b",
-        )
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("c").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("c"))
-            ).alias("true_j"),
-        )
-    )
-    err = F.col("est_j") - F.col("true_j")
-    return (
-        est.join(exact, ["id_a", "id_b"])
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
+    err = agree.cast("double") / N_PERM - _jaccard()
+    return pairs.agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
+        F.round(
+            F.sum(F.round(F.abs(err), 6).cast("decimal(18,6)")).cast("double")
+            / F.count(F.lit(1)),
+            4,
+        ).alias("mae"),
+        # + 0.0 folds IEEE negative zero to +0.0: a tiny negative
+        # mean rounds to -0.0 in one engine and 0.0 in the other
+        # (caught by the offset-41414141 fresh-seed battery), and
+        # the driver canonicalizer stringifies the two differently
+        (
             F.round(
-                F.sum(
-                    F.round(F.abs(err), 6).cast("decimal(18,6)")
-                ).cast("double")
+                F.sum(F.round(err, 6).cast("decimal(18,6)")).cast("double")
                 / F.count(F.lit(1)),
                 4,
-            ).alias("mae"),
-            # + 0.0 folds IEEE negative zero to +0.0: a tiny negative
-            # mean rounds to -0.0 in one engine and 0.0 in the other
-            # (caught by the offset-41414141 fresh-seed battery), and
-            # the driver canonicalizer stringifies the two differently
-            (
-                F.round(
-                    F.sum(F.round(err, 6).cast("decimal(18,6)")).cast(
-                        "double"
-                    )
-                    / F.count(F.lit(1)),
-                    4,
-                )
-                + F.lit(0.0)
-            ).alias("bias"),
-            F.sum(F.when(F.abs(err) <= 0.25, 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_within_025"),
-        )
+            )
+            + F.lit(0.0)
+        ).alias("bias"),
+        F.sum(F.when(F.abs(err) <= 0.25, 1).otherwise(0))
+        .cast("bigint")
+        .alias("n_within_025"),
     )
 
 
@@ -2097,35 +1921,8 @@ FROM pairsb JOIN docsb USING (t) CROSS JOIN nd ORDER BY threshold
     "Jaccards.",
 )
 def q_llm_dedup_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    shingles = shingles3(spark, sf_dir)
-    card = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = shingles.alias("a")
-    b = shingles.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    ca = card.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a"))
-    cb = card.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b"))
-    jac = (
-        pairs.join(ca, "id_a")
-        .join(cb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.col("common").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("common"))
-            ).alias("j"),
-        )
+    jac = overlap_all_pairs(shingles3(spark, sf_dir)).select(
+        "id_a", "id_b", _jaccard().alias("j")
     )
     th = spark.range(1).select(
         F.explode(

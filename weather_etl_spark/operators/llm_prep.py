@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from weather_etl_spark.functions.exact import (
+    md5_prefix_int,
     ratio_round4_sql,
     signed_ratio_round_sql,
 )
@@ -633,9 +634,7 @@ def q_llm_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "lang",
             (
-                F.conv(F.substring(F.md5("token"), 1, 8), 16, 10)
-                .cast("bigint")
-                % _DSIR_BUCKETS
+                md5_prefix_int("token", 8) % _DSIR_BUCKETS
             ).alias("b"),
         )
     )

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from weather_etl_spark.functions.exact import (
     decimal_mean_round4_sql,
+    md5_prefix_int,
     ratio_round4_sql,
     signed_ratio_round_sql,
 )
@@ -348,9 +349,7 @@ FROM (
 def q_llm_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
     bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint")
-        % 100
+        md5_prefix_int("doc_id", 15) % 100
     )
     return docs.select(
         "doc_id",
@@ -1776,9 +1775,7 @@ FROM nll GROUP BY doc_id
 def q_llm_ppl_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
     bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10)
-        .cast("bigint")
-        % 100
+        md5_prefix_int("doc_id", 15) % 100
     )
     toks = docs.select(
         "doc_id", bucket.alias("bucket"), F.split("text", " ").alias("t")

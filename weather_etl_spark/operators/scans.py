@@ -20,6 +20,7 @@ from functools import reduce
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from weather_etl_spark.functions.exact import md5_prefix_int
 from weather_etl_spark.io import (
     TABLES,
     read_table,
@@ -346,9 +347,9 @@ GROUP BY event_type
 )
 def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_table(spark, sf_dir, "events")
-    bucket = F.conv(
-        F.substring(F.md5(F.col("event_id").cast("string")), 1, 4), 16, 10
-    ).cast("int") % 100
+    bucket = (
+        md5_prefix_int("event_id", 4).cast("int") % 100
+    )
     rate = (
         F.when(F.col("event_type") == "purchase", 100)
         .when(F.col("event_type") == "signup", 50)
@@ -536,11 +537,7 @@ FROM assigned GROUP BY lang, split
 def q_sample_split3(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
     bucket = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4),
-            16,
-            10,
-        ).cast("int")
+        md5_prefix_int("doc_id", 4).cast("int")
         % 10
     )
     split = (

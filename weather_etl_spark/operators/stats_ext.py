@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from weather_etl_spark.functions.exact import md5_prefix_int
 from weather_etl_spark.io import read_table
 from weather_etl_spark.registry import register
 
@@ -394,8 +395,7 @@ def q_llm_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(F.split("text", " ")).alias("token")
     ).filter(F.col("token") != "")
     feature = (
-        F.conv(F.substring(F.md5("token"), 1, 4), 16, 10).cast("int")
-        % _FEAT_BUCKETS
+        md5_prefix_int("token", 4).cast("int") % _FEAT_BUCKETS
     )
     return tok.groupBy("doc_id", feature.alias("feature")).agg(
         F.count(F.lit(1)).alias("weight")

@@ -67,8 +67,6 @@ ALLOW_BNL: dict[str, str] = {
     "positional join itself is the doc_id equi-join (llm_prep.py)",
     "q_time_interp": "bounded generated day axis per the gapfill grid "
     "(aggregates.py:797)",
-    "llm_minhash_banded": "constant permutation table, bands x rows "
-    "(llm_dedup.py:938)",
     "q_llm_cosine_pairs": "deliberate naive all-pairs oracle twin of "
     "llm_cosine_pairs_blocked (SCALE.md §10)",
     "q_llm_align_uniform": "deliberate eval-only all-pairs metric "
@@ -85,17 +83,6 @@ ALLOW_BNL: dict[str, str] = {
     "q_filter_ts_cursor pattern (stats_ext.py)",
     "q_event_cooccurrence": "1-row distinct-user-count universe — the "
     "q_filter_ts_cursor pattern (drift.py)",
-    "q_llm_bpe_train": "five 1-row argmax merge tables crossed back "
-    "into the corpus rewrite — the q_filter_ts_cursor pattern, once "
-    "per BPE round (llm_prep.py)",
-    "q_llm_apply_bpe": "same five 1-row merge broadcasts as "
-    "q_llm_bpe_train (the apply pass replays the frozen training "
-    "plan, llm_prep.py)",
-    "q_agg_ttest": "1-row x 1-row crossJoin of the two group-moment "
-    "aggregates (drift.py) — the q_filter_ts_cursor pattern",
-    "q_agg_mannwhitney": "1-row x 1-row crossJoin of the rank moments "
-    "and the tie-term aggregate (drift.py) — the q_filter_ts_cursor "
-    "pattern",
     "q_agg_mutual_info": "1-row total-count aggregate crossed into the "
     "bounded cell grid (drift.py) — the q_filter_ts_cursor pattern",
     "q_agg_kl_divergence": "two 1-row total-count aggregates crossed "
@@ -129,12 +116,6 @@ ALLOW_BNL: dict[str, str] = {
     "q_agg_chisq": "1-row total + two 1-row marginal-cardinality "
     "aggregates crossed into the bounded (types x 24) grid — the "
     "q_agg_mutual_info pattern (drift.py)",
-    "q_graph_kcore": "three per-round 1-row x 1-row crossJoins of the "
-    "survivor-count and edge-count aggregates — the q_graph_triangles "
-    "pattern (graph.py)",
-    "snk_manifest": "1-row key-span aggregate crossed into the scan "
-    "and the 4-row manifest — the q_filter_ts_cursor pattern "
-    "(sink_ops.py)",
     "q_ab_cuped": "1-row split-date and 1-row pooled-theta frames "
     "crossed into the user/arm ledgers — the q_filter_ts_cursor "
     "pattern (analytics.py)",
@@ -148,7 +129,7 @@ ALLOW_BNL: dict[str, str] = {
     "q_llm_bm25": "1-row (N, avgdl) corpus aggregate crossed into the "
     "3-term tf frame — the q_filter_ts_cursor pattern (llm_text.py)",
     "q_agg_kruskal": "1-row rank-ledger x 1-row tie-term crossJoin — "
-    "the q_agg_mannwhitney moment-frame pattern (drift.py)",
+    "the q_filter_ts_cursor pattern (drift.py)",
     "q_llm_hard_negatives": "5-row constant anchor matrix — the "
     "q_llm_knn bounded-probe pattern (llm_vector.py)",
     "q_llm_kneser_ney": "1-row (B, T) bigram-total aggregate crossed "
@@ -157,18 +138,9 @@ ALLOW_BNL: dict[str, str] = {
     "q_event_time_to_convert": "1-row viewer-count aggregate crossed "
     "into the 1-row latency ledger — the q_filter_ts_cursor pattern "
     "(eventseq.py)",
-    "q_llm_minhash_eval": "12-row constant permutation axis crossed "
-    "into the shingle table — llm_minhash_banded's signature build "
-    "(llm_dedup.py)",
     "q_agg_quantile_eval": "constant 3-row quantile axis x <=64-bin "
     "cumulative ledger — the q_agg_hist_quantile crossing pattern "
     "(aggregates.py)",
-    "q_llm_minhash_mae": "12-row constant permutation axis crossed "
-    "into the shingle table — llm_minhash_banded's signature build "
-    "(llm_dedup.py)",
-    "q_tpch_q15": "1-row MAX(total_revenue) aggregate crossed into "
-    "the supplier revenue ledger — the q_filter_ts_cursor pattern "
-    "(tpch.py)",
     "q_tpch_q11": "1-row grand-total aggregate crossed into the "
     "part-value ledger — the HAVING decorrelation (tpch.py)",
 }
