@@ -35,8 +35,9 @@ ALLOWED_PULLS: dict[str, str] = {
     "operators/llm_dedup.py::_banded_cells": "k cell radii — one row "
     "per k-means cell, k is a constant of the blocking scheme",
     "operators/llm_dedup.py::star_contract": "hybrid union-find "
-    "finish — hard-gated to <= 2^17 remaining edges (~2 MB) before "
-    "the pull fires; larger edge sets stay in the distributed rounds",
+    "finish — the pull is limit(2^17 + 1): it finishes locally only "
+    "when it returns <= 2^17 edges (~2 MB); larger edge sets stay in "
+    "the distributed rounds",
     "operators/llm_vector.py::lloyd_kmeans": "k seed vectors + k "
     "centroid rows per Lloyd round — k x dim floats, input-size "
     "independent",

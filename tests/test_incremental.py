@@ -9,6 +9,7 @@ import math
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, TimestampType
 
 from weather_etl_spark.incremental import (
     SinkMissingError,
@@ -119,7 +120,26 @@ def test_error_envelope(spark, tmp_path):
 
 
 def test_discover_cursor_empty(spark, tmp_path):
-    assert discover_cursor(spark, str(tmp_path / "absent"), "date") is None
+    field = StructField("date", TimestampType())
+    assert discover_cursor(spark, str(tmp_path / "absent"), field) is None
+
+
+def test_sink_dir_without_data_files_is_empty(spark, tmp_path):
+    """A sink directory with no data files — bare, or holding only the
+    ``_temporary/`` of an append that died before its commit — reads as
+    an empty table: the first run inserts the whole batch (the
+    reference's NULL MAX(date), lambda_function.py:134-145) and a
+    replay inserts 0."""
+    batch = _weather_batch(spark, "2024-01-01 00:00:00", "2024-01-01 02:00:00")
+    for leftover in ("", "_temporary/0"):
+        sink = tmp_path / f"sink{len(leftover)}"
+        (sink / leftover).mkdir(parents=True)
+        first = run_incremental(spark, batch, str(sink), ["date"])
+        assert first["statusCode"] == 200, first
+        assert first["records_inserted"] == 8
+        assert first["pre_run_cursor"] is None
+        replay = run_incremental(spark, batch, str(sink), ["date"])
+        assert (replay["statusCode"], replay["records_inserted"]) == (200, 0)
 
 
 def test_retry_envelope(spark):

@@ -908,7 +908,7 @@ def test_bpe_train_argmax_travels_in_plan(spark, sf_dir):
         "doc_id", F.col("text").alias("txt")
     )
     round_plan = _executed_plan(
-        _bpe_rewrite(docs, _bpe_best(docs, True), keep_meta=True)
+        _bpe_rewrite(docs, _bpe_best(docs))
     )
     assert "BroadcastNestedLoopJoin" in round_plan  # 1-row crossJoin
     assert "TakeOrderedAndProject" in round_plan  # the round's argmax

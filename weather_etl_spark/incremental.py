@@ -24,6 +24,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from weather_etl_spark.session import ensure_engine_confs
 from weather_etl_spark.sinks import idempotent_append
@@ -34,12 +35,24 @@ class SinkMissingError(RuntimeError):
     lambda_function.py:207-214) — never auto-create in strict mode."""
 
 
-def discover_cursor(spark: SparkSession, sink_path: str, ts_col: str):
-    """MAX(ts) from the sink (A8). Parquet footer stats answer this
-    without a full column scan."""
+def discover_cursor(spark: SparkSession, sink_path: str, ts_field: StructField):
+    """MAX(ts) from the sink (A8), or None when it holds no rows.
+
+    The sink is read with the batch's own ``ts_field`` type, never an
+    inferred schema: a sink directory without data files (a first
+    append that died before its commit, leaving at most
+    ``_temporary/``) reads as empty, like the reference's MAX(date)
+    over an empty table (lambda_function.py:134-145).  This scans the
+    ts column: Parquet footer stats cannot answer it, since aggregate
+    pushdown skips timestamp columns (session.py)."""
     if not os.path.exists(sink_path):
         return None
-    row = spark.read.parquet(sink_path).agg(F.max(ts_col).alias("c")).first()
+    row = (
+        spark.read.schema(StructType([ts_field]))
+        .parquet(sink_path)
+        .agg(F.max(ts_field.name).alias("c"))
+        .first()
+    )
     return row["c"]
 
 
@@ -102,13 +115,14 @@ def run_incremental(
             f"sink {sink_path} does not exist (fail-fast, reference A9)"
         )
     try:
-        cursor = discover_cursor(spark, sink_path, ts_col)
+        ts_field = source_df.schema[ts_col]
+        cursor = discover_cursor(spark, sink_path, ts_field)
         fetched = source_df.count()
         fresh = filter_new_records(source_df, ts_col, cursor, now=now)
         if float_cols:
             fresh = normalize_nans(fresh, float_cols)
         inserted = idempotent_append(spark, fresh, sink_path, key_cols)
-        latest = discover_cursor(spark, sink_path, ts_col)
+        latest = discover_cursor(spark, sink_path, ts_field)
         return {
             "statusCode": 200,
             "records_fetched": fetched,

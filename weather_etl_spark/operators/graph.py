@@ -559,7 +559,7 @@ LIMIT 25
     "map-combined count + a per-node argmax window — the canonical "
     "iterate-as-join-aggregate shape GraphX lowers to. Rounds are "
     "fixed, not data-dependent; at 100 TB labels localCheckpoint "
-    "per round (the q_llm_dedup_components pattern) to cut lineage.",
+    "per round (the star_contract pattern) to cut lineage.",
 )
 def q_graph_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     und, und_ids = tracked_local_checkpoint(

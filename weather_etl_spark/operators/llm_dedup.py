@@ -1125,69 +1125,21 @@ SELECT u AS doc_id, CAST(LEAST(u, MIN(v)) AS BIGINT) AS component
 FROM cl GROUP BY u
 """,
     doc="Near-duplicate CLUSTERS, not just pairs: connected components "
-    "over the 3-shingle Jaccard >= 0.5 edge graph via iterative "
-    "min-label propagation (each doc converges to the smallest doc_id "
-    "reachable from it — the canonical representative a training "
-    "pipeline keeps). Oracle computes the same components with a "
-    "recursive-CTE transitive closure.",
-    scale_notes="Label propagation runs one join + one min-aggregate "
-    "per round, converging in graph-diameter rounds (near-dup "
-    "clusters are shallow); lineage is truncated per round with "
-    "localCheckpoint so plans stay bounded. At 100 TB switch the loop "
-    "body to the large-star/small-star contraction (alternating "
-    "rounds halve long chains), same per-round join shape.",
+    "over the 3-shingle Jaccard >= 0.5 edge graph (each doc is labelled "
+    "with the smallest doc_id reachable from it — the canonical "
+    "representative a training pipeline keeps). Computed by the same "
+    "star_contract kernel as llm_components_starcontract (identical "
+    "rows); oracle computes the components with a recursive-CTE "
+    "transitive closure.",
+    scale_notes="Large-star/small-star contraction (star_contract): "
+    "O(log^2 n) rounds of one groupBy(min) + one join each, lineage "
+    "truncated per round with a tracked localCheckpoint, and an exact "
+    "driver union-find finish once <= 2^17 edges remain. Round count "
+    "does not grow with cluster diameter, unlike min-label "
+    "propagation.",
 )
 def q_llm_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Edge generation via the prefix-filtered exact join: identical pairs
-    # to q_llm_ngram_jaccard (same oracle) without its Σdf² hot-shingle
-    # exposure, so the components row inherits the scale-safe shape.
-    edges = llm_jaccard_prefix(spark, sf_dir).select("id_a", "id_b")
-    sym = edges.union(
-        edges.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
-    ).select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    # edge list reused every round; tracked so its blocks are released
-    # once the final labels checkpoint (the only thing the returned
-    # plan references) is materialized
-    sym, sym_ids = tracked_local_checkpoint(sym)
-
-    labels, labels_ids = tracked_local_checkpoint(
-        sym.select(F.col("src").alias("doc_id"))
-        .distinct()
-        .withColumn("lbl", F.col("doc_id"))
-    )
-    for _ in range(20):  # >= diameter of any near-dup cluster
-        msgs = sym.join(
-            labels.select(F.col("doc_id").alias("src"), "lbl"), "src"
-        ).select(F.col("dst").alias("doc_id"), "lbl")
-        new_labels, new_ids = tracked_local_checkpoint(
-            labels.select("doc_id", "lbl")
-            .union(msgs)
-            .groupBy("doc_id")
-            .agg(F.min("lbl").alias("lbl"))
-        )  # truncate lineage per round
-        changed = (
-            labels.join(new_labels.withColumnRenamed("lbl", "new_lbl"), "doc_id")
-            .filter(F.col("lbl") != F.col("new_lbl"))
-            .count()
-        )
-        # round N is materialized and the convergence check was the
-        # last consumer of round N-1 — free its blocks now, so the
-        # loop's checkpoint footprint is O(1) rounds, not O(rounds)
-        release_rdds(spark, labels_ids)
-        labels, labels_ids = new_labels, new_ids
-        if changed == 0:
-            break
-    else:
-        # The round cap is a safety valve, not an output mode: returning
-        # non-converged labels would silently mislabel components.
-        raise RuntimeError(
-            "q_llm_dedup_components: min-label propagation did not "
-            f"converge within 20 rounds (last round changed {changed} "
-            "labels); raise the round cap or switch to star contraction"
-        )
-    # the returned plan reads only the final labels checkpoint
-    release_rdds(spark, sym_ids)
-    return labels.select("doc_id", F.col("lbl").cast("bigint").alias("component"))
+    return llm_components_starcontract(spark, sf_dir)
 
 
 @register(
@@ -1332,38 +1284,32 @@ FROM cl GROUP BY u
     "each round every node re-wires its strictly-larger (large-star) "
     "or not-larger (small-star) neighbors directly to its neighborhood "
     "minimum, halving long chains instead of walking them one hop per "
-    "round like min-label propagation (q_llm_dedup_components). "
-    "Converges in O(log^2 n) rounds to a star forest; identical output "
-    "and oracle as the propagation row — the declared 100 TB upgrade "
-    "path its scale_notes promise, now shipped and hash-verified.",
+    "round like min-label propagation. Converges in O(log^2 n) rounds "
+    "to a star forest. The star_contract kernel is the package's one "
+    "connected-components loop; q_llm_dedup_components returns this "
+    "same result under its own name (same oracle).",
     scale_notes="Per round: one groupBy(min) + one join, shuffles carry "
     "(node, candidate-parent) pairs only; lineage truncated per round "
     "with localCheckpoint. Chain diameter no longer bounds round count "
     "— log^2 rounds worst-case vs diameter rounds for propagation; at "
     "100 TB this is the difference between ~8 rounds and ~hundreds on "
-    "long-chain graphs. Hybrid finish: once a round's edge count (free "
-    "— the fixpoint test already computes it) drops to <=2^17, the "
-    "remaining ~2 MB edge list is pulled once and finished with an "
-    "exact driver union-find (identical min-id labels), replacing the "
-    "tail rounds whose whole-graph shuffles would each touch data that "
-    "fits in one task. Third documented bounded collect in the package.",
+    "long-chain graphs. Hybrid finish: a bounded pull of at most "
+    "2^17 + 1 edges (limit, no count) decides whether the input is "
+    "small enough; later rounds reuse their fixpoint count for the "
+    "same test. At <= 2^17 edges the ~2 MB edge list is pulled once "
+    "and finished with an exact driver union-find (identical min-id "
+    "labels), replacing the tail rounds whose whole-graph shuffles "
+    "would each touch data that fits in one task.",
 )
 def llm_components_starcontract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e0 = llm_jaccard_prefix(spark, sf_dir).select(
-        F.col("id_a").alias("u"), F.col("id_b").alias("v")
-    )
+    e = llm_jaccard_prefix(spark, sf_dir)
     # canonical undirected edge set as (u < v) pairs
-    edges, edge_ids = tracked_local_checkpoint(
-        e0.select(
-            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
+    return star_contract(
+        e.select(
+            F.least("id_a", "id_b").alias("u"),
+            F.greatest("id_a", "id_b").alias("v"),
         ).distinct()
     )
-
-    out = star_contract(edges)
-    # star_contract's result reads only its own final-round checkpoint;
-    # the input edge list is dead weight once it returns
-    release_rdds(spark, edge_ids)
-    return out
 
 
 def _union_find_finish(spark: SparkSession, rows: list) -> DataFrame:
@@ -1396,16 +1342,24 @@ def _union_find_finish(spark: SparkSession, rows: list) -> DataFrame:
     )
 
 
+#: Round cap of star_contract: a safety valve, not an output mode
+#: (contraction converges in O(log^2 n) rounds).
+_STAR_MAX_ROUNDS = 15
+
+
 def star_contract(
-    edges: DataFrame,
-    max_rounds: int = 15,
-    local_finish_edges: int = 1 << 17,
+    edges: DataFrame, local_finish_edges: int = 1 << 17
 ) -> DataFrame:
-    """Large-star/small-star contraction over a canonical (u < v) edge
-    DataFrame -> (doc_id, component) labels, component = min node id.
-    Kept separate from the registered query so the algorithm itself can
-    be property-tested against a union-find reference on arbitrary
-    graphs (tests/test_llm_ops.py).
+    """Large-star/small-star contraction over a lazy canonical (u < v)
+    edge DataFrame -> (doc_id, component) labels, component = min node
+    id.  Kept separate from the registered queries so the algorithm
+    itself can be property-tested against a union-find reference on
+    arbitrary graphs (tests/test_llm_ops.py).
+
+    Owns every checkpoint it makes: the input is checkpointed once
+    (tracked), each round's blocks are released as soon as the next
+    round's fixpoint test has consumed them, and the returned frame
+    reads only the last round's checkpoint.
 
     Hybrid finish (the standard trick in the MapReduce-CC literature:
     contract until the problem is small, then solve it in one place):
@@ -1413,17 +1367,17 @@ def star_contract(
     ``local_finish_edges``; below that the remaining edges — a hard
     bound of 2^17 rows x two bigints = ~2 MB — are pulled to the
     driver once and finished with an exact union-find whose output
-    (min-id component labels) is identical to the fixpoint's.  Each
-    distributed round already computes the edge count for its fixpoint
-    test, so the cutover check is free; at 100 TB the local finish
-    replaces the last several whole-graph shuffle rounds (every round
-    past the crossover runs 2 checkpoints + a count on data that fits
-    in one task), and on small inputs it replaces ALL rounds.  Pass
-    ``local_finish_edges=0`` to force the pure distributed fixpoint
-    (the property tests exercise both paths).  A/B at sf0.1
-    (llm_components_starcontract, 3 alternating fresh-JVM medians
-    each): 5.40/5.71/5.29 s without the local finish vs
-    4.23/4.33/4.48 s with it."""
+    (min-id component labels) is identical to the fixpoint's.  The
+    input's size is never counted: one ``limit(local_finish_edges +
+    1)`` pull either IS the whole edge list or proves it too large.
+    Later rounds count their edges for the fixpoint test anyway and
+    reuse that count for the cutover.  At 100 TB the local finish
+    replaces the last several whole-graph shuffle rounds, and on small
+    inputs it replaces ALL rounds.  Pass ``local_finish_edges=0`` to
+    force the pure distributed fixpoint (the property tests exercise
+    both paths).  A/B at sf0.1 (llm_components_starcontract, 3
+    alternating fresh-JVM medians each): 5.40/5.71/5.29 s without the
+    local finish vs 4.23/4.33/4.48 s with it."""
 
     def _sym(e: DataFrame) -> DataFrame:
         return e.union(
@@ -1436,21 +1390,16 @@ def star_contract(
         )
 
     spark = edges.sparkSession
-    # checkpoint ids created by THIS loop (never the caller's input —
-    # callers own their own blocks); round N-1's blocks are released as
-    # soon as round N's fixpoint check has consumed them, keeping the
-    # loop's block-manager footprint at one round regardless of depth
-    edge_ids: set[int] = set()
-    prev_count: int | None = None
-    for _ in range(max_rounds):
-        if prev_count is None:
-            prev_count = edges.count()
-        if prev_count <= local_finish_edges:
-            # bounded driver pull (<= local_finish_edges rows); the
-            # loop's last checkpoint is dead once the rows are local
-            rows = edges.collect()
-            release_rdds(spark, edge_ids)
-            return _union_find_finish(spark, rows)
+    edges, edge_ids = tracked_local_checkpoint(edges)
+    count: int | None = None  # unknown until the first round counts
+    for _ in range(_STAR_MAX_ROUNDS):
+        if count is None or count <= local_finish_edges:
+            # bounded driver pull (<= local_finish_edges + 1 rows); the
+            # last checkpoint is dead once the rows are local
+            rows = edges.limit(local_finish_edges + 1).collect()
+            if len(rows) <= local_finish_edges:
+                release_rdds(spark, edge_ids)
+                return _union_find_finish(spark, rows)
         sym = _sym(edges)
         m = _nbr_min(sym)
         # large-star: strictly-larger neighbors point at the minimum
@@ -1481,22 +1430,23 @@ def star_contract(
         # the half-round intermediate was fully consumed materializing
         # new_edges (tracked_local_checkpoint is eager)
         release_rdds(spark, l_ids)
-        # fixpoint test: one count per round (the previous round's count
-        # is carried over instead of recomputed); the exceptAll shuffle
-        # only runs in the rare round where the counts already agree
+        # fixpoint test: one count per round, compared with the count
+        # carried from the previous round (the first round has none, so
+        # it never converges); the exceptAll shuffle only runs in the
+        # rare round where the counts already agree
         new_count = new_edges.count()
         converged = (
-            new_count == prev_count
+            new_count == count
             and new_edges.exceptAll(edges).count() == 0
         )
         release_rdds(spark, edge_ids)
-        edges, edge_ids, prev_count = new_edges, n_ids, new_count
+        edges, edge_ids, count = new_edges, n_ids, new_count
         if converged:
             break
     else:
         raise RuntimeError(
             "star_contract: no fixpoint within "
-            f"{max_rounds} rounds (expected O(log^2 n))"
+            f"{_STAR_MAX_ROUNDS} rounds (expected O(log^2 n))"
         )
     # fixpoint is a star forest: every node's component is the min of
     # its closed neighborhood.  Both output columns cast to bigint so

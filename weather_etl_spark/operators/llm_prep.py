@@ -17,6 +17,8 @@ Scale shapes (per-operator notes on each spec):
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1255,7 +1257,7 @@ def _bpe_train_oracle(rounds: int = _BPE_ROUNDS) -> str:
     return ctes + "\n" + "\nUNION ALL\n".join(selects)
 
 
-def _bpe_best(docs: DataFrame, keep_cnt: bool) -> DataFrame:
+def _bpe_best(docs: DataFrame) -> DataFrame:
     """One round's merge selection: count adjacent pairs over the
     current corpus, pick the (cnt DESC, pair ASC) argmax (1 row)."""
     toks = docs.select(F.split("txt", " ").alias("t")).filter(
@@ -1274,21 +1276,18 @@ def _bpe_best(docs: DataFrame, keep_cnt: bool) -> DataFrame:
         .groupBy("pair")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    best = counted.orderBy(
+    return counted.orderBy(
         F.col("cnt").desc(), F.col("pair").asc()
     ).limit(1)
-    return best.select("pair", "cnt") if keep_cnt else best.select("pair")
 
 
-def _bpe_rewrite(
-    docs: DataFrame, best: DataFrame, keep_meta: bool = False
-) -> DataFrame:
+def _bpe_rewrite(docs: DataFrame, best: DataFrame) -> DataFrame:
     """Apply one merge corpus-wide (double-space delimiter trick); the
     1-row merge table travels as a broadcast crossJoin, no driver pull.
-    ``keep_meta=True`` keeps the merge's (pair, cnt) as constant
-    columns on every rewritten row, so a checkpoint of the rewrite also
-    materializes the round's merge-table entry (q_llm_bpe_train reads
-    it back without re-counting the corpus)."""
+    The merge's (pair, cnt) ride along as constant columns on every
+    rewritten row, so a checkpoint of the rewrite also materializes the
+    round's merge-table entry.  An empty merge table (no 2-token docs)
+    empties the corpus."""
     spaced = F.concat(
         F.lit(" "), F.replace(F.col("txt"), F.lit(" "), F.lit("  ")),
         F.lit(" "),
@@ -1306,23 +1305,32 @@ def _bpe_rewrite(
     txt = F.trim(
         F.regexp_replace(F.replace(spaced, pat, rep), " +", " ")
     ).alias("txt")
-    if keep_meta:
-        return docs.crossJoin(F.broadcast(best)).select(
-            "doc_id", txt, "pair", "cnt"
-        )
-    return docs.crossJoin(F.broadcast(best.select("pair"))).select(
-        "doc_id", txt
+    return docs.crossJoin(F.broadcast(best)).select(
+        "doc_id", txt, "pair", "cnt"
     )
 
 
-def _bpe_round(docs: DataFrame, keep_cnt: bool) -> tuple[DataFrame, DataFrame]:
-    """One BPE merge round on a (doc_id, txt) corpus: count adjacent
-    pairs, pick the (cnt DESC, pair ASC) argmax, rewrite the corpus
-    with the double-space delimiter trick. Returns (rewritten docs,
-    the 1-row merge table). Shared by q_llm_bpe_train and
-    q_llm_apply_bpe so train and apply can never desynchronize."""
-    best = _bpe_best(docs, keep_cnt)
-    return _bpe_rewrite(docs, best), best
+def _bpe_rounds(docs: DataFrame) -> Iterator[DataFrame]:
+    """The one BPE training loop, shared by q_llm_bpe_train and
+    q_llm_apply_bpe so train and apply can never desynchronize: for
+    each of the _BPE_ROUNDS merges, yield the checkpointed
+    (doc_id, txt, pair, cnt) rewrite of the (doc_id, txt) corpus.
+
+    Each round's rewrite is materialized: the round's merge row, its
+    token recount AND the next round's pair count all branch off it,
+    so without a checkpoint every branch re-executes the whole rewrite
+    chain (1+2+..+rounds corpus passes — isolated sf0.1 medians 4.69 s
+    -> 3.57 s train, 4.40 -> 3.62 apply with checkpoints).  Carrying
+    (pair, cnt) in the checkpoint lets the train output read the merge
+    table back from the materialized rows instead of re-running the
+    pair-count + argmax per round (r12 profile: executor CPU 6.2 s ->
+    2.1 s at sf0.1).  Blocks stay alive until the consumer finishes
+    (bench/tests release per query); at real scale trainers run on a
+    q_sample_hash sample, so the snapshots are sample-sized."""
+    for _ in range(_BPE_ROUNDS):
+        rewritten = _bpe_rewrite(docs, _bpe_best(docs)).localCheckpoint()
+        yield rewritten
+        docs = rewritten.select("doc_id", "txt")
 
 
 @register(
@@ -1352,46 +1360,22 @@ def q_llm_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").alias("txt")
     )
-    out_steps = []
-    for step in range(1, _BPE_ROUNDS + 1):
-        best = _bpe_best(docs, keep_cnt=True)
-        rewritten = _bpe_rewrite(docs, best, keep_meta=True)
-        # Materialize each round's rewritten corpus: round N's merge
-        # row, token recount, AND round N+1's pair count all branch
-        # off docs_N, so without a checkpoint every branch re-executes
-        # the whole rewrite chain (1+2+..+rounds corpus passes —
-        # isolated sf0.1 medians 4.69 s -> 3.57 s train, 4.40 -> 3.62
-        # apply with checkpoints).  r12: the checkpoint carries the
-        # round's (pair, cnt) as constant columns (keep_meta), so the
-        # output job reads the merge table back from the materialized
-        # rows instead of re-running the pair-count+argmax a second
-        # time per round (profiled: the output job re-counted every
-        # round's corpus, ~3 s of the 8.9 s executor total at sf0.1;
-        # executor CPU 6.2 s -> 2.1 s with the re-count gone).  Same
-        # one action per round as before.  Blocks stay alive
-        # until the consumer finishes (bench/tests release per query);
-        # at real scale trainers run on a q_sample_hash sample, so the
-        # retained snapshots are sample-sized, not corpus-sized.
-        checkpointed = rewritten.localCheckpoint()
-        docs = checkpointed.select("doc_id", "txt")
-        # one global agg over the checkpoint: the round's merge row +
-        # post-merge token count.  An empty round (no 2-token docs)
-        # materializes zero rows, so first(pair) is NULL and the filter
-        # reproduces the old crossJoin-with-empty-best semantics.
-        out_steps.append(
-            checkpointed.groupBy()
-            .agg(
-                F.first("pair").alias("pair"),
-                F.first("cnt").alias("cnt"),
-                F.sum(F.size(F.split("txt", " ")))
-                .cast("bigint")
-                .alias("tokens_after"),
-            )
-            .filter(F.col("pair").isNotNull())
-            .select(
-                F.lit(step).alias("step"), "pair", "cnt", "tokens_after"
-            )
+    # one global agg per round over its checkpoint: the merge row +
+    # post-merge token count.  An empty round materializes zero rows,
+    # so first(pair) is NULL and the filter drops the step.
+    out_steps = [
+        rnd.groupBy()
+        .agg(
+            F.first("pair").alias("pair"),
+            F.first("cnt").alias("cnt"),
+            F.sum(F.size(F.split("txt", " ")))
+            .cast("bigint")
+            .alias("tokens_after"),
         )
+        .filter(F.col("pair").isNotNull())
+        .select(F.lit(step).alias("step"), "pair", "cnt", "tokens_after")
+        for step, rnd in enumerate(_bpe_rounds(docs), start=1)
+    ]
     out = out_steps[0]
     for s in out_steps[1:]:
         out = out.unionByName(s)
@@ -1433,17 +1417,10 @@ def q_llm_apply_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs0 = read_table(spark, sf_dir, "documents").select(
         "doc_id", F.col("text").alias("txt0")
     )
-    docs = docs0.select("doc_id", F.col("txt0").alias("txt"))
-    for _step in range(_BPE_ROUNDS):
-        docs, _best = _bpe_round(docs, keep_cnt=False)
-        # Same per-round materialization as q_llm_bpe_train: each
-        # round's argmax subquery re-scans the current corpus, so an
-        # uncheckpointed chain re-executes all prior rewrites once per
-        # round (quadratic in rounds).
-        docs = docs.localCheckpoint()
+    *_, last = _bpe_rounds(docs0.select("doc_id", F.col("txt0").alias("txt")))
     n0 = F.size(F.split("txt0", " "))
     n1 = F.size(F.split("txt", " "))
-    return docs0.join(docs, "doc_id").select(
+    return docs0.join(last.select("doc_id", "txt"), "doc_id").select(
         "doc_id",
         n0.cast("bigint").alias("n_before"),
         n1.cast("bigint").alias("n_after"),

@@ -361,6 +361,26 @@ def q_llm_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, fps) for docs of >= 11 chars: the distinct winnowing
+    fingerprints — md5 hash of every 8-char gram, min of each sliding
+    window of 4 hashes.  Shared by q_llm_winnow and q_llm_winnow_pairs."""
+    hs = F.transform(
+        F.sequence(F.lit(1), F.length("text") - 7),
+        lambda i: md5_prefix_int(F.substring("text", i, 8), 15),
+    )
+    window_min = F.transform(
+        F.sequence(F.lit(1), F.size("hs") - 3),
+        lambda j: F.array_min(F.slice("hs", j, 4)),
+    )
+    return (
+        read_table(spark, sf_dir, "documents")
+        .filter(F.length("text") >= 11)
+        .select("doc_id", hs.alias("hs"))
+        .select("doc_id", F.array_distinct(window_min).alias("fps"))
+    )
+
+
 @register(
     "q_llm_winnow",
     oracle="""
@@ -398,23 +418,12 @@ FROM w
     "with far fewer keys per doc.",
 )
 def q_llm_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = read_table(spark, sf_dir, "documents").filter(
-        F.length("text") >= 11
-    )
-    hs = F.expr(
-        "transform(sequence(1, length(text) - 7),"
-        " i -> cast(conv(substr(md5(substring(text, i, 8)), 1, 15), 16, 10)"
-        "      as bigint))"
-    )
-    docs = docs.select("doc_id", hs.alias("hs"))
-    fps = F.array_distinct(
-        F.expr("transform(sequence(1, size(hs) - 3), j -> array_min(slice(hs, j, 4)))")
-    )
-    return docs.select(
+    fps = _winnow_fingerprints(spark, sf_dir)
+    return fps.select(
         "doc_id",
-        F.size(fps).cast("bigint").alias("n_fp"),
-        F.array_min(fps).alias("min_fp"),
-        F.array_max(fps).alias("max_fp"),
+        F.size("fps").cast("bigint").alias("n_fp"),
+        F.array_min("fps").alias("min_fp"),
+        F.array_max("fps").alias("max_fp"),
     )
 
 
@@ -465,24 +474,13 @@ HAVING COUNT(*) >= 3
     "the winnowing paper's build-once artifact.",
 )
 def q_llm_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = read_table(spark, sf_dir, "documents").filter(
-        F.length("text") >= 11
-    )
-    hs = F.expr(
-        "transform(sequence(1, length(text) - 7),"
-        " i -> cast(conv(substr(md5(substring(text, i, 8)), 1, 15), 16, 10)"
-        "      as bigint))"
-    )
-    fps = docs.select("doc_id", hs.alias("hs")).select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.expr(
-                    "transform(sequence(1, size(hs) - 3),"
-                    " j -> array_min(slice(hs, j, 4)))"
-                )
-            )
-        ).alias("fp"),
+    # explode_outer emits the same rows (fps is never empty for a
+    # >= 11-char text) but, unlike explode, makes Spark infer no
+    # size(fps) > 0 filter: pushed below the projections, that filter
+    # re-hashes the whole text once per window (sf0.01, 4 cores: 1.8 s
+    # -> 128 s)
+    fps = _winnow_fingerprints(spark, sf_dir).select(
+        "doc_id", F.explode_outer("fps").alias("fp")
     )
     # r13 (guide §5 lineage cut, the jaccard_prefix ruling): the
     # fingerprint table feeds the df aggregate AND both sides of the

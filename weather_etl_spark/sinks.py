@@ -28,6 +28,7 @@ import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 from pyspark.storagelevel import StorageLevel
 
 
@@ -41,10 +42,14 @@ def idempotent_append(
 
     Returns the number of rows inserted (the reference returns
     ``cursor.rowcount`` the same way, lambda_function.py:186,190).
+    The sink's keys are read with the batch's own key types, so a sink
+    directory without data files yet reads as empty instead of failing
+    schema inference.
     """
     deduped = new_rows.dropDuplicates(list(key_cols))
     if os.path.exists(sink_path):
-        existing_keys = spark.read.parquet(sink_path).select(*key_cols)
+        key_schema = StructType([new_rows.schema[k] for k in key_cols])
+        existing_keys = spark.read.schema(key_schema).parquet(sink_path)
         to_insert = deduped.join(existing_keys, on=list(key_cols), how="left_anti")
     else:
         to_insert = deduped
