@@ -32,8 +32,9 @@ PULL_ATTRS = frozenset(
 #: "<relpath>::<enclosing function>" -> the bound that keeps the pull
 #: driver-safe at any input scale.
 ALLOWED_PULLS: dict[str, str] = {
-    "operators/llm_dedup.py::_banded_cells": "k cell radii — one row "
-    "per k-means cell, k is a constant of the blocking scheme",
+    "operators/llm_dedup.py::_banded_cells": "k per-cell min cosines "
+    "(the cell radii) — one row per k-means cell, k is a constant of "
+    "the blocking scheme",
     "operators/llm_dedup.py::star_contract": "hybrid union-find "
     "finish — the pull is limit(2^17 + 1): it finishes locally only "
     "when it returns <= 2^17 edges (~2 MB); larger edge sets stay in "

@@ -30,7 +30,8 @@ pytestmark = pytest.mark.full  # adversarial parity sweep (see pytest.ini)
 
 SPECS = load_all()
 
-#: Never-driver-checked embeddings-based rows (queued r8-r10).
+#: Embeddings-based rows: the backlog queued r8-r10 plus every row on
+#: the shared cosine kernel.
 EMBED_OPS = [
     "q_llm_semdedup", "q_llm_embed_truncate", "q_llm_embed_pq",
     "q_llm_hard_negatives", "q_dq_embeddings", "q_llm_retrieval_eval",
@@ -39,6 +40,12 @@ EMBED_OPS = [
     # reads embedding dims 1-2 as coordinates: the one-hot grid plants
     # points EXACTLY on floor(x/eps) cell boundaries
     "q_join_spatial_grid",
+    # rows scored by the shared cosine kernel (functions/exact.py) and
+    # the group-mean vector: a reordered reduction flips a top-k slot or
+    # a threshold exactly on the planted duplicates and mass ties
+    "q_llm_knn", "llm_knn_blocked", "q_llm_cosine_pairs",
+    "llm_cosine_pairs_blocked", "q_llm_embed_dedup",
+    "llm_embed_dedup_blocked", "q_llm_centroid", "llm_doc_embed_cohesion",
 ]
 
 DIM = 64

@@ -216,7 +216,7 @@ def test_banded_pruning_on_planted_clusters(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from weather_etl_spark.operators.llm_dedup import _banded_candidate_pairs
+    from weather_etl_spark.operators.llm_dedup import _banded_cells
 
     rng = np.random.default_rng(7)
     k, n, dim = 8, 200, 16
@@ -247,10 +247,13 @@ def test_banded_pruning_on_planted_clusters(spark, tmp_path):
     pq.write_table(tbl, str(tmp_path / "embeddings.parquet"))
 
     t = 0.45
-    cand = _banded_candidate_pairs(spark, str(tmp_path), t)
-    pairs = {
-        (r["id_lo"], r["id_hi"])
-        for r in cand.select("id_lo", "id_hi").collect()
+    celled, admissible = _banded_cells(spark, str(tmp_path), t)
+    cell = {r["vec_id"]: r["cell"] for r in celled.collect()}
+    pairs = {  # candidates: every id pair in an admissible cell pair
+        (i, j)
+        for i in range(n)
+        for j in range(i + 1, n)
+        if (cell[i], cell[j]) in admissible
     }
     total = n * (n - 1) // 2
     assert len(pairs) < 0.5 * total, (
@@ -267,6 +270,134 @@ def test_banded_pruning_on_planted_clusters(spark, tmp_path):
     assert qualifying, "fixture has no qualifying pairs — test is vacuous"
     missed = qualifying - pairs
     assert not missed, f"banding dropped {len(missed)} qualifying pairs"
+
+
+def test_cosine_kernel_is_duckdb_bit_identical():
+    """functions/exact's numpy cosines equal DuckDB's
+    list_cosine_similarity to the last bit, up to DuckDB's clamp to
+    [-1, 1] (np.dot/BLAS or np.sum would reorder the reduction and
+    break this on some pairs) — including planted duplicates (1.0),
+    sign flips (-1.0) and one-hot ties (0.0)."""
+    import duckdb
+    import numpy as np
+
+    from weather_etl_spark.functions.exact import cosine_matrix, cosine_rows
+
+    rng = np.random.default_rng(5)
+    a = rng.standard_normal((40, 64)).astype(np.float32)
+    a[1], a[2] = a[0], -a[0]
+    a[4:8] = np.eye(4, 64)
+    a = a.astype(np.float64)
+    b = a[::-1].copy()
+    duck = np.array(
+        duckdb.execute(
+            "SELECT [[list_cosine_similarity(x, y) FOR y IN $2] FOR x IN $1]",
+            [a.tolist(), b.tolist()],
+        ).fetchone()[0]
+    )
+    assert np.array_equal(np.clip(cosine_matrix(a, b), -1.0, 1.0), duck)
+    assert np.array_equal(
+        np.clip(cosine_rows(a, b), -1.0, 1.0), np.diagonal(duck)
+    )
+
+
+def test_assign_cell_matches_struct_max_expression(spark):
+    """The shared Arrow cell assignment picks exactly the cell the Column
+    expression it replaced picks, ``array_max(array(struct(cosine(x,
+    c_i), i), ...))``: duplicate centroids tie to the HIGHER cell id; a
+    zero vector's cosines are all NULL (x / 0) and tie to the last cell;
+    a zero centroid's NULL ranks lowest and a NaN centroid's NaN
+    greatest.  The winning cosine is bit-identical (NaN comes back NULL,
+    as every pandas UDF returns it)."""
+    import math
+    import random
+
+    from weather_etl_spark.operators.llm_vector import assign_cell, cosine
+
+    rng = random.Random(11)
+    dim = 8
+
+    def rand():
+        return [rng.gauss(0.0, 1.0) for _ in range(dim)]
+
+    b0, b1, b2 = rand(), rand(), rand()
+    zero, nan = [0.0] * dim, [float("nan")] + b2[1:]
+    vecs = [zero, b0, b1, b2] + [rand() for _ in range(60)]
+    df = spark.createDataFrame(
+        list(enumerate(vecs)), "id int, v array<float>"
+    )
+    planted = [  # (centroids, cells of the vectors zero, b0, b1)
+        # duplicates 0 = 2 and 1 = 4 tie to the higher id; the zero
+        # vector's all-NULL cosines tie to the last cell
+        ([b0, b1, list(b0), b2, list(b1)], (4, 2, 4)),
+        # a zero centroid never wins
+        ([zero, b0, b1], (2, 1, 2)),
+        # a NaN centroid always wins
+        ([b0, nan, b1], (1, 1, 1)),
+    ]
+    for centroids, want_cells in planted:
+        ref = F.array_max(
+            F.array(
+                *[
+                    F.struct(
+                        cosine(
+                            F.col("v"),
+                            F.array(*[F.lit(float(x)) for x in c]),
+                        ).alias("cos"),
+                        F.lit(i).alias("cell"),
+                    )
+                    for i, c in enumerate(centroids)
+                ]
+            )
+        )
+        rows = df.select(
+            "id", ref.alias("ref"), assign_cell(centroids)("v").alias("got")
+        ).collect()
+        assert len(rows) == len(vecs)
+        for r in rows:
+            assert r["got"]["cell"] == r["ref"]["cell"], (centroids, r)
+            want, got = r["ref"]["cos"], r["got"]["cos"]
+            assert got == want or (
+                got is None and (want is None or math.isnan(want))
+            ), (centroids, r)
+        cells = {r["id"]: r["got"]["cell"] for r in rows}
+        assert (cells[0], cells[1], cells[2]) == want_cells, centroids
+
+
+def test_banded_dedup_exact_with_zero_vectors(spark, tmp_path):
+    """A zero vector has no direction: its cosines are NULL, so it must
+    neither pair with anything nor break the banding bound for the
+    other vectors.  Planted as the LOWEST vec_id it is also a k-means
+    seed (a zero centroid).  The banded rows must still equal their
+    brute-force twins."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(3)
+    base = [rng.normal(size=16) for _ in range(150)]
+    vecs = [np.zeros(16), np.zeros(16)] + base + [
+        base[i] + 0.05 * rng.normal(size=16) for i in range(20)
+    ]
+    tbl = pa.table(
+        {
+            "vec_id": pa.array(range(len(vecs)), pa.int64()),
+            "embedding": pa.array(
+                [[float(x) for x in v] for v in vecs],
+                pa.list_(pa.float32()),
+            ),
+            "label": pa.array([i % 7 for i in range(len(vecs))], pa.int32()),
+        }
+    )
+    pq.write_table(tbl, str(tmp_path / "embeddings.parquet"))
+    for brute, banded in (
+        ("q_llm_embed_dedup", "llm_embed_dedup_blocked"),
+        ("q_llm_cosine_pairs", "llm_cosine_pairs_blocked"),
+    ):
+        want = sorted(SPECS[brute].fn(spark, str(tmp_path)).collect())
+        got = sorted(SPECS[banded].fn(spark, str(tmp_path)).collect())
+        assert len(want) >= 20, (brute, len(want))  # planted near-dups
+        assert got == want, banded
 
 
 def test_dedup_components_long_chain(spark, tmp_path):

@@ -11,10 +11,14 @@ DECIMAL scales: 2 for money columns, 6 for the (1 - discount) /
 realistic double domains while keeping product precision within
 Spark's 38-digit cap (no allowPrecisionLoss truncation, which would
 diverge from DuckDB).
+
+The same portability rule covers embedding similarity: every numpy
+cosine goes through :func:`ltr_dot`, whose reduction order is DuckDB's.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -53,6 +57,56 @@ def md5_prefix_int(c: Column | str, digits: int) -> Column:
     return F.conv(
         F.substring(F.md5(_col(c).cast("string")), 1, digits), 16, 10
     ).cast("bigint")
+
+
+def ltr_dot(
+    a: np.ndarray, b: np.ndarray, product=np.multiply
+) -> np.ndarray:
+    """``product(a[:, 0], b[:, 0]) + product(a[:, 1], b[:, 1]) + ...``:
+    the engine's one embedding reduction, the kernel under
+    :func:`cosine_rows` and :func:`cosine_matrix`.
+
+    FP contract: the dimension axis (axis 1) is accumulated strictly
+    left to right, each term rounded to double before it is added —
+    the loop order of DuckDB's ``list_cosine_similarity`` and of the
+    Column ``cosine()`` fold.  That order is what makes numpy scores
+    bit-identical to both (DuckDB then clamps to [-1, 1]), so rows
+    ranked, thresholded or tie-broken on them can sit under an exact
+    oracle.  Vectorizing over the OTHER axes (rows with
+    ``np.multiply``, row pairs with ``np.multiply.outer``) never
+    reorders a sum; ``np.dot``/``matmul`` (BLAS: blocked,
+    SIMD-reordered) and ``np.sum`` (pairwise) would.
+    """
+    acc = product(a[:, 0], b[:, 0])
+    for i in range(1, a.shape[1]):
+        acc += product(a[:, i], b[:, i])
+    return acc
+
+
+def ltr_norm(a: np.ndarray) -> np.ndarray:
+    """L2 norm of each row of ``a`` (:func:`ltr_dot` order)."""
+    return np.sqrt(ltr_dot(a, a))
+
+
+def cosine_rows(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """Cosine of each row pair ``(a[i], b[i])``."""
+    return ltr_dot(a, b) / (ltr_norm(a) * ltr_norm(b))
+
+
+def cosine_matrix(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """The ``len(a) x len(b)`` cosines of every row of ``a`` against
+    every row of ``b``, by dimension-major outer-product accumulation
+    (memory: one ``len(a) x len(b)`` block — chunk ``a`` to bound it)."""
+    return ltr_dot(a, b, np.multiply.outer) / np.multiply.outer(
+        ltr_norm(a), ltr_norm(b)
+    )
+
+
+def f64_matrix(vectors) -> np.ndarray:
+    """A pandas Series of equal-length arrays as an ``n x dim`` float64
+    matrix (float32 payloads widen exactly, as ``CAST(x AS DOUBLE)``
+    does); ``vectors`` must be non-empty."""
+    return np.stack(vectors.to_numpy()).astype(np.float64)
 
 
 def round4(c: Column, alias: str) -> Column:

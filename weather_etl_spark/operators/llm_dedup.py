@@ -29,6 +29,8 @@ from weather_etl_spark.checkpoints import (
     tracked_local_checkpoint,
 )
 from weather_etl_spark.functions.exact import (
+    cosine_matrix,
+    f64_matrix,
     md5_prefix_int,
     ratio_round4_sql,
     signed_ratio_round_sql,
@@ -536,9 +538,8 @@ FROM pairs GROUP BY vec_id
     "min-id-wins reduction per bucket.",
 )
 def q_llm_embed_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from weather_etl_spark.operators.llm_vector import _make_cosine_pandas
+    from weather_etl_spark.operators.llm_vector import cosine_pandas
 
-    cos = _make_cosine_pandas()
     emb = read_table(spark, sf_dir, "embeddings")
     a = emb.select("vec_id", F.col("embedding").alias("ea"))
     b = emb.select(
@@ -546,7 +547,7 @@ def q_llm_embed_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         a.join(b, F.col("other_id") < F.col("vec_id"))
-        .filter(cos(F.col("ea"), F.col("eb")) > 0.45)
+        .filter(cosine_pandas(F.col("ea"), F.col("eb")) > 0.45)
         .groupBy("vec_id")
         .agg(
             F.min("other_id").alias("dup_of"),
@@ -600,82 +601,6 @@ def llm_embed_dedup_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _make_assign_dist(centroids: list[list[float]], reps: list[list[float]]):
-    """Arrow-vectorized (cell, dist) assignment, IEEE-identical to the
-    HOF expression pair it replaces (r12):
-
-    - ``cell``  = argmax over k of cosine(x, centroid_i), computed with
-      the strict left-to-right dimension accumulation of :func:`dot`/
-      :func:`norm2`; ties and NaN follow Spark's ``array_max(struct)``
-      ordering (NaN ranks greatest, ties resolve to the higher cell id).
-    - ``dist``  = sqrt(2 - 2 * cosine(x, reps[cell])) against the
-      unit-normalized representative of the assigned cell.
-
-    Assignment/dist feed only the pruning geometry (radii, admissible
-    cell pairs) so even an ulp of drift could never change declared
-    outputs — bit-identity is kept anyway so the banding state is
-    reproducible against the r11 lineage.
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    C = np.asarray(centroids, dtype=np.float64)  # k x dim
-    R = np.asarray(reps, dtype=np.float64)       # k x dim
-
-    def _ltr_rows(m: "np.ndarray") -> "np.ndarray":
-        acc = m[:, 0].copy()
-        for i in range(1, m.shape[1]):
-            acc += m[:, i]
-        return acc
-
-    def _ltr_scalar(v: "np.ndarray") -> float:
-        acc = 0.0
-        for x in v:
-            acc += float(x) * float(x)
-        return acc
-
-    import math
-
-    cnorm = np.array([math.sqrt(_ltr_scalar(c)) for c in C])
-    rnorm = np.array([math.sqrt(_ltr_scalar(r)) for r in R])
-
-    from pyspark.sql.pandas.functions import PandasUDFType
-
-    @pandas_udf("cell int, dist double", PandasUDFType.SCALAR)
-    def assign_dist(a):
-        if len(a) == 0:
-            return pd.DataFrame({
-                "cell": pd.Series(dtype="int32"),
-                "dist": pd.Series(dtype="float64"),
-            })
-        m = np.stack(a.to_numpy()).astype(np.float64)  # n x dim
-        nx = np.sqrt(_ltr_rows(m * m))
-        # cosine vs every centroid, dimension-major left-to-right
-        cos = np.empty((m.shape[0], C.shape[0]))
-        for i in range(C.shape[0]):
-            cos[:, i] = _ltr_rows(m * C[i]) / (nx * cnorm[i])
-        # Spark struct-max order: NaN greatest, tie -> higher cell id
-        key = np.where(np.isnan(cos), np.inf, cos)
-        best = key.max(axis=1, keepdims=True)
-        is_best = key == best
-        k = C.shape[0]
-        cell = (k - 1) - np.argmax(is_best[:, ::-1], axis=1)
-        cos_rep = np.empty(m.shape[0])
-        for i in range(k):
-            sel = cell == i
-            if sel.any():
-                ms = m[sel]
-                cos_rep[sel] = _ltr_rows(ms * R[i]) / (nx[sel] * rnorm[i])
-        dist = np.sqrt(2.0 - 2.0 * cos_rep)
-        return pd.DataFrame({
-            "cell": pd.Series(cell.astype("int32")),
-            "dist": pd.Series(dist),
-        })
-
-    return assign_dist
-
-
 def _banded_cells(
     spark: SparkSession, sf_dir: str, t: float, k: int = 8, iters: int = 1
 ):
@@ -688,13 +613,18 @@ def _banded_cells(
     empty corpus (A12 short-circuit).
 
     Clustering quality affects only pruning, never correctness, so one
-    Lloyd iteration suffices; the (vec_id, cell) assignment is computed
-    ONCE and localCheckpoint'd — the radius pass and every consumer
-    reuse it instead of re-evaluating k cosine assignments per row.
+    Lloyd iteration suffices; the (vec_id, cell, cos) assignment is
+    computed ONCE by the Arrow-vectorized ``assign_cell`` (r12: the
+    interpreted HOF cosine tree it replaced cost 12.3 s of CPU at sf0.1)
+    and localCheckpoint'd — the radius pass and every consumer reuse it
+    instead of re-evaluating k cosines per row.
     """
     import numpy as np
 
-    from weather_etl_spark.operators.llm_vector import lloyd_kmeans
+    from weather_etl_spark.operators.llm_vector import (
+        assign_cell,
+        lloyd_kmeans,
+    )
 
     r = float(np.sqrt(2.0 - 2.0 * t))
 
@@ -704,104 +634,45 @@ def _banded_cells(
         if not centroids:  # empty corpus -> no cells, no pairs (A12)
             return None
         k = len(centroids)  # lloyd_kmeans clamps k on tiny corpora
-        # Representatives live on the unit sphere (cosine-threshold
-        # geometry); assignment by max cosine is scale-invariant so raw
-        # centroids serve as assignment anchors unchanged.
-        reps = np.array(centroids, dtype=np.float64)
-        reps /= np.linalg.norm(reps, axis=1, keepdims=True)
-
-        # r12 (guide §4.2): the previous shape computed `cell` with the
-        # interpreted HOF cosine against all k centroid literals, then
-        # `dist` with ANOTHER HOF cosine against a dynamically-selected
-        # literal — Catalyst inlines the assignment tree into the dist
-        # expression, so the checkpoint stage evaluated the whole k-way
-        # cosine tree twice per row, fully interpreted (measured at
-        # sf0.1: 12.3 s CPU in the single checkpoint task).  One
-        # Arrow-vectorized pandas UDF now computes (cell, dist) per
-        # batch with the SAME left-to-right dimension accumulation as
-        # cosine()/_make_cosine_pandas, so cell ids and dists are
-        # bit-identical (ties and NaN ranking emulated: Spark's struct
-        # max orders NaN last/greatest, ties pick the higher cell id).
-        assign_dist = _make_assign_dist(centroids, [list(r) for r in reps])
+        assign = assign_cell(centroids)
         celled = (
-            emb.withColumn("ad", assign_dist(F.col("embedding")))
-            .select(
-                "vec_id",
-                "embedding",
-                F.col("ad.cell").alias("cell"),
-                F.col("ad.dist").alias("dist"),
-            )
+            emb.withColumn("a", assign(F.col("embedding")))
+            .select("vec_id", "embedding", "a.cell", "a.cos")
             .localCheckpoint()
         )
     finally:
         emb.unpersist()
+    # Radius = max unit-sphere distance sqrt(2 - 2 cos) from a member to
+    # its centroid direction, i.e. at the member's MIN cosine.  min()
+    # skips NULL cosines (zero or NaN vectors, which never qualify); a
+    # cell of only those gets no bound (inf), and a zero/NaN centroid's
+    # NaN distances pass the admissible test below: pruning drops only
+    # what the bound provably rules out.
     radius_rows = (
-        celled.groupBy("cell").agg(F.max("dist").alias("radius")).collect()
+        celled.groupBy("cell").agg(F.min("cos").alias("cos")).collect()
     )
     radii = np.zeros(k)
     for row in radius_rows:
-        radii[row["cell"]] = float(row["radius"])
+        c = row["cos"]
+        radii[row["cell"]] = (
+            np.inf if c is None else np.sqrt(max(0.0, 2.0 - 2.0 * c))
+        )
 
-    # Admissible ordered cell pairs (k x k driver-side — bounded).
-    # 1e-9 slack absorbs FP rounding drift between the Spark-side dist
-    # column and the numpy-side cd; widening is pruning-only, so it can
-    # never drop a qualifying pair.
+    # Admissible ordered cell pairs (a bounded k x k list), over the
+    # unit-normalized centroids.  1e-9 slack absorbs FP rounding
+    # drift between the Spark-side cosines and the numpy-side cd;
+    # widening is pruning-only, so it can never drop a qualifying pair.
+    reps = np.array(centroids, dtype=np.float64)
+    with np.errstate(invalid="ignore"):  # a zero centroid -> NaN row
+        reps /= np.linalg.norm(reps, axis=1, keepdims=True)
     cd = np.linalg.norm(reps[:, None, :] - reps[None, :, :], axis=2)
     admissible = [
         (int(i), int(j))
         for i in range(k)
         for j in range(k)
-        if cd[i, j] <= r + radii[i] + radii[j] + 1e-9
+        if not cd[i, j] > r + radii[i] + radii[j] + 1e-9
     ]
     return celled.select("vec_id", "embedding", "cell"), admissible
-
-
-def _banded_candidate_pairs(
-    spark: SparkSession, sf_dir: str, t: float, k: int = 8, iters: int = 1
-) -> DataFrame:
-    """Candidate PAIR-ROW generator over the banding state: every
-    ordered pair (id_lo < id_hi) whose cells the triangle inequality
-    cannot rule out for cosine > t — a PROVABLE superset of the
-    qualifying pairs, at sum(|c_i|*|c_j|) admissible-pair cost instead
-    of n^2/2.  Columns: id_lo, e_lo, id_hi, e_hi.
-
-    This shape MATERIALIZES one row (with both embedding payloads) per
-    candidate pair; the declared operators score blocks instead via
-    :func:`_banded_qualifying_pairs`.  Kept for the planted-cluster
-    losslessness test, which asserts on the candidate SET itself.
-    """
-    state = _banded_cells(spark, sf_dir, t, k, iters)
-    if state is None:
-        emb = read_table(spark, sf_dir, "embeddings")
-        lo = emb.select(
-            F.col("vec_id").alias("id_lo"),
-            F.col("embedding").alias("e_lo"),
-        ).limit(0)
-        hi = emb.select(
-            F.col("vec_id").alias("id_hi"),
-            F.col("embedding").alias("e_hi"),
-        ).limit(0)
-        return lo.crossJoin(hi)
-    celled, admissible = state
-    pairs_df = spark.createDataFrame(admissible, "ca int, cb int")
-
-    lo = celled.select(
-        F.col("vec_id").alias("id_lo"),
-        F.col("embedding").alias("e_lo"),
-        F.col("cell").alias("cell_lo"),
-    )
-    hi = celled.select(
-        F.col("vec_id").alias("id_hi"),
-        F.col("embedding").alias("e_hi"),
-        F.col("cell").alias("cell_hi"),
-    )
-    return lo.join(
-        F.broadcast(pairs_df), F.col("cell_lo") == F.col("ca")
-    ).join(
-        hi,
-        (F.col("cell_hi") == F.col("cb"))
-        & (F.col("id_lo") < F.col("id_hi")),
-    )
 
 
 def _banded_qualifying_pairs(
@@ -812,8 +683,8 @@ def _banded_qualifying_pairs(
     cell pair scores the |c_a| x |c_b| block in numpy and emits ONLY
     the qualifying pairs.  Columns: id_lo, id_hi, cos_raw.
 
-    Versus the per-pair path (_banded_candidate_pairs + pandas-UDF
-    cosine filter) nothing pair-shaped is ever shuffled or
+    Versus a per-pair path (one candidate row per admissible pair +
+    pandas-UDF cosine filter) nothing pair-shaped is ever shuffled or
     materialized: the r7 profile at sf0.1 showed that path spending
     10.6 s of its 14.6 s total building and scoring 1,999,000
     candidate rows of 2 x 64 doubles each (the near-orthogonal fixture
@@ -821,12 +692,8 @@ def _banded_qualifying_pairs(
     admissible pair of its cell (<= k copies) and scores blocks with
     vectorized dimension-major accumulation.
 
-    FP contract: bit-identical to _make_cosine_pandas and DuckDB's
-    list_cosine_similarity loop.  The dot accumulation iterates the
-    DIMENSION axis left-to-right over rank-1 outer products, so every
-    pair's partial sums see the exact rounding order of the scalar
-    loop; np.matmul/BLAS (blocked, SIMD-reordered reductions) would
-    not guarantee that.
+    Scores come from ``functions/exact.cosine_matrix``, bit-identical
+    to ``cosine_pandas`` and DuckDB's list_cosine_similarity loop.
     """
     import numpy as np
     import pandas as pd
@@ -870,41 +737,29 @@ def _banded_qualifying_pairs(
         .select("pid_hi", "hi_id", "hi_emb")
     )
     thr = float(t)
+    empty = pd.DataFrame(
+        {
+            "id_lo": pd.Series(dtype="int64"),
+            "id_hi": pd.Series(dtype="int64"),
+            "cos_raw": pd.Series(dtype="float64"),
+        }
+    )
 
     def score(left: "pd.DataFrame", right: "pd.DataFrame") -> "pd.DataFrame":
         if len(left) == 0 or len(right) == 0:
-            return pd.DataFrame(
-                {
-                    "id_lo": pd.Series(dtype="int64"),
-                    "id_hi": pd.Series(dtype="int64"),
-                    "cos_raw": pd.Series(dtype="float64"),
-                }
-            )
+            return empty
         ida = left["lo_id"].to_numpy()
         idb = right["hi_id"].to_numpy()
-        ma = np.stack(left["lo_emb"].to_numpy()).astype(np.float64)
-        mb = np.stack(right["hi_emb"].to_numpy()).astype(np.float64)
-
-        def _ltr(m: "np.ndarray") -> "np.ndarray":
-            acc = m[:, 0].copy()
-            for i in range(1, m.shape[1]):
-                acc += m[:, i]
-            return acc
-
-        na = np.sqrt(_ltr(ma * ma))
-        nb = np.sqrt(_ltr(mb * mb))
+        ma = f64_matrix(left["lo_emb"])
+        mb = f64_matrix(right["hi_emb"])
         frames = []
         # Row-chunk the left block so task memory is bounded by
         # CHUNK x |c_b| doubles, not |c_a| x |c_b| (100 TB posture;
         # oversized CELLS are bounded separately — see scale_notes).
         chunk = 4096
         for s in range(0, len(ida), chunk):
-            mac, idac, nac = ma[s : s + chunk], ida[s : s + chunk], na[s : s + chunk]
-            # dimension-major left-to-right accumulation (see docstring)
-            dots = np.multiply.outer(mac[:, 0], mb[:, 0])
-            for i in range(1, mac.shape[1]):
-                dots += np.multiply.outer(mac[:, i], mb[:, i])
-            cos = dots / np.multiply.outer(nac, nb)
+            idac = ida[s : s + chunk]
+            cos = cosine_matrix(ma[s : s + chunk], mb)
             mask = (cos > thr) & (idac[:, None] < idb[None, :])
             li, ri = np.nonzero(mask)
             if len(li):
@@ -917,15 +772,7 @@ def _banded_qualifying_pairs(
                         }
                     )
                 )
-        if not frames:
-            return pd.DataFrame(
-                {
-                    "id_lo": pd.Series(dtype="int64"),
-                    "id_hi": pd.Series(dtype="int64"),
-                    "cos_raw": pd.Series(dtype="float64"),
-                }
-            )
-        return pd.concat(frames, ignore_index=True)
+        return pd.concat(frames, ignore_index=True) if frames else empty
 
     return (
         lo.groupBy("pid_lo")

@@ -11,11 +11,13 @@
 - IVF ANN with a deterministic DataFrame-native Lloyd quantizer,
 - per-label centroids (posexplode/agg/reassemble).
 
-Two cosine implementations with IDENTICAL IEEE arithmetic (strict
-left-to-right reduction over the dimension axis): the higher-order-
-function form (JVM, zero Python) and the Arrow pandas-UDF form
-(vectorized across pairs, ~50x faster on O(n²) pair scoring). Both
-match DuckDB's accumulation, so either can sit under an exact oracle.
+Two cosine implementations with IDENTICAL IEEE arithmetic: the
+higher-order-function :func:`cosine` (JVM, zero Python) and the numpy
+kernel ``functions/exact.cosine_rows``/``cosine_matrix`` under every
+Arrow batch (pandas UDFs, mapInPandas, applyInPandas; ~50x faster on
+O(n²) pair scoring). Both reduce the dimension axis strictly left to
+right, as DuckDB does, so either can sit under an exact oracle (FP
+contract: ``functions/exact.ltr_dot``).
 
 Scale notes (100 TB): probe sets/matrices are broadcast, so every kNN
 variant is a single scan of the candidate side (no n² shuffle); LSH
@@ -25,11 +27,18 @@ both is measured against brute force in the tests.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from weather_etl_spark.functions.exact import (
+    cosine_matrix,
+    cosine_rows,
     decimal_mean_round4_sql,
+    f64_matrix,
+    ltr_norm,
     ratio_round4_sql,
     signed_ratio_round_sql,
 )
@@ -60,37 +69,70 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm2(a) * norm2(b))
 
 
-def _make_cosine_pandas():
-    """Arrow-vectorized cosine with IEEE arithmetic IDENTICAL to
-    :func:`cosine` (and DuckDB's accumulation loop): each reduction is a
-    strict left-to-right sum over the dimension axis, vectorized across
-    the pair axis. ~50x faster than the interpreted HOF lambdas on
-    O(n²) pair scoring, with bit-identical results so the DuckDB oracle
-    hash still matches."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+@F.pandas_udf(T.DoubleType())
+def cosine_pandas(a: pd.Series, b: pd.Series) -> pd.Series:
+    """Row-pair cosine over Arrow batches: :func:`cosine`'s values from
+    the numpy kernel (``functions/exact.cosine_rows``)."""
+    if len(a) == 0:  # np.stack needs >=1 array; empty batch -> empty
+        return pd.Series([], dtype="float64")
+    return pd.Series(cosine_rows(f64_matrix(a), f64_matrix(b)))
 
-    def _ltr_sum(m: "np.ndarray") -> "np.ndarray":
-        acc = m[:, 0].copy()
-        for i in range(1, m.shape[1]):
-            acc += m[:, i]
-        return acc
 
-    from pyspark.sql.pandas.functions import PandasUDFType
+def assign_cell(centroids: list[list[float]]):
+    """Pandas UDF ``vector -> struct(cell int, cos double)``: the
+    max-cosine centroid and its cosine, exactly as Spark's
+    ``array_max(array(struct(cosine(v, c_i), i), ...))`` picks it — a
+    zero-norm cosine is ``x / 0`` = NULL and ranks lowest, a NaN one
+    (NaN elements) ranks greatest, an exact tie goes to the higher cell
+    id."""
+    cents = np.asarray(centroids, dtype=np.float64)  # k x dim
+    cnorm = ltr_norm(cents)
+    k = len(cents)
 
-    @pandas_udf("double", PandasUDFType.SCALAR)
-    def cosine_pandas(a, b):
-        if len(a) == 0:  # np.stack needs >=1 array; empty batch -> empty
-            return pd.Series([], dtype="float64")
-        ma = np.stack(a.to_numpy()).astype(np.float64)
-        mb = np.stack(b.to_numpy()).astype(np.float64)
-        dots = _ltr_sum(ma * mb)
-        na = np.sqrt(_ltr_sum(ma * ma))
-        nb = np.sqrt(_ltr_sum(mb * mb))
-        return pd.Series(dots / (na * nb))
+    @F.pandas_udf("cell int, cos double")
+    def assign(v: pd.Series) -> pd.DataFrame:
+        if len(v) == 0:
+            return pd.DataFrame({
+                "cell": pd.Series(dtype="int32"),
+                "cos": pd.Series(dtype="float64"),
+            })
+        m = f64_matrix(v)
+        cos = cosine_matrix(m, cents)  # n x k
+        key = np.where(np.isnan(cos), np.inf, cos)
+        key[np.multiply.outer(ltr_norm(m), cnorm) == 0] = -np.inf
+        is_best = key == key.max(axis=1, keepdims=True)
+        cell = (k - 1) - np.argmax(is_best[:, ::-1], axis=1)
+        return pd.DataFrame({
+            "cell": cell.astype("int32"),
+            "cos": cos[np.arange(len(cell)), cell],  # NaN -> NULL
+        })
 
-    return cosine_pandas
+    return assign
+
+
+def group_mean_vector(
+    df: DataFrame, key: str, vec_col: str, out: str, scale: int | None = None
+) -> DataFrame:
+    """``(key, out)``: the element-wise mean of the array column
+    ``vec_col`` over each ``key`` group, as a double array in position
+    order — posexplode, ``avg`` per (key, pos), optionally ``round(.,
+    scale)`` per element, reassemble.  The shuffle carries keys x dim
+    partial sums, independent of corpus size."""
+    m = F.avg(F.col("v").cast("double"))
+    if scale is not None:
+        m = F.round(m, scale)
+    return (
+        df.select(key, F.posexplode(vec_col).alias("pos", "v"))
+        .groupBy(key, "pos")
+        .agg(m.alias("m"))
+        .groupBy(key)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "m"))),
+                lambda s: s.getField("m"),
+            ).alias(out)
+        )
+    )
 
 
 @register(
@@ -118,10 +160,9 @@ def q_llm_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = emb.select(
         F.col("vec_id").alias("id_b"), F.col("embedding").alias("eb")
     )
-    cos = _make_cosine_pandas()
     return (
         a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("cos_raw", cos(F.col("ea"), F.col("eb")))
+        .withColumn("cos_raw", cosine_pandas(F.col("ea"), F.col("eb")))
         .filter(F.col("cos_raw") > 0.45)
         .select("id_a", "id_b", F.round("cos_raw", 4).alias("cos"))
     )
@@ -204,22 +245,16 @@ FROM c GROUP BY label
 )
 def q_llm_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = read_table(spark, sf_dir, "embeddings")
-    exploded = emb.select(
-        "label", F.posexplode("embedding").alias("pos", "val")
-    )
-    per_pos = exploded.groupBy("label", "pos").agg(
-        F.round(F.avg(F.col("val").cast("double")), 4).alias("v")
-    )
-    return per_pos.groupBy("label").agg(
+    cents = group_mean_vector(emb, "label", "embedding", "c", scale=4)
+    return cents.select(
+        "label",
         F.array_join(
             F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "v"))),
-                lambda s: F.round(s.getField("v") * 10000)
-                .cast("bigint")
-                .cast("string"),
+                "c",
+                lambda v: F.round(v * 10000).cast("bigint").cast("string"),
             ),
             ",",
-        ).alias("centroid")
+        ).alias("centroid"),
     )
 
 
@@ -239,8 +274,6 @@ def q_llm_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     "with k-means cells — same join shape.",
 )
 def llm_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-
     n_tables, n_bits = 8, 6
     emb = read_table(spark, sf_dir, "embeddings")
     rng = np.random.default_rng(42)
@@ -310,8 +343,8 @@ def lloyd_kmeans(
     emb: DataFrame, k: int, iters: int, vec_col: str = "embedding"
 ) -> list[list[float]]:
     """Deterministic DataFrame-native Lloyd k-means (no RNG: init =
-    the k lowest vec_ids, max-cosine assignment, per-(cell,pos) mean
-    update).
+    the k lowest vec_ids, :func:`assign_cell` max-cosine assignment,
+    :func:`group_mean_vector` update).
 
     Only k x dim floats ever reach the driver per iteration — the same
     bounded-collect contract as MLlib KMeans. Shared by llm_ann_ivf
@@ -331,54 +364,26 @@ def lloyd_kmeans(
     centroids = [[float(x) for x in r[vec_col]] for r in init]
     for _ in range(iters):
         assigned = emb.withColumn(
-            "cell", _assign_cell(F.col(vec_col), centroids)
+            "cell", assign_cell(centroids)(F.col(vec_col)).getField("cell")
         )
-        per_pos = (
-            assigned.select("cell", F.posexplode(vec_col).alias("pos", "v"))
-            .groupBy("cell", "pos")
-            .agg(F.avg(F.col("v").cast("double")).alias("m"))
-        )
-        rows = (
-            per_pos.groupBy("cell")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                    lambda s: s.getField("m"),
-                ).alias("centroid")
-            )
-            .collect()  # k rows x dim floats — bounded, size-independent
-        )
+        rows = group_mean_vector(
+            assigned, "cell", vec_col, "centroid"
+        ).collect()  # k rows x dim floats — bounded, size-independent
         new = {r["cell"]: [float(x) for x in r["centroid"]] for r in rows}
         centroids = [new.get(i, centroids[i]) for i in range(k)]
     return centroids
-
-
-def _assign_cell(emb_col: Column, centroids: list[list[float]]) -> Column:
-    """cell id of the max-cosine centroid (deterministic: ties -> higher
-    cell id via struct comparison, but exact FP ties don't occur here)."""
-    scored = F.array(
-        *[
-            F.struct(
-                cosine(
-                    emb_col, F.array(*[F.lit(float(x)) for x in c])
-                ).alias("cos"),
-                F.lit(i).alias("cell"),
-            )
-            for i, c in enumerate(centroids)
-        ]
-    )
-    return F.array_max(scored).getField("cell")
 
 
 @register(
     "llm_ann_ivf",
     oracle=None,  # approximate; recall vs brute force asserted in tests
     doc="IVF (inverted-file) approximate nearest neighbors: deterministic "
-    "Lloyd k-means (k=8, init = vec_id 1..8, 3 iterations, all in "
-    "DataFrame ops) trains the coarse quantizer; every vector is "
-    "assigned to its max-cosine cell; each probe searches only its "
-    "nprobe=2 nearest cells; exact cosine top-5 within the candidate "
-    "union (same probe set and output schema as q_llm_knn).",
+    "Lloyd k-means (k=8, init = vec_id 1..8, 3 iterations: Arrow-batch "
+    "assignment, DataFrame mean update) trains the coarse quantizer; "
+    "every vector is assigned to its max-cosine cell; each probe "
+    "searches only its nprobe=2 nearest cells; exact cosine top-5 "
+    "within the candidate union (same probe set and output schema as "
+    "q_llm_knn).",
     scale_notes="Training aggregates k x dim floats to the driver per "
     "iteration (constant, corpus-size independent — the same contract "
     "as MLlib KMeans). Search shuffles only same-cell candidates: cost "
@@ -401,7 +406,9 @@ def llm_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # --- search: candidates = union of the probe's nprobe nearest cells ---
-    celled = emb.withColumn("cell", _assign_cell(F.col("embedding"), centroids))
+    celled = emb.withColumn(
+        "cell", assign_cell(centroids)(F.col("embedding")).getField("cell")
+    )
     probe_cells = F.slice(
         F.array_sort(
             F.array(
@@ -483,8 +490,6 @@ WHERE rn <= 5
     "bounded like IVF centroids).",
 )
 def llm_knn_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-
     k = 5
     emb = read_table(spark, sf_dir, "embeddings")
     probe_rows = (
@@ -502,29 +507,21 @@ def llm_knn_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
         dtype=np.float64,
     )
 
-    def _ltr(m):
-        acc = m[:, 0].copy()
-        for i in range(1, m.shape[1]):
-            acc += m[:, i]
-        return acc
-
     def score_blocks(batches):
-        import pandas as pd
-
-        p_norm = np.sqrt(_ltr(probe_mat * probe_mat))
         for pdf in batches:
             if not len(pdf):
                 continue
             ids = pdf["vec_id"].to_numpy()
-            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            v_norm = np.sqrt(_ltr(m * m))
+            cos = cosine_matrix(f64_matrix(pdf["embedding"]), probe_mat)
             out_frames = []
             for pi, pid in enumerate(probe_ids):
-                dots = _ltr(m * probe_mat[pi])
-                cos = dots / (v_norm * p_norm[pi])
                 mask = ids != pid
                 cand = pd.DataFrame(
-                    {"probe_id": pid, "vec_id": ids[mask], "cos_raw": cos[mask]}
+                    {
+                        "probe_id": pid,
+                        "vec_id": ids[mask],
+                        "cos_raw": cos[mask, pi],
+                    }
                 )
                 # Lossless per-block pruning: global top-k is a subset
                 # of the union of block-local top-k.
@@ -585,17 +582,7 @@ def llm_doc_embed_cohesion(spark: SparkSession, sf_dir: str) -> DataFrame:
     de = docs.join(emb, docs["doc_id"] == emb["vec_id"]).select(
         "doc_id", "lang", "embedding"
     )
-    per_pos = de.select(
-        "lang", F.posexplode("embedding").alias("pos", "val")
-    ).groupBy("lang", "pos").agg(
-        F.round(F.avg(F.col("val").cast("double")), 6).alias("m")
-    )
-    cents = per_pos.groupBy("lang").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "m"))),
-            lambda s: s.getField("m"),
-        ).alias("centroid")
-    )
+    cents = group_mean_vector(de, "lang", "embedding", "centroid", scale=6)
     return de.join(F.broadcast(cents), "lang").select(
         "doc_id",
         "lang",
@@ -782,23 +769,12 @@ def q_llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             " s -> cast(s.c as double))"
         ).alias("cv")
     )
-    fold = (
-        "aggregate(zip_with({a}, {b}, (x, y) -> x * y),"
-        " 0D, (acc, x) -> acc + x)"
-    )
     scored = base.join(cent, "bucket").select(
         "vec_id",
         "bucket",
         "emb",
-        (
-            F.expr(fold.format(a="emb", b="cv"))
-            / (
-                F.sqrt(F.expr(fold.format(a="emb", b="emb")))
-                * F.sqrt(F.expr(fold.format(a="cv", b="cv")))
-            )
-        ).alias("c_sim"),
+        cosine(F.col("emb"), F.col("cv")).alias("c_sim"),
     )
-    cos = _make_cosine_pandas()
     x = scored.select(
         F.col("vec_id").alias("x_id"),
         F.col("bucket").alias("bk"),
@@ -814,7 +790,7 @@ def q_llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     nbrs = (
         x.join(y, "bk")
         .filter(F.col("x_id") != F.col("y_id"))
-        .filter(cos(F.col("x_emb"), F.col("y_emb")) > _SEMDEDUP_TAU)
+        .filter(cosine_pandas(F.col("x_emb"), F.col("y_emb")) > _SEMDEDUP_TAU)
         .groupBy("x_id")
         .agg(
             F.count(F.lit(1)).alias("n_dups"),
@@ -1186,15 +1162,7 @@ def q_dq_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = emb.select(
         "label",
         F.size("embedding").alias("dim"),
-        F.round(
-            F.sqrt(
-                F.expr(
-                    f"aggregate({dbl}, CAST(0.0 AS DOUBLE),"
-                    " (a, x) -> a + x * x)"
-                )
-            ),
-            6,
-        )
+        F.round(norm2(F.col("embedding")), 6)
         .cast("decimal(18,6)")
         .alias("nrm"),
         (
@@ -1458,9 +1426,6 @@ FROM ({union}) u ORDER BY probe_id, pick
     "grows; the selection never leaves the executors.",
 )
 def q_llm_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
     emb = read_table(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id").isin(1, 2, 3)).select(
         F.col("vec_id").alias("probe_id"), F.col("embedding").alias("pe")
@@ -1482,21 +1447,11 @@ def q_llm_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("probe_id", "vec_id", "rel", "e")
     )
 
-    def _ltr(m: "np.ndarray") -> "np.ndarray":
-        acc = m[:, 0].copy()
-        for i in range(1, m.shape[1]):
-            acc += m[:, i]
-        return acc
-
-    def mmr(pdf: "pd.DataFrame") -> "pd.DataFrame":
+    def mmr(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        mat = np.stack(pdf["e"].to_numpy()).astype(np.float64)
-        # pairwise cosine, left-to-right reduction (oracle-identical)
-        norms = np.sqrt(_ltr(mat * mat))
+        mat = f64_matrix(pdf["e"])
+        sim = cosine_matrix(mat, mat)  # oracle-identical pairwise cosine
         n = len(pdf)
-        sim = np.empty((n, n))
-        for i in range(n):
-            sim[i] = _ltr(mat[i][None, :] * mat) / (norms[i] * norms)
         rel = pdf["rel"].to_numpy()
         ids = pdf["vec_id"].to_numpy()
         chosen: list[int] = []
@@ -1692,35 +1647,16 @@ def q_llm_prf_expand(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rn0") <= 10)
         .select("probe_id", "vec_id", "rn0")
     )
-    x = emb.select(
-        "vec_id",
-        F.posexplode(F.col("embedding").cast("array<double>")).alias(
-            "pos0", "val"
-        ),
-    ).select("vec_id", (F.col("pos0") + 1).alias("pos"), "val")
-    fb = (
-        r0.join(x, "vec_id")
-        .groupBy("probe_id", "pos")
-        .agg(F.round(F.avg("val"), 6).alias("fbv"))
+    fb = group_mean_vector(
+        r0.join(emb, "vec_id"), "probe_id", "embedding", "fbv", scale=6
     )
-    q2 = (
-        fb.join(F.broadcast(probes), "probe_id")
-        .select(
-            "probe_id",
-            "pos",
-            F.round(
-                0.7 * F.element_at(F.col("pe").cast("array<double>"), F.col("pos"))
-                + 0.3 * F.col("fbv"),
-                6,
-            ).alias("v"),
-        )
-        .groupBy("probe_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "v"))),
-                lambda s: s.getField("v"),
-            ).alias("pe2")
-        )
+    q2 = fb.join(F.broadcast(probes), "probe_id").select(
+        "probe_id",
+        F.zip_with(
+            F.col("pe").cast("array<double>"),
+            "fbv",
+            lambda q, c: F.round(0.7 * q + 0.3 * c, 6),
+        ).alias("pe2"),
     )
     w2 = Window.partitionBy("probe_id").orderBy(
         F.col("cos2").desc(), F.col("vec_id").asc()
@@ -1804,11 +1740,10 @@ def q_llm_align_uniform(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").alias("lb"),
         F.col("embedding").alias("eb"),
     )
-    cos = _make_cosine_pandas()
     pr = a.join(b, F.col("ida") < F.col("idb")).select(
         "la",
         "lb",
-        (2 - 2 * cos(F.col("ea"), F.col("eb"))).alias("d2"),
+        (2 - 2 * cosine_pandas(F.col("ea"), F.col("eb"))).alias("d2"),
     )
     same = F.col("la") == F.col("lb")
     zero = F.lit(0).cast("decimal(20,8)")
@@ -1887,13 +1822,14 @@ def q_llm_hubness(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = emb.select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("eb")
     )
-    cos = _make_cosine_pandas()
     w = Window.partitionBy("qid").orderBy(
         F.col("c").desc(), F.col("cid").asc()
     )
     top5 = (
         a.join(F.broadcast(b), F.col("cid") != F.col("qid"))
-        .select("qid", "cid", cos(F.col("ea"), F.col("eb")).alias("c"))
+        .select(
+            "qid", "cid", cosine_pandas(F.col("ea"), F.col("eb")).alias("c")
+        )
         .withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= 5)
         .select("cid")

@@ -25,12 +25,17 @@ ALLOW_CARTESIAN = frozenset({"q_join_cross"})
 #: by tools/audit_plans.py; every entry carries its bound.
 ALLOW_BNL: dict[str, str] = {
     "q_join_cross": "the operator MEANS cross join (region x nation dims)",
-    "q_filter_ts_cursor": "1-row MAX(ts) cursor aggregate (scans.py:157)",
-    "q_graph_pagerank": "1-row node-count aggregate (graph.py:167,187)",
-    "q_llm_domain_mix": "1-row corpus-total aggregate (llm_prep.py:207)",
+    "q_filter_ts_cursor": "1-row MAX(ts) cursor aggregate "
+    "(operators/scans.py::q_filter_ts_cursor)",
+    "q_graph_pagerank": "1-row node-count aggregate "
+    "(operators/graph.py::pagerank_frame)",
+    "q_llm_domain_mix": "1-row corpus-total aggregate "
+    "(operators/llm_prep.py::q_llm_domain_mix)",
     "q_llm_zipf": "1-row token-total aggregate (llm_prep.py)",
-    "q_llm_tfidf": "1-row n_docs aggregate (llm_text.py:101)",
-    "q_llm_knn": "5-row constant probe matrix (llm_vector.py:156)",
+    "q_llm_tfidf": "1-row n_docs aggregate "
+    "(operators/llm_text.py::q_llm_tfidf)",
+    "q_llm_knn": "5-row constant probe matrix "
+    "(operators/llm_vector.py::q_llm_knn)",
     "q_llm_retrieval_eval": "10-row constant probe panel crossed into "
     "the corpus scan — the q_llm_knn pattern (llm_vector.py)",
     "q_llm_mmr_select": "3-row constant probe set crossed into the "
@@ -66,7 +71,7 @@ ALLOW_BNL: dict[str, str] = {
     "into the pair ledger — the q_filter_ts_cursor pattern; the "
     "positional join itself is the doc_id equi-join (llm_prep.py)",
     "q_time_interp": "bounded generated day axis per the gapfill grid "
-    "(aggregates.py:797)",
+    "(operators/aggregates.py::q_time_interp)",
     "q_llm_cosine_pairs": "deliberate naive all-pairs oracle twin of "
     "llm_cosine_pairs_blocked (SCALE.md §10)",
     "q_llm_align_uniform": "deliberate eval-only all-pairs metric "
