@@ -3,6 +3,9 @@
 from __future__ import annotations
 
 import importlib
+import subprocess
+import sys
+from pathlib import Path
 
 
 def test_entry_smoke(spark):
@@ -17,6 +20,18 @@ def test_every_query_has_callable(spark):
     oracles = mod.oracle_sql()
     assert qs, "no declared queries"
     assert set(oracles) <= set(qs)
+
+
+def test_registry_load_raises_no_user_warning():
+    """Loading the registry builds every module-level UDF; none may warn
+    (a Python UDF with type hints but no declared eval type does). A
+    fresh interpreter, since this session has the registry imported."""
+    subprocess.run(
+        [sys.executable, "-W", "error::UserWarning", "-c",
+         "from weather_etl_spark.registry import load_all; load_all()"],
+        cwd=Path(__file__).resolve().parent.parent,
+        check=True,
+    )
 
 
 def test_datasource_matches_driver_fetch(spark, sf_dir):

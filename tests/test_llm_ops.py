@@ -160,18 +160,6 @@ def test_embed_dedup_greedy_minid(spark, sf_dir):
         assert r["n_near"] == len(near[r["vec_id"]])
 
 
-def test_resize_media_clamps_and_preserves_aspect(spark, sf_dir):
-    from weather_etl_spark.io import read_table
-    from weather_etl_spark.operators.multimodal import (
-        resize_media,
-        to_media_frame,
-    )
-
-    media = to_media_frame(read_table(spark, sf_dir, "documents").limit(50))
-    for r in resize_media(media, 256, 256).collect():
-        assert 0 <= r["out_w"] <= 256 and 0 <= r["out_h"] <= 256
-
-
 def test_image_codec_roundtrip_property():
     """Property: decode(encode(w, h, pixels)) is lossless for BOTH
     formats on arbitrary dimensions — including widths where BMP row

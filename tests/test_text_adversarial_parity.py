@@ -53,6 +53,11 @@ TEXT_OPS = [
     # next-fit prefix sum walks zero-length and giant documents
     "q_llm_rouge", "q_llm_bleu", "q_agg_cohens_kappa",
     "q_layout_compaction",
+    # the multimodal rows index the UTF-8 payload bytes (hex-pair
+    # oracles): mojibake, markup and 1-token docs pin that byte parity
+    "llm_multimodal", "llm_mm_framesample", "llm_mm_decode",
+    "llm_mm_pixel_dedup", "llm_mm_audio_window", "llm_mm_resize",
+    "llm_mm_phash_dedup", "llm_mm_scenechange",
 ]
 # dedupe while preserving order
 TEXT_OPS = list(dict.fromkeys(TEXT_OPS))

@@ -12,8 +12,10 @@ Run:  PYTHONPATH=. python tools/audit_keyless_windows.py [sf_dir]
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from weather_etl_spark.plan_audit import AUDIT_SKIP, keyless_windows
 from weather_etl_spark.registry import load_all

@@ -37,8 +37,10 @@ themselves are never executed.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from weather_etl_spark.plan_audit import (  # noqa: E402
     ALLOW_KEYLESS_WINDOW,

@@ -19,14 +19,15 @@ import json
 import sys
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from weather_etl_spark.plan_audit import AUDIT_SKIP, audit_plan
 from weather_etl_spark.registry import load_all
 from weather_etl_spark.session import get_spark
 
 SF_DIR = "/root/testdata/sf0.01"
-OUT = Path(__file__).resolve().parent.parent / "tests" / "plan_snapshot.json"
+OUT = ROOT / "tests" / "plan_snapshot.json"
 
 
 def main() -> None:

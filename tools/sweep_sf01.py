@@ -6,8 +6,10 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from weather_etl_spark.checkpoints import release_session_checkpoints
 from weather_etl_spark.registry import load_all

@@ -26,7 +26,8 @@ import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 from pyspark.sql import functions as F
 
@@ -36,7 +37,7 @@ from weather_etl_spark.registry import load_all
 from weather_etl_spark.session import get_spark
 
 SRC = "/root/testdata/sf0.1"
-DST = "/root/repo/spark-warehouse/sf1_synth"
+DST = str(ROOT / "spark-warehouse" / "sf1_synth")
 REPLICAS = 10
 
 #: key column -> shift unit derived from that column's own max

@@ -166,9 +166,10 @@ def pagerank_frame(undirected_edges: DataFrame) -> DataFrame:
     # the previous round's blocks are released as soon as the next
     # round is materialized; the invariants stay pinned until the
     # harness's between-queries release.
-    edges, _edge_ids = tracked_local_checkpoint(undirected_edges)
-    outdeg, _deg_ids = tracked_local_checkpoint(
+    edges = undirected_edges.localCheckpoint()
+    outdeg = (
         edges.groupBy("u").agg(F.count(F.lit(1)).alias("outdeg"))
+        .localCheckpoint()
     )
     n = outdeg.agg(F.count(F.lit(1)).alias("n"))
     # The whole loop runs in EXACT bigint micro-units (1e-6 rank
@@ -679,7 +680,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         # next round's degree pass, exactly as the unrolled oracle).
         # The 1-row stats frame is checkpointed EAGERLY so it is
         # materialized before the round's input blocks are released.
-        stats, _stat_ids = tracked_local_checkpoint(
+        stats = (
             keep.agg(F.count(F.lit(1)).cast("bigint").alias("n_nodes"))
             .crossJoin(
                 nxt.agg(
@@ -687,6 +688,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
             .select(F.lit(rnd).alias("round"), "n_nodes", "n_edges")
+            .localCheckpoint()
         )
         out_rows.append(stats)
         release_rdds(spark, prev_ids)

@@ -4,15 +4,28 @@ north-star mandate).
 Treats media as opaque ``binary`` payload columns with typed metadata
 structs, exactly as a 100 TB training-data pipeline would: the bytes
 travel through shuffles/joins untouched; decode / feature-extraction
-runs as Arrow-batched Pandas UDFs over ``mapInPandas``.
+runs executor-side over Arrow record batches.
+
+Every row shares two stages:
+
+- :func:`map_rows` is the family's one batch loop (its only
+  ``mapInPandas``): it calls a per-row generator with each input row's
+  column values and builds one output frame per Arrow batch from the
+  tuples it yields. A registered row selects exactly the columns its
+  generator reads and keeps only its per-row logic.
+- :func:`image_media` is the one image encoder: each document's UTF-8
+  bytes become a ``w x h`` RGB image (``w = len % 31 + 1``,
+  ``h = len * 7 % 17 + 1``, truncated / zero-padded), stored as PPM
+  for even ``doc_id`` and BMP for odd. The decode, pixel-dedup, resize
+  and phash rows decode its payloads.
 
 The container has no image libraries, so the codecs are implemented
 from the PUBLIC file-format specs in pure python: PPM P6 (netpbm
 header + raw RGB) and uncompressed 24-bit BMP (BITMAPINFOHEADER,
 bottom-up BGR rows, 4-byte row padding). `llm_mm_decode` drives a real
-encode -> binary column -> mapInPandas decode round-trip under an
-exact arithmetic oracle; `llm_multimodal` keeps the cheap
-length-derived measurer for the metadata-plumbing contract.
+encode -> binary column -> decode round-trip under an exact arithmetic
+oracle; `llm_multimodal` keeps the cheap length-derived measurer for
+the metadata-plumbing contract.
 
 Scale notes (100 TB): payload bytes dominate IO — keep them in their
 own column (parquet stores columns independently, so metadata-only
@@ -23,20 +36,15 @@ spark.sql.execution.arrow.maxRecordsPerBatch).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from weather_etl_spark.checkpoints import tracked_local_checkpoint
 from weather_etl_spark.io import read_table
 from weather_etl_spark.registry import register
-
-MEDIA_SCHEMA = (
-    "doc_id long, payload binary, "
-    "meta struct<fmt: string, lang: string, n_bytes: long>"
-)
 
 
 def encode_ppm(width: int, height: int, pixels: bytes) -> bytes:
@@ -121,11 +129,23 @@ def decode_image(payload: bytes) -> tuple[str, int, int, bytes]:
     raise ValueError(f"unknown image magic {payload[:2]!r}")
 
 
-def _fake_measure(payload: bytes) -> tuple[int, int]:
-    """Deterministic stand-in for decode: derive (width, height) from
-    the payload length — keeps the full pipeline testable offline."""
-    n = len(payload)
-    return (n % 640, (n * 7) % 480)
+def map_rows(
+    df: DataFrame, fn: Callable[..., Iterable[tuple]], ddl: str
+) -> DataFrame:
+    """The family's one batch loop: ``fn(*row)`` gets each input row's
+    column values (in ``df``'s column order) and yields zero or more
+    output tuples in ``ddl`` column order. Each Arrow batch becomes one
+    pandas frame, built once from every tuple the batch produced;
+    columns are assigned by position."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            yield pd.DataFrame(
+                [out for row in pdf.itertuples(index=False, name=None)
+                 for out in fn(*row)]
+            )
+
+    return df.mapInPandas(run, ddl)
 
 
 def to_media_frame(docs: DataFrame) -> DataFrame:
@@ -142,29 +162,27 @@ def to_media_frame(docs: DataFrame) -> DataFrame:
     )
 
 
-def measure_media(media: DataFrame) -> DataFrame:
-    """mapInPandas feature-extraction stage: batch-iterates Arrow record
-    batches, runs the (stubbed) decoder per payload, emits typed
-    features. This is the A4 columnar-assembly shape re-expressed as a
-    batch-iterator transform."""
+def _doc_pixels(text_bytes: bytes, width: int, height: int) -> bytes:
+    """Deterministic pixel buffer for a document: its own bytes,
+    truncated / zero-padded to exactly width x height x 3."""
+    npix = width * height * 3
+    return (text_bytes[:npix] + b"\x00" * npix)[:npix]
 
-    def measure(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            dims = pdf["payload"].map(_fake_measure)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload_len": pdf["payload"].map(len),
-                    "width": dims.map(lambda d: d[0]),
-                    "height": dims.map(lambda d: d[1]),
-                    "fmt": pdf["meta"].map(lambda m: m["fmt"]),
-                }
-            )
 
-    return media.mapInPandas(
-        measure,
-        schema="doc_id long, payload_len long, width long, height long, "
-        "fmt string",
+def image_media(docs: DataFrame) -> DataFrame:
+    """documents -> (doc_id, payload binary): each text's UTF-8 bytes
+    as a ``len % 31 + 1`` x ``len * 7 % 17 + 1`` RGB image, encoded as
+    PPM for an even ``doc_id`` and as BMP for an odd one."""
+
+    def encode(doc_id: int, text: str) -> Iterator[tuple]:
+        tb = text.encode("utf-8")
+        w = len(tb) % 31 + 1
+        h = (len(tb) * 7) % 17 + 1
+        enc = encode_ppm if doc_id % 2 == 0 else encode_bmp
+        yield doc_id, enc(w, h, _doc_pixels(tb, w, h))
+
+    return map_rows(
+        docs.select("doc_id", "text"), encode, "doc_id long, payload binary"
     )
 
 
@@ -185,33 +203,17 @@ FROM documents
 )
 def llm_multimodal(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
-    return measure_media(to_media_frame(docs))
 
+    def measure(doc_id: int, payload: bytes, meta: dict) -> Iterator[tuple]:
+        # stand-in decoder: (width, height) derived from the payload length
+        n = len(payload)
+        yield doc_id, n, n % 640, (n * 7) % 480, meta["fmt"]
 
-def resize_media(media: DataFrame, max_w: int = 256, max_h: int = 256) -> DataFrame:
-    """mapInPandas resize stage (decoder stubbed): recomputes target
-    dimensions with aspect-preserving clamp arithmetic; a real
-    implementation would also re-encode payload bytes in the same
-    batch loop. Plumbing (schema, batch shape) is the real contract."""
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            dims = pdf["payload"].map(_fake_measure)
-            w = dims.map(lambda d: d[0]).astype("int64")
-            h = dims.map(lambda d: d[1]).astype("int64")
-            # scale = min(max_w/w, max_h/h, 1) in integer-safe form
-            out_w, out_h = [], []
-            for wi, hi in zip(w, h):
-                wi = max(int(wi), 1)
-                hi = max(int(hi), 1)
-                num = min(max_w * hi, max_h * wi, wi * hi)
-                out_w.append(num // hi)
-                out_h.append(num // wi)
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "out_w": out_w, "out_h": out_h}
-            )
-
-    return media.mapInPandas(resize, "doc_id long, out_w long, out_h long")
+    return map_rows(
+        to_media_frame(docs),
+        measure,
+        "doc_id long, payload_len long, width long, height long, fmt string",
+    )
 
 
 @register(
@@ -240,29 +242,17 @@ FROM v
 def llm_mm_framesample(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame_bytes, stride = 100, 5
     docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") <= 50)
-    media = to_media_frame(docs)
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"doc_id": [], "frame_idx": [], "byte_off": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                n_frames = len(payload) // frame_bytes + 1
-                for idx in range(0, n_frames, stride):
-                    rows["doc_id"].append(doc_id)
-                    rows["frame_idx"].append(idx)
-                    rows["byte_off"].append(idx * frame_bytes)
-            yield pd.DataFrame(rows)
+    def sample(doc_id: int, payload: bytes) -> Iterator[tuple]:
+        n_frames = len(payload) // frame_bytes + 1
+        for idx in range(0, n_frames, stride):
+            yield doc_id, idx, idx * frame_bytes
 
-    return media.mapInPandas(
-        sample, "doc_id long, frame_idx long, byte_off long"
+    return map_rows(
+        to_media_frame(docs).select("doc_id", "payload"),
+        sample,
+        "doc_id long, frame_idx long, byte_off long",
     )
-
-
-def _doc_pixels(text_bytes: bytes, width: int, height: int) -> bytes:
-    """Deterministic pixel buffer for a document: its own bytes,
-    truncated / zero-padded to exactly width x height x 3."""
-    npix = width * height * 3
-    return (text_bytes[:npix] + b"\x00" * npix)[:npix]
 
 
 @register(
@@ -306,46 +296,17 @@ FROM v
     "way (SCALE.md §9).",
 )
 def llm_mm_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = (
-        read_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") <= 200)
-        .select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").filter(
+        F.col("doc_id") <= 200
     )
 
-    def encode_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                tb = text.encode("utf-8")
-                w = len(tb) % 31 + 1
-                h = (len(tb) * 7) % 17 + 1
-                pix = _doc_pixels(tb, w, h)
-                enc = encode_ppm if doc_id % 2 == 0 else encode_bmp
-                payloads.append(enc(w, h, pix))
-            yield pd.DataFrame(
-                {"doc_id": pdf["doc_id"], "payload": payloads}
-            )
+    def decode(doc_id: int, payload: bytes) -> Iterator[tuple]:
+        fmt, w, h, pixels = decode_image(payload)
+        yield doc_id, fmt, w, h, len(pixels), sum(pixels)
 
-    media = docs.mapInPandas(encode_stage, "doc_id long, payload binary")
-
-    def decode_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                "doc_id": [], "fmt": [], "width": [], "height": [],
-                "n_pix": [], "pixel_sum": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                fmt, w, h, pixels = decode_image(bytes(payload))
-                rows["doc_id"].append(doc_id)
-                rows["fmt"].append(fmt)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["n_pix"].append(len(pixels))
-                rows["pixel_sum"].append(sum(pixels))
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(
-        decode_stage,
+    return map_rows(
+        image_media(docs),
+        decode,
         "doc_id long, fmt string, width long, height long, "
         "n_pix long, pixel_sum long",
     )
@@ -389,43 +350,18 @@ FROM px GROUP BY width, height, pixhex
     "(w, h, hash) rows shuffle.",
 )
 def llm_mm_pixel_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = (
-        read_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") <= 200)
-        .select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").filter(
+        F.col("doc_id") <= 200
     )
 
-    def encode_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                tb = text.encode("utf-8")
-                w = len(tb) % 31 + 1
-                h = (len(tb) * 7) % 17 + 1
-                pix = _doc_pixels(tb, w, h)
-                enc = encode_ppm if doc_id % 2 == 0 else encode_bmp
-                payloads.append(enc(w, h, pix))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def decode(doc_id: int, payload: bytes) -> Iterator[tuple]:
+        _fmt, w, h, pixels = decode_image(payload)
+        yield doc_id, w, h, pixels.hex().upper()
 
-    media = docs.mapInPandas(encode_stage, "doc_id long, payload binary")
-
-    def decode_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import binascii
-
-        for pdf in batches:
-            rows = {"doc_id": [], "width": [], "height": [], "pixhex": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                _fmt, w, h, pixels = decode_image(bytes(payload))
-                rows["doc_id"].append(doc_id)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["pixhex"].append(
-                    binascii.hexlify(pixels).decode("ascii").upper()
-                )
-            yield pd.DataFrame(rows)
-
-    decoded = media.mapInPandas(
-        decode_stage, "doc_id long, width long, height long, pixhex string"
+    decoded = map_rows(
+        image_media(docs),
+        decode,
+        "doc_id long, width long, height long, pixhex string",
     )
     return decoded.groupBy("width", "height", "pixhex").agg(
         F.min("doc_id").alias("keep_id"),
@@ -474,29 +410,14 @@ FROM w
 def llm_mm_audio_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     win, hop = 64, 32
     docs = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") <= 40)
-    media = to_media_frame(docs)
 
-    def windows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                "doc_id": [],
-                "win_idx": [],
-                "byte_off": [],
-                "win_len": [],
-                "n_spaces": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(payload)
-                for off in range(0, len(buf), hop):
-                    seg = buf[off : off + win]
-                    rows["doc_id"].append(doc_id)
-                    rows["win_idx"].append(off // hop)
-                    rows["byte_off"].append(off)
-                    rows["win_len"].append(len(seg))
-                    rows["n_spaces"].append(seg.count(b" "))
-            yield pd.DataFrame(rows)
+    def windows(doc_id: int, payload: bytes) -> Iterator[tuple]:
+        for off in range(0, len(payload), hop):
+            seg = payload[off : off + win]
+            yield doc_id, off // hop, off, len(seg), seg.count(b" ")
 
-    return media.mapInPandas(
+    return map_rows(
+        to_media_frame(docs).select("doc_id", "payload"),
         windows,
         "doc_id long, win_idx long, byte_off long, win_len long, "
         "n_spaces long",
@@ -545,45 +466,19 @@ FROM g
     "vectorized, no per-pixel Python.",
 )
 def llm_mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = (
-        read_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") <= 100)
-        .select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").filter(
+        F.col("doc_id") <= 100
     )
 
-    def encode_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                tb = text.encode("utf-8")
-                w = len(tb) % 31 + 1
-                h = (len(tb) * 7) % 17 + 1
-                pix = _doc_pixels(tb, w, h)
-                enc = encode_ppm if doc_id % 2 == 0 else encode_bmp
-                payloads.append(enc(w, h, pix))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def resize(doc_id: int, payload: bytes) -> Iterator[tuple]:
+        _fmt, w, h, pixels = decode_image(payload)
+        arr = np.frombuffer(pixels, dtype=np.uint8).reshape(h, w, 3)
+        sub = arr[::2, ::2, :]
+        yield doc_id, sub.shape[1], sub.shape[0], int(sub.size), int(sub.sum())
 
-    media = docs.mapInPandas(encode_stage, "doc_id long, payload binary")
-
-    def resize_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        for pdf in batches:
-            rows = {"doc_id": [], "out_w": [], "out_h": [],
-                    "out_npix": [], "out_sum": []}
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                _fmt, w, h, pixels = decode_image(bytes(payload))
-                arr = np.frombuffer(pixels, dtype=np.uint8).reshape(h, w, 3)
-                sub = arr[::2, ::2, :]
-                rows["doc_id"].append(doc_id)
-                rows["out_w"].append(sub.shape[1])
-                rows["out_h"].append(sub.shape[0])
-                rows["out_npix"].append(int(sub.size))
-                rows["out_sum"].append(int(sub.sum()))
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(
-        resize_stage,
+    return map_rows(
+        image_media(docs),
+        resize,
         "doc_id long, out_w long, out_h long, out_npix long, out_sum long",
     )
 
@@ -672,46 +567,22 @@ ORDER BY doc_a, doc_b
     "Never an all-pairs comparison on the Spark side.",
 )
 def llm_mm_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = (
-        read_table(spark, sf_dir, "documents")
-        .filter(
-            (F.col("doc_id") <= 200)
-            & (F.octet_length("text") % 31 + 1 >= 4)
-            & ((F.octet_length("text") * 7) % 17 + 1 >= 4)
-        )
-        .select("doc_id", "text")
+    docs = read_table(spark, sf_dir, "documents").filter(
+        F.col("doc_id") <= 200
     )
 
-    def encode_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                tb = text.encode("utf-8")
-                w = len(tb) % 31 + 1
-                h = (len(tb) * 7) % 17 + 1
-                pix = _doc_pixels(tb, w, h)
-                enc = encode_ppm if doc_id % 2 == 0 else encode_bmp
-                payloads.append(enc(w, h, pix))
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
-
-    media = docs.mapInPandas(encode_stage, "doc_id long, payload binary")
-
-    def hash_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, hashes = [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                _fmt, w, h, pixels = decode_image(bytes(payload))
-                ids.append(doc_id)
-                hashes.append(_ahash16(w, h, pixels))
-            yield pd.DataFrame({"doc_id": ids, "ahash": hashes})
+    def ahash(doc_id: int, payload: bytes) -> Iterator[tuple]:
+        _fmt, w, h, pixels = decode_image(payload)
+        if w >= 4 and h >= 4:  # a 4x4 block grid needs 4 pixels per side
+            yield doc_id, _ahash16(w, h, pixels)
 
     # Checkpoint the (doc_id, 16-bit hash) table: it feeds BOTH sides
     # of the band self-join, and without pinning it the whole
-    # encode+decode mapInPandas pipeline would execute twice. The
-    # checkpointed relation is hash-sized (8 bytes/doc), never pixels.
-    hashes, _hash_ids = tracked_local_checkpoint(
-        media.mapInPandas(hash_stage, "doc_id long, ahash long")
-    )
+    # encode+decode pipeline would execute twice. The checkpointed
+    # relation is hash-sized (8 bytes/doc), never pixels.
+    hashes = map_rows(
+        image_media(docs), ahash, "doc_id long, ahash long"
+    ).localCheckpoint()
 
     bands = hashes.select(
         "doc_id",
@@ -822,38 +693,21 @@ def llm_mm_scenechange(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    media = to_media_frame(docs)
 
-    def detect(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                "doc_id": [],
-                "frame_idx": [],
-                "byte_off": [],
-                "prev_density": [],
-                "density": [],
-                "delta": [],
-            }
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(payload)
-                prev = None
-                for idx, off in enumerate(range(0, len(buf), frame_bytes)):
-                    seg = buf[off : off + frame_bytes]
-                    dens = seg.count(0x20) / len(seg)
-                    if prev is not None and abs(dens - prev) >= threshold:
-                        rows["doc_id"].append(doc_id)
-                        rows["frame_idx"].append(idx)
-                        rows["byte_off"].append(off)
-                        # raw doubles; rounding happens in Spark so the
-                        # HALF_UP semantics match the oracle (python
-                        # round() is banker's — wrong on exact .5s)
-                        rows["prev_density"].append(prev)
-                        rows["density"].append(dens)
-                        rows["delta"].append(abs(dens - prev))
-                    prev = dens
-            yield pd.DataFrame(rows)
+    def detect(doc_id: int, payload: bytes) -> Iterator[tuple]:
+        prev = None
+        for idx, off in enumerate(range(0, len(payload), frame_bytes)):
+            seg = payload[off : off + frame_bytes]
+            dens = seg.count(0x20) / len(seg)
+            if prev is not None and abs(dens - prev) >= threshold:
+                # raw doubles; rounding happens in Spark so the HALF_UP
+                # semantics match the oracle (python round() is
+                # banker's — wrong on exact .5s)
+                yield doc_id, idx, off, prev, dens, abs(dens - prev)
+            prev = dens
 
-    raw = media.mapInPandas(
+    raw = map_rows(
+        to_media_frame(docs).select("doc_id", "payload"),
         detect,
         "doc_id long, frame_idx long, byte_off long, "
         "prev_density double, density double, delta double",

@@ -26,7 +26,7 @@ from weather_etl_spark.io import read_table
 from weather_etl_spark.registry import register
 
 
-@F.udf(T.StringType())
+@F.udf(T.StringType(), useArrow=False)
 def _band_udf(price: float) -> str:
     if price is None:
         return None
