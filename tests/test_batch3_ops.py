@@ -331,10 +331,10 @@ def test_phash_banding_is_complete(spark):
     """The banded candidate path must find EXACTLY the pairs a naive
     all-pairs Hamming scan finds (pigeonhole completeness), recomputed
     in pure python from the registered hash function."""
-    from weather_etl_spark.operators.multimodal import (
-        _ahash16,
-        _doc_pixels,
+    from weather_etl_spark.media import (
+        ahash16,
         decode_image,
+        doc_pixels,
         encode_bmp,
         encode_ppm,
     )
@@ -352,9 +352,9 @@ def test_phash_banding_is_complete(spark):
         if w < 4 or h < 4:
             continue
         enc = encode_ppm if r["doc_id"] % 2 == 0 else encode_bmp
-        _fmt, dw, dh, pix = decode_image(enc(w, h, _doc_pixels(tb, w, h)))
+        _fmt, dw, dh, pix = decode_image(enc(w, h, doc_pixels(tb, w, h)))
         assert (dw, dh) == (w, h)
-        hashes[r["doc_id"]] = _ahash16(dw, dh, pix)
+        hashes[r["doc_id"]] = ahash16(dw, dh, pix)
     ids = sorted(hashes)
     want = [
         (a, b, bin(hashes[a] ^ hashes[b]).count("1"))
@@ -374,7 +374,7 @@ def test_phash_identical_pixels_collide(spark):
     """Every pair with identical decoded pixel content (same text
     bytes after truncate/pad => same w, h, pixels) must appear with
     dist 0 — aHash is a pure function of content."""
-    from weather_etl_spark.operators.multimodal import _doc_pixels
+    from weather_etl_spark.media import doc_pixels
 
     docs = (
         spark.read.parquet(SF + "/documents.parquet")
@@ -388,7 +388,7 @@ def test_phash_identical_pixels_collide(spark):
         w, h = len(tb) % 31 + 1, (len(tb) * 7) % 17 + 1
         if w < 4 or h < 4:
             continue
-        content.setdefault((w, h, _doc_pixels(tb, w, h)), []).append(
+        content.setdefault((w, h, doc_pixels(tb, w, h)), []).append(
             r["doc_id"]
         )
     same_pixel_pairs = {

@@ -6,11 +6,16 @@ from __future__ import annotations
 
 import datetime
 import math
+from pathlib import Path
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
 from pyspark.sql.types import StructField, TimestampType
 
+from weather_etl_spark import incremental
+from weather_etl_spark.checkpoints import _persistent_ids
 from weather_etl_spark.incremental import (
     SinkMissingError,
     discover_cursor,
@@ -18,6 +23,7 @@ from weather_etl_spark.incremental import (
     normalize_nans,
     run_incremental,
 )
+from weather_etl_spark.sinks import idempotent_append
 from weather_etl_spark.sources.fetch import (
     MEASURES,
     RetryConfig,
@@ -71,6 +77,86 @@ def test_idempotent_append_overlap(spark, tmp_path):
     assert r3["records_inserted"] == 0
     after = sorted(map(tuple, spark.read.parquet(sink).collect()))
     assert before == after
+
+
+def _part_files(sink: str) -> set[str]:
+    return {p.name for p in Path(sink).glob("*.parquet")}
+
+
+def test_small_append_writes_one_nonempty_file(spark, tmp_path):
+    """One new row adds exactly one Parquet file, and no file in the
+    sink holds 0 rows: the merge is materialized after AQE coalesces
+    the dedup shuffle, so no empty partition-0 file rides along.  A
+    full replay and an empty batch leave the file set unchanged (A12)."""
+    sink = str(tmp_path / "sink")
+    seed = _weather_batch(spark, "2024-01-01 00:00:00", "2024-01-01 02:00:00")
+    seed.repartition(3).write.parquet(sink)
+    seeded = _part_files(sink)
+    assert len(seeded) == 3
+
+    both = _weather_batch(spark, "2024-01-01 00:00:00", "2024-01-01 02:15:00")
+    assert idempotent_append(spark, both, sink, ["date"]) == 1
+    appended = _part_files(sink)
+    assert len(appended - seeded) == 1 and seeded <= appended
+    assert all(
+        pq.read_metadata(f"{sink}/{name}").num_rows > 0 for name in appended
+    )
+
+    assert idempotent_append(spark, both, sink, ["date"]) == 0
+    assert idempotent_append(spark, both.limit(0), sink, ["date"]) == 0
+    assert _part_files(sink) == appended
+    assert spark.read.parquet(sink).count() == 9
+
+
+def test_append_releases_its_checkpoint(spark, tmp_path, monkeypatch):
+    """The append pins no block-manager RDD past its return: not on
+    success, not when materializing the merge fails, not when the
+    write fails."""
+    sink = str(tmp_path / "sink")
+    batch = _weather_batch(spark, "2024-01-01 00:00:00", "2024-01-01 01:00:00")
+    before = _persistent_ids(spark)
+    assert idempotent_append(spark, batch, sink, ["date"]) == 4
+    assert _persistent_ids(spark) == before
+
+    bad = spark.range(3).select(
+        F.expr("assert_true(id < 0)").alias("chk"), F.col("id").alias("date")
+    )
+    with pytest.raises(Exception, match="is not true"):
+        idempotent_append(spark, bad, str(tmp_path / "bad"), ["date"])
+    assert _persistent_ids(spark) == before
+
+    def failing_write(self, path, *args, **kwargs):
+        raise OSError(f"injected write failure at {path}")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_write)
+    later = _weather_batch(spark, "2024-01-01 01:00:00", "2024-01-01 02:00:00")
+    with pytest.raises(OSError, match="injected"):
+        idempotent_append(spark, later, sink, ["date"])
+    assert _persistent_ids(spark) == before
+
+
+def test_no_insert_run_reuses_the_cursor(spark, tmp_path, monkeypatch):
+    """A run that inserts nothing reports the sink's MAX(date) as its
+    latest cursor without re-reading the sink: discover_cursor runs
+    once (pre-run) instead of twice."""
+    sink = str(tmp_path / "sink")
+    batch = _weather_batch(spark, "2024-01-01 00:00:00", "2024-01-01 02:00:00")
+    assert run_incremental(spark, batch, sink, ["date"])["records_inserted"] == 8
+
+    calls = []
+    discover = incremental.discover_cursor
+
+    def counting_discover(*args, **kwargs):
+        calls.append(args)
+        return discover(*args, **kwargs)
+
+    monkeypatch.setattr(incremental, "discover_cursor", counting_discover)
+    replay = run_incremental(spark, batch, sink, ["date"])
+    assert (replay["statusCode"], replay["records_inserted"]) == (200, 0)
+    sink_max = spark.read.parquet(sink).agg(F.max("date")).first()[0]
+    assert replay["latest_cursor"] == sink_max.isoformat()
+    assert replay["pre_run_cursor"] == replay["latest_cursor"]
+    assert len(calls) == 1
 
 
 def test_cursor_strict_and_future_bound(spark):

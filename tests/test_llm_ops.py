@@ -3,6 +3,10 @@
 
 from __future__ import annotations
 
+import subprocess
+import sys
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -94,13 +98,28 @@ def test_minhash_lsh_deterministic(spark, sf_dir):
     assert r1 == r2  # fixed seed => stable pairs
 
 
+def test_media_codecs_import_without_the_registry():
+    """Python workers unpickle the multimodal per-row generators, which
+    reference the codecs by module path; importing them must not import
+    the operator registry. A fresh interpreter, since this session has
+    the registry imported."""
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "import sys, weather_etl_spark.media; "
+         "print('weather_etl_spark.operators' in sys.modules)"],
+        cwd=Path(__file__).resolve().parent.parent,
+        check=True, capture_output=True, text=True,
+    )
+    assert out.stdout.strip() == "False"
+
+
 def test_image_codec_roundtrip_and_failfast():
     """Pure-python PPM/BMP codecs: lossless round-trip (including BMP
     bottom-up rows, BGR order, and 4-byte row padding for widths where
     3w % 4 != 0), and fail-fast on unknown magic / unsupported shapes."""
     import pytest
 
-    from weather_etl_spark.operators.multimodal import (
+    from weather_etl_spark.media import (
         decode_image,
         encode_bmp,
         encode_ppm,
@@ -167,7 +186,7 @@ def test_image_codec_roundtrip_property():
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from weather_etl_spark.operators.multimodal import (
+    from weather_etl_spark.media import (
         decode_image,
         encode_bmp,
         encode_ppm,

@@ -44,11 +44,17 @@ def tracked_local_checkpoint(df: DataFrame) -> tuple[DataFrame, set[int]]:
 
     The returned ids identify the block-manager entries the checkpoint
     pinned; hand them to :func:`release_rdds` once every consumer of
-    the checkpointed DataFrame has executed.
+    the checkpointed DataFrame has executed.  A checkpoint job that
+    fails leaves its RDD pinned; those ids are released before the
+    error propagates.
     """
     spark = df.sparkSession
     before = _persistent_ids(spark)
-    out = df.localCheckpoint()
+    try:
+        out = df.localCheckpoint()
+    except BaseException:
+        release_rdds(spark, _persistent_ids(spark) - before)
+        raise
     return out, _persistent_ids(spark) - before
 
 

@@ -74,11 +74,10 @@ def filter_new_records(
 
 def normalize_nans(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     """NaN -> NULL at the sink boundary only (A10,
-    lambda_function.py:168-173)."""
-    out = df
-    for c in cols:
-        out = out.withColumn(c, F.nanvl(F.col(c), F.lit(None).cast("double")))
-    return out
+    lambda_function.py:168-173).  One projection: a ``withColumn``
+    per column would re-analyze the plan once per column."""
+    null = F.lit(None).cast("double")
+    return df.withColumns({c: F.nanvl(F.col(c), null) for c in cols})
 
 
 def run_incremental(
@@ -106,7 +105,8 @@ def run_incremental(
     * ``latest_cursor`` here is the POST-insert sink cursor (what the
       next run will resume from); the reference reports the PRE-run
       cursor.  Both are returned: ``pre_run_cursor`` carries the
-      reference's value.
+      reference's value.  The sink is re-read for it only when the run
+      inserted rows.
     """
     ensure_engine_confs(spark)
     ts_col = ts_col or key_cols[0]
@@ -122,7 +122,11 @@ def run_incremental(
         if float_cols:
             fresh = normalize_nans(fresh, float_cols)
         inserted = idempotent_append(spark, fresh, sink_path, key_cols)
-        latest = discover_cursor(spark, sink_path, ts_field)
+        # A run that inserted nothing left the sink as it was, so the
+        # pre-run cursor is exact and the ts-column scan is skipped.
+        latest = (
+            discover_cursor(spark, sink_path, ts_field) if inserted else cursor
+        )
         return {
             "statusCode": 200,
             "records_fetched": fetched,

@@ -7,19 +7,32 @@ MERGE or PK, so the engine's equivalent (SURVEY.md §7.5) is:
 
     new.dropDuplicates(key)                 # dedup within the batch
        .join(existing, key, "left_anti")    # drop keys already present
+       -> localCheckpoint                   # run the merge once
        -> write.mode("append")              # append only the novel rows
+
+The merge result is materialized by an eager ``localCheckpoint``, not
+a ``persist()``: the checkpoint job runs through adaptive execution,
+so a small batch coalesces from the dedup shuffle's partitions to one,
+and the append writes one Parquet file.  AQE may not change a cached
+plan's partitioning, and Spark's Parquet writer writes a file for
+partition 0 even when it is empty, so a ``persist()`` would add a
+0-row file beside nearly every small insert.
 
 Crash safety: Spark's Parquet committer stages task output under
 ``_temporary`` and commits per job, so a failed write leaves no
 visible files; a re-run after any failure re-applies the same
 anti-join and converges (at-least-once attempt + keyed dedup =
-exactly-once effect — reference invariant #1, SURVEY.md §2).
+exactly-once effect — reference invariant #1, SURVEY.md §2).  That
+includes an executor lost between the checkpoint and the write: a
+local checkpoint cannot be recomputed, so the run fails and the next
+one converges.
 
 Scale notes (100 TB): the anti-join only needs the sink's KEY column
 (column-pruned scan over parquet footers); with a date-partitioned
 sink and a bounded cursor window the existing-side scan prunes to the
 overlap partitions — the same trick the reference uses with
-``past_days=1`` (A14).
+``past_days=1`` (A14).  The checkpoint is bounded by the BATCH size
+(the cursor window), never the sink size.
 """
 
 from __future__ import annotations
@@ -29,7 +42,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
-from pyspark.storagelevel import StorageLevel
+
+from weather_etl_spark.checkpoints import release_rdds, tracked_local_checkpoint
 
 
 def idempotent_append(
@@ -45,6 +59,12 @@ def idempotent_append(
     The sink's keys are read with the batch's own key types, so a sink
     directory without data files yet reads as empty instead of failing
     schema inference.
+
+    The merge runs exactly once, into the checkpoint; the count and the
+    write both read it, so the count is the number of rows written.  A
+    count of 0 skips the write: an empty result adds no file (A12).
+    The checkpoint's blocks are released in ``finally``, on success and
+    on failure alike.
     """
     deduped = new_rows.dropDuplicates(list(key_cols))
     if os.path.exists(sink_path):
@@ -53,21 +73,13 @@ def idempotent_append(
         to_insert = deduped.join(existing_keys, on=list(key_cols), how="left_anti")
     else:
         to_insert = deduped
-    # Persist the anti-join output so the sink-scan + anti-join plan
-    # executes exactly ONCE per run: count materializes the cache, the
-    # write replays it.  (Count-then-write on the raw plan would run the
-    # merge twice — at 100 TB that doubles the merge cost, and a
-    # non-deterministic source could report a count that differs from
-    # the rows written.)  The cache is bounded by the BATCH size (the
-    # cursor window), never the sink size.  The count doubles as the
-    # empty-input short-circuit (A12): no rows -> no write job at all.
-    to_insert = to_insert.persist(StorageLevel.MEMORY_AND_DISK)
+    to_insert, ids = tracked_local_checkpoint(to_insert)
     try:
         inserted = to_insert.count()
         if inserted > 0:
             to_insert.write.mode("append").parquet(sink_path)
     finally:
-        to_insert.unpersist()
+        release_rdds(spark, ids)
     return inserted
 
 
