@@ -35,8 +35,9 @@ def pytest_collection_modifyitems(config, items):
 
     A bare ``pytest tests/`` deselects the `full` lane; it still runs
     the 2-SF oracle-parity sweep, which is not marked `full`.  Any
-    ``-m`` expression, or ``SPARK_GRAFT_TEST_FULL=1``, turns the
-    deselection off and lets the expression alone pick the tests.
+    non-empty ``-m`` expression, or ``SPARK_GRAFT_TEST_FULL=1``, turns
+    the deselection off and lets the expression alone pick the tests
+    (``-m ""`` reads as no ``-m`` at all, so it keeps the default lane).
     Deselection (not skip) keeps the default run's report clean."""
     import pytest as _pytest
 

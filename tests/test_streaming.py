@@ -100,79 +100,35 @@ def test_transform_with_state_running_totals(spark, sf_dir):
     ]
 
 
-def test_streaming_sessionizer_agrees_with_batch_sessionize(spark):
-    """Cross-paradigm coherence: the applyInPandasWithState 30-min-gap
+def test_streaming_sessionizer_agrees_with_batch_sessionize(spark, tmp_path):
+    """Cross-paradigm coherence: st_stateful_sessionizer's 30-min-gap
     sessionizer, run as a real stream over the actual events table,
     must emit exactly the batch q_win_sessionize sessions MINUS each
     user's final (still-open, deliberately unemitted) session."""
     import shutil
-    import tempfile
-    import uuid
 
-    import pandas as pd
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     from weather_etl_spark.streaming.runtime import (
-        _run_to_memory,
-        _small_state,
+        _drain,
         _stream_events,
+        sessionize,
     )
     from tests.conftest import SMOKE_SF_DIR
 
-    gap_us = 30 * 60 * 1_000_000
-
-    def sessionize(key, pdf_iter, state: GroupState):
-        if state.exists:
-            start_us, last_us, n = state.get
-        else:
-            start_us, last_us, n = None, None, 0
-        closed = []
-        for pdf in pdf_iter:
-            for ts_us in sorted(int(v) for v in pdf["ts_us"]):
-                if start_us is None:
-                    start_us, last_us, n = ts_us, ts_us, 1
-                elif ts_us - last_us > gap_us:
-                    closed.append((key[0], start_us, n))
-                    start_us, last_us, n = ts_us, ts_us, 1
-                else:
-                    last_us, n = ts_us, n + 1
-        state.update((start_us, last_us, n))
-        yield pd.DataFrame(
-            closed, columns=["user_id", "sess_start_us", "n_events"]
-        )
-
-    tmp = tempfile.mkdtemp(prefix="st_sess_parity_")
-    try:
-        import os
-
-        in_dir = f"{tmp}/in"
-        os.makedirs(in_dir)
-        shutil.copy(
-            f"{SMOKE_SF_DIR}/events.parquet", f"{in_dir}/events.parquet"
-        )
-        stream = _stream_events(spark, in_dir).select(
-            "user_id", F.unix_micros("ts").alias("ts_us")
-        )
-        sessions = stream.groupBy("user_id").applyInPandasWithState(
-            sessionize,
-            outputStructType="user_id long, sess_start_us long, n_events long",
-            stateStructType="start_us long, last_us long, n long",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        with _small_state(spark):
-            streamed = _run_to_memory(sessions, "append", tmp)
-        got = _rows(streamed)
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+    in_dir = tmp_path / "in"
+    in_dir.mkdir()
+    shutil.copy(f"{SMOKE_SF_DIR}/events.parquet", in_dir / "events.parquet")
+    stream = _stream_events(spark, str(in_dir)).select(
+        "user_id", F.unix_micros("ts").alias("ts_us")
+    )
+    got = _rows(_drain(sessionize(stream), "append", str(tmp_path)))
 
     batch = SPECS["q_win_sessionize"].fn(spark, SMOKE_SF_DIR).select(
-        "user_id", "sess_start_us", "n_events"
+        "user_id", F.col("sess_start_us").alias("session_start_us"), "n_events"
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.col("sess_start_us").desc())
+    w = Window.partitionBy("user_id").orderBy(F.col("session_start_us").desc())
     want = _rows(
         batch.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") > 1)  # drop each user's open tail session
@@ -188,16 +144,21 @@ def test_stream_defines_on_empty_input_dir(spark, tmp_path):
     time, and the stream must start and drain zero rows."""
     import os
 
-    from weather_etl_spark.streaming.runtime import (
-        _run_to_memory,
-        _stream_events,
-    )
+    from weather_etl_spark.streaming.runtime import _drain, _stream_events
 
     in_dir = str(tmp_path / "empty_in")
     os.makedirs(in_dir, exist_ok=True)
     stream = _stream_events(spark, in_dir)  # must not raise
     assert stream.isStreaming
-    out = _run_to_memory(
-        stream.groupBy("user_id").count(), "complete", str(tmp_path)
-    )
+    out = _drain(stream.groupBy("user_id").count(), "complete", str(tmp_path))
     assert out.count() == 0
+
+
+@pytest.mark.parametrize("name", sorted(n for n in SPECS if n.startswith("st_")))
+def test_runtime_row_leaves_no_temp_view(spark, sf_dir, name):
+    """A memory sink registers its query name as a temp view holding the
+    sink's rows in the driver; every row drops it once its result is
+    materialized, so repeated runs do not pile up rows in the session."""
+    before = {t.name for t in spark.catalog.listTables()}
+    SPECS[name].fn(spark, sf_dir).collect()
+    assert {t.name for t in spark.catalog.listTables()} == before

@@ -20,8 +20,7 @@ that decide whether the plan survives a 100x scale-up:
   logical plan) — a single-partition funnel; admissible only with a
   declared input bound in ``plan_audit.ALLOW_KEYLESS_WINDOW`` (ledger /
   probe-panel / dim-scale inputs, or rows whose OUTPUT is the global
-  rank).  ``tools/audit_keyless_windows.py`` is the standalone
-  discovery pass.
+  rank).
 
 Usage: ``python tools/audit_plans.py [sf_dir]`` prints one CSV row per
 operator (name, exchanges, codegen spans, flags) and a summary; exits

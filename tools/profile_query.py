@@ -1,12 +1,14 @@
-"""Per-stage empirical profile of one registered query (guide §1.1/§7.1).
+"""Per-stage empirical profile of one registered query.
 
-Boots an engine session WITH the UI enabled, runs the query once warm +
-once profiled through the noop sink, then scrapes the REST API for
-per-stage metrics: wall time, executor run/CPU time, task count, shuffle
-read/write bytes, input bytes.  CPU time and byte counts are robust to
-host steal/pauses, unlike wall-clock.
+Boots the engine session (``session.get_spark``, Spark UI off), runs the
+query once warm + once profiled through the noop sink under its own job
+group, then reads that group's per-stage metrics from the live status
+store: wall time, executor run/CPU time, task count, shuffle read/write
+bytes, input bytes.  CPU time and byte counts are robust to host
+steal/pauses, unlike wall-clock.
 
 Usage: PYTHONPATH=. python tools/profile_query.py QUERY [k=v ...]
+(each k=v sets a SQL conf for the run; PROF_WARM=N warm runs, default 1)
 """
 
 from __future__ import annotations
@@ -15,7 +17,6 @@ import json
 import os
 import sys
 import time
-import urllib.request
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -28,86 +29,62 @@ def main() -> None:
     name = sys.argv[1]
     overrides = dict(kv.split("=", 1) for kv in sys.argv[2:])
 
-    from pyspark.sql import SparkSession
-
-    from weather_etl_spark.registry import load_all
-    from weather_etl_spark.session import RUNTIME_CONFS, default_parallelism
-
-    cpus = default_parallelism()
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(f"profile-{name}")
-        .config("spark.sql.shuffle.partitions", str(max(2 * cpus, 8)))
-        .config("spark.driver.memory",
-                os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .config("spark.ui.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold",
-                str(64 * 1024 * 1024))
-    )
-    for k, v in {**RUNTIME_CONFS, **overrides}.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     import weather_etl_spark.session as sess
+    from weather_etl_spark.registry import load_all
 
-    sess.RUNTIME_CONFS = {**RUNTIME_CONFS, **{
-        k: v for k, v in overrides.items() if k in RUNTIME_CONFS
-    }}
+    spark = sess.get_spark(f"profile-{name}")
+    for k, v in overrides.items():
+        spark.conf.set(k, v)
+    # Every query re-applies RUNTIME_CONFS (ensure_engine_confs); keep
+    # the overrides over them.
+    sess.RUNTIME_CONFS = {**sess.RUNTIME_CONFS, **overrides}
 
     spec = load_all()[name]
     warm = int(os.environ.get("PROF_WARM", "1"))
     for _ in range(warm):
         spec.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
 
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-
-    def api(path: str):
-        with urllib.request.urlopen(f"{ui}/api/v1/applications/{app_id}{path}") as r:
-            return json.load(r)
-
-    jobs_before = {j["jobId"] for j in api("/jobs")}
-    stages_before = {s["stageId"] for s in api("/stages")}
-
+    sc = spark.sparkContext
+    group = f"profile-{name}"
+    sc.setJobGroup(group, f"profiled: {name}")
     t0 = time.perf_counter()
-    spark.sparkContext.setJobDescription(f"profiled: {name}")
     spec.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
     wall = time.perf_counter() - t0
 
-    new_jobs = [j for j in api("/jobs") if j["jobId"] not in jobs_before]
-    new_stages = [s for s in api("/stages")
-                  if s["stageId"] not in stages_before]
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stage_ids = set()
+    for job in jobs:
+        info = tracker.getJobInfo(job)
+        if info is not None:  # evicted past spark.ui.retainedJobs
+            stage_ids.update(info.stageIds)
+    store = sc._jsc.sc().statusStore()
+    no_status = sc._gateway.jvm.java.util.Collections.emptyList()
+    no_quantiles = sc._gateway.new_array(sc._gateway.jvm.double, 0)
     rows = []
-    tot = dict(tasks=0, run_ms=0, cpu_ms=0, sh_r=0, sh_w=0, inp=0)
-    for s in sorted(new_stages, key=lambda s: s["stageId"]):
-        cpu_ms = s.get("executorCpuTime", 0) / 1e6
-        rows.append({
-            "stage": s["stageId"],
-            "name": s["name"].split("\n")[0][:70],
-            "status": s["status"],
-            "tasks": s["numCompleteTasks"] + s["numFailedTasks"],
-            "run_ms": s.get("executorRunTime", 0),
-            "cpu_ms": round(cpu_ms),
-            "sh_read_mb": round(s.get("shuffleReadBytes", 0) / 2**20, 2),
-            "sh_write_mb": round(s.get("shuffleWriteBytes", 0) / 2**20, 2),
-            "input_mb": round(s.get("inputBytes", 0) / 2**20, 2),
-        })
-        tot["tasks"] += rows[-1]["tasks"]
-        tot["run_ms"] += rows[-1]["run_ms"]
-        tot["cpu_ms"] += rows[-1]["cpu_ms"]
-        tot["sh_r"] += s.get("shuffleReadBytes", 0)
-        tot["sh_w"] += s.get("shuffleWriteBytes", 0)
-        tot["inp"] += s.get("inputBytes", 0)
+    for sid in sorted(stage_ids):
+        attempts = store.stageData(sid, False, no_status, False, no_quantiles)
+        for i in range(attempts.size()):
+            s = attempts.apply(i)
+            rows.append({
+                "stage": sid,
+                "name": s.name().split("\n")[0][:70],
+                "status": str(s.status()),
+                "tasks": s.numCompleteTasks() + s.numFailedTasks(),
+                "run_ms": s.executorRunTime(),
+                "cpu_ms": round(s.executorCpuTime() / 1e6),
+                "sh_read_mb": round(s.shuffleReadBytes() / 2**20, 2),
+                "sh_write_mb": round(s.shuffleWriteBytes() / 2**20, 2),
+                "input_mb": round(s.inputBytes() / 2**20, 2),
+            })
     print(json.dumps({
         "name": name, "overrides": overrides,
         "wall_s": round(wall, 3),
-        "jobs": len(new_jobs), "stages": len(new_stages),
+        "jobs": len(jobs), "stages": len(rows),
         "total": {
-            "tasks": tot["tasks"], "run_ms": tot["run_ms"],
-            "cpu_ms": tot["cpu_ms"],
-            "sh_read_mb": round(tot["sh_r"] / 2**20, 2),
-            "sh_write_mb": round(tot["sh_w"] / 2**20, 2),
-            "input_mb": round(tot["inp"] / 2**20, 2),
+            key: round(sum(r[key] for r in rows), 2)
+            for key in ("tasks", "run_ms", "cpu_ms", "sh_read_mb",
+                        "sh_write_mb", "input_mb")
         },
     }))
     for r in rows:

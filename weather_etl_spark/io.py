@@ -126,8 +126,8 @@ def table_exists(spark: SparkSession, sf_dir: str, name: str) -> bool:
     return os.path.exists(table_path(sf_dir, name))
 
 
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one driver testdata table with the engine's session contract.
+def normalize_events_ts(df: DataFrame) -> DataFrame:
+    """Normalize a batch or streaming read of the events table's ``ts``.
 
     events.ts is Parquet TIMESTAMP(NANOS).  Depending on the PySpark
     build it surfaces in one of three shapes, and the engine normalizes
@@ -149,6 +149,17 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     tests/test_env_probe.py pins the post-read dtype so the next runtime
     swap fails one loud test instead of ten driver rows.
     """
+    ts_dtype = dict(df.dtypes).get("ts")
+    if ts_dtype == "bigint":
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_dtype == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
+def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Read one driver testdata table with the engine's session contract
+    (events.ts normalized by ``normalize_events_ts``)."""
     ensure_engine_confs(spark)
     path = table_path(sf_dir, name)
     if not os.path.exists(path):
@@ -168,10 +179,4 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 _SCHEMA_CACHE.clear()
             _SCHEMA_CACHE[key] = schema
     df = spark.read.schema(schema).parquet(path)
-    if name == "events":
-        ts_dtype = dict(df.dtypes).get("ts")
-        if ts_dtype == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_dtype == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    return normalize_events_ts(df) if name == "events" else df

@@ -12,21 +12,30 @@ Re-expresses the reference's operational loop: scheduled catch-up
 ingestion (A14 -> Trigger.AvailableNow), late/duplicate tolerance
 (A5/A11 -> watermark + dropDuplicatesWithinWatermark), and the whole
 pipeline as a foreachBatch body (A13).
+
+The rows share one micro-batch harness: ``_land`` writes the fixture
+batches and returns the file stream over them, the row adds its
+streaming operator, and ``_drain`` runs the stream to its end into a
+memory sink and returns the materialized result. st_watermark (lands a
+batch between two triggers) and st_foreachbatch (foreachBatch sink) run
+their own trigger loops.
 """
 
 from __future__ import annotations
 
+import glob
+import os
 import shutil
 import tempfile
 import uuid
+from contextlib import contextmanager
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from contextlib import contextmanager
-
 from weather_etl_spark.incremental import run_incremental
-from weather_etl_spark.io import table_path
+from weather_etl_spark.io import normalize_events_ts, table_path
 from weather_etl_spark.registry import register
 from weather_etl_spark.session import ensure_engine_confs
 
@@ -49,7 +58,7 @@ def _small_state(spark: SparkSession, n: int = 4):
 #: Raw parquet schema of the events table, ts dtype filled in per
 #: runtime: the file stores TIMESTAMP(NANOS), which different PySpark
 #: builds surface as bigint nanos (nanosAsLong honored), TIMESTAMP_NTZ,
-#: or TIMESTAMP (see io.read_table / ENVIRONMENT.md).
+#: or TIMESTAMP (see io.normalize_events_ts / ENVIRONMENT.md).
 EVENTS_RAW_DDL = (
     "event_id long, ts {ts_dtype}, user_id long, event_type string, "
     "value double, props string"
@@ -71,27 +80,59 @@ def _stream_events(spark: SparkSession, in_dir: str) -> DataFrame:
         ts_dtype = dict(spark.read.parquet(in_dir).dtypes)["ts"]
     except Exception:
         ts_dtype = "timestamp_ntz"
-    raw = spark.readStream.schema(
-        EVENTS_RAW_DDL.format(ts_dtype=ts_dtype)
-    ).parquet(in_dir)
-    if ts_dtype == "bigint":
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-
-
-def _run_to_memory(stream_df: DataFrame, mode: str, tmp: str) -> DataFrame:
-    """Drain a bounded stream into a memory sink, return the result table."""
-    name = f"st_{uuid.uuid4().hex[:12]}"
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", f"{tmp}/ckpt_{name}")
-        .trigger(availableNow=True)
-        .start()
+    return normalize_events_ts(
+        spark.readStream.schema(EVENTS_RAW_DDL.format(ts_dtype=ts_dtype))
+        .parquet(in_dir)
     )
-    q.awaitTermination()
-    return stream_df.sparkSession.table(name)
+
+
+def _land(spark: SparkSession, in_dir: str, *batches) -> DataFrame:
+    """Land each batch of (event_id, ts_us, user_id, value) rows as one
+    flat parquet file after those already in ``in_dir`` (the file stream
+    source wants plain files in its input dir, ordered by mtime), and
+    return the stream over ``in_dir`` that reads one file per
+    micro-batch."""
+    for rows in batches:
+        staging = f"{in_dir}/_staging"
+        spark.createDataFrame(
+            rows, "event_id long, ts_us long, user_id long, value double"
+        ).select(
+            "event_id", F.timestamp_micros("ts_us").alias("ts"), "user_id", "value"
+        ).coalesce(1).write.mode("overwrite").parquet(staging)
+        (part,) = glob.glob(f"{staging}/part-*.parquet")
+        batch_no = len(glob.glob(f"{in_dir}/b*.parquet")) + 1
+        os.replace(part, f"{in_dir}/b{batch_no}.parquet")
+        shutil.rmtree(staging, ignore_errors=True)
+    return (
+        spark.readStream.schema(
+            "event_id long, ts timestamp, user_id long, value double"
+        )
+        .option("maxFilesPerTrigger", "1")
+        .parquet(in_dir)
+    )
+
+
+def _drain(stream_df: DataFrame, mode: str, tmp: str) -> DataFrame:
+    """Run a bounded stream to its end (Trigger.AvailableNow) into a
+    memory sink under ``_small_state`` and return the sink's rows as a
+    local checkpoint. The sink's temp view is dropped once the rows are
+    checkpointed, so a run leaves nothing in the session catalog."""
+    spark = stream_df.sparkSession
+    name = f"st_{uuid.uuid4().hex[:12]}"
+    try:
+        with _small_state(spark):
+            (
+                stream_df.writeStream.format("memory")
+                .queryName(name)
+                .outputMode(mode)
+                .option("checkpointLocation", f"{tmp}/ckpt_{name}")
+                .trigger(availableNow=True)
+                .start()
+                .awaitTermination()
+            )
+        return spark.table(name).localCheckpoint()
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 @register(
@@ -104,12 +145,10 @@ def _run_to_memory(stream_df: DataFrame, mode: str, tmp: str) -> DataFrame:
 )
 def st_trigger_availnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_engine_confs(spark)
-    tmp = tempfile.mkdtemp(prefix="st_availnow_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="st_availnow_", ignore_cleanup_errors=True
+    ) as tmp:
         in_dir = f"{tmp}/in"
-        import glob
-        import os
-
         os.makedirs(in_dir)
         # The events table may be a single flat file (the driver
         # fixtures) or a Spark-written DIRECTORY of part files (any
@@ -134,37 +173,13 @@ def st_trigger_availnow(spark: SparkSession, sf_dir: str) -> DataFrame:
                 shutil.copy(p, f"{in_dir}/events_{i:05d}.parquet")
         else:
             shutil.copy(src, f"{in_dir}/events.parquet")
-        ev = _stream_events(spark, in_dir)
         agg = (
-            ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+            _stream_events(spark, in_dir)
+            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
             .agg(F.count(F.lit(1)).alias("n"))
             .select(F.unix_micros("w.start").alias("ws_us"), "event_type", "n")
         )
-        out = _run_to_memory(agg, "complete", tmp)
-        return out.localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def _write_batch(spark: SparkSession, rows, in_dir: str, batch_no: int) -> None:
-    """Land one micro-batch as a single flat parquet file (the file stream
-    source wants plain files in its input dir, ordered by mtime)."""
-    import glob
-    import os
-
-    df = spark.createDataFrame(
-        rows, "event_id long, ts_us long, user_id long, value double"
-    ).select(
-        "event_id",
-        F.timestamp_micros(F.col("ts_us")).alias("ts"),
-        "user_id",
-        "value",
-    )
-    staging = f"{in_dir}/_staging_b{batch_no}"
-    df.coalesce(1).write.mode("overwrite").parquet(staging)
-    (part,) = glob.glob(f"{staging}/part-*.parquet")
-    os.replace(part, f"{in_dir}/b{batch_no}.parquet")
-    shutil.rmtree(staging, ignore_errors=True)
+        return _drain(agg, "complete", tmp)
 
 
 _T0 = 1704103200_000_000  # 2024-01-01 10:00:00 UTC in epoch-us
@@ -182,61 +197,51 @@ _MIN = 60_000_000
 )
 def st_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_engine_confs(spark)
-    tmp = tempfile.mkdtemp(prefix="st_watermark_")
-    try:
-        import os
-
+    with tempfile.TemporaryDirectory(
+        prefix="st_watermark_", ignore_cleanup_errors=True
+    ) as tmp:
         in_dir = f"{tmp}/in"
-        os.makedirs(in_dir)
         # Batch 1: 10:00..10:09 plus a head row at 11:00 that advances the
         # max event time, so the post-batch watermark is 10:50.
         batch1 = [(i, _T0 + i * _MIN, 1, 1.0) for i in range(10)]
         batch1.append((99, _T0 + 60 * _MIN, 1, 1.0))
-        _write_batch(spark, batch1, in_dir, 1)
-
-        stream = (
-            spark.readStream.schema(
-                "event_id long, ts timestamp, user_id long, value double"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-        )
         agg = (
-            stream.withWatermark("ts", "10 minutes")
+            _land(spark, in_dir, batch1)
+            .withWatermark("ts", "10 minutes")
             .groupBy(F.window("ts", "5 minutes").alias("w"))
             .agg(F.count(F.lit(1)).alias("n"))
             .select(F.unix_micros("w.start").alias("ws_us"), "n")
         )
-        name = f"st_wm_{uuid.uuid4().hex[:8]}"
-        with _small_state(spark):
-            q = (
-                agg.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("update")
-                .option("checkpointLocation", f"{tmp}/ckpt")
-                .start()
+        name = f"st_{uuid.uuid4().hex[:12]}"
+        try:
+            with _small_state(spark):
+                q = (
+                    agg.writeStream.format("memory")
+                    .queryName(name)
+                    .outputMode("update")
+                    .option("checkpointLocation", f"{tmp}/ckpt")
+                    .start()
+                )
+                q.processAllAvailable()
+                # Batch 2: one row at 10:05 — its 5-min window
+                # [10:05,10:10) ended before the 10:50 watermark =>
+                # DROPPED; one row at 10:52 => kept.
+                _land(
+                    spark,
+                    in_dir,
+                    [(200, _T0 + 5 * _MIN, 1, 1.0), (201, _T0 + 52 * _MIN, 1, 1.0)],
+                )
+                q.processAllAvailable()
+                q.stop()
+            # Final state per window = the last update emitted for it.
+            return (
+                spark.table(name)
+                .groupBy("ws_us")
+                .agg(F.max("n").alias("n_final"))
+                .localCheckpoint()
             )
-            q.processAllAvailable()
-            # Batch 2: one row at 10:05 — its 5-min window [10:05,10:10)
-            # ended before the 10:50 watermark => DROPPED; one row at
-            # 10:52 => kept.
-            _write_batch(
-                spark,
-                [(200, _T0 + 5 * _MIN, 1, 1.0), (201, _T0 + 52 * _MIN, 1, 1.0)],
-                in_dir,
-                2,
-            )
-            q.processAllAvailable()
-            q.stop()
-        # Final state per window = the last update emitted for it.
-        out = (
-            spark.table(name)
-            .groupBy("ws_us")
-            .agg(F.max("n").alias("n_final"))
-        )
-        return out.localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        finally:
+            spark.catalog.dropTempView(name)
 
 
 @register(
@@ -249,46 +254,28 @@ def st_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def st_dedup_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_engine_confs(spark)
-    tmp = tempfile.mkdtemp(prefix="st_dedup_")
-    try:
-        import os
-
-        in_dir = f"{tmp}/in"
-        os.makedirs(in_dir)
+    with tempfile.TemporaryDirectory(
+        prefix="st_dedup_", ignore_cleanup_errors=True
+    ) as tmp:
         # 5 unique ids; ids 1 and 2 repeat within and across batches.
-        _write_batch(
+        stream = _land(
             spark,
+            f"{tmp}/in",
             [(1, _T0, 1, 1.0), (2, _T0 + _MIN, 1, 1.0), (1, _T0 + 2 * _MIN, 1, 1.0)],
-            in_dir,
-            1,
-        )
-        _write_batch(
-            spark,
             [(2, _T0 + 3 * _MIN, 1, 1.0), (3, _T0 + 4 * _MIN, 1, 1.0),
              (4, _T0 + 5 * _MIN, 1, 1.0), (5, _T0 + 6 * _MIN, 1, 1.0)],
-            in_dir,
-            2,
-        )
-        stream = (
-            spark.readStream.schema(
-                "event_id long, ts timestamp, user_id long, value double"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
         )
         deduped = stream.withWatermark(
             "ts", "1 hour"
         ).dropDuplicatesWithinWatermark(["event_id"])
-        with _small_state(spark):
-            out = _run_to_memory(deduped.select("event_id"), "append", tmp)
         return (
-            out.agg(
+            _drain(deduped.select("event_id"), "append", tmp)
+            .agg(
                 F.count(F.lit(1)).alias("n_rows"),
                 F.countDistinct("event_id").alias("n_distinct"),
             )
-        ).localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+            .localCheckpoint()
+        )
 
 
 @register(
@@ -301,26 +288,16 @@ def st_dedup_wm(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def st_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_engine_confs(spark)
-    tmp = tempfile.mkdtemp(prefix="st_feb_")
-    try:
-        import os
-
-        in_dir = f"{tmp}/in"
+    with tempfile.TemporaryDirectory(
+        prefix="st_feb_", ignore_cleanup_errors=True
+    ) as tmp:
         sink = f"{tmp}/sink"
-        os.makedirs(in_dir)
         # Overlapping micro-batches (the reference's past_days=1 overlap).
-        _write_batch(
-            spark, [(i, _T0 + i * _MIN, 1, 1.0) for i in range(0, 8)], in_dir, 1
-        )
-        _write_batch(
-            spark, [(i, _T0 + i * _MIN, 1, 1.0) for i in range(4, 12)], in_dir, 2
-        )
-        stream = (
-            spark.readStream.schema(
-                "event_id long, ts timestamp, user_id long, value double"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
+        stream = _land(
+            spark,
+            f"{tmp}/in",
+            [(i, _T0 + i * _MIN, 1, 1.0) for i in range(0, 8)],
+            [(i, _T0 + i * _MIN, 1, 1.0) for i in range(4, 12)],
         )
         inserted_counts: list[int] = []
 
@@ -351,8 +328,45 @@ def st_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
             [(total, distinct, sum(inserted_counts))],
             "total_rows long, distinct_keys long, inserted_sum long",
         )
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def sessionize(stream: DataFrame) -> DataFrame:
+    """Per-user 30-minute-gap sessions of a ``(user_id, ts_us)`` stream:
+    (user_id, session_start_us, n_events), emitted when a later event
+    closes the session. The open session is one (start, last, count)
+    state triple per user, so it survives micro-batch boundaries; each
+    user's still-open tail session is never emitted."""
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    gap_us = 30 * _MIN
+
+    def step(key, pdf_iter, state: GroupState):
+        if state.exists:
+            start_us, last_us, n = state.get
+        else:
+            start_us, last_us, n = None, None, 0
+        closed: list[tuple[int, int, int]] = []
+        for pdf in pdf_iter:
+            for ts_us in sorted(int(v) for v in pdf["ts_us"]):
+                if start_us is None:
+                    start_us, last_us, n = ts_us, ts_us, 1
+                elif ts_us - last_us > gap_us:
+                    closed.append((key[0], start_us, n))
+                    start_us, last_us, n = ts_us, ts_us, 1
+                else:
+                    last_us, n = ts_us, n + 1
+        state.update((start_us, last_us, n))
+        yield pd.DataFrame(
+            closed, columns=["user_id", "session_start_us", "n_events"]
+        )
+
+    return stream.groupBy("user_id").applyInPandasWithState(
+        step,
+        outputStructType="user_id long, session_start_us long, n_events long",
+        stateStructType="start_us long, last_us long, n long",
+        outputMode="append",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
 
 
 @register(
@@ -373,76 +387,23 @@ def st_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     "forever.",
 )
 def st_stateful_sessionizer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     ensure_engine_confs(spark)
-    gap_us = 30 * _MIN
-
-    def sessionize(key, pdf_iter, state: GroupState):
-        if state.exists:
-            start_us, last_us, n = state.get
-        else:
-            start_us, last_us, n = None, None, 0
-        closed: list[tuple[int, int, int]] = []
-        for pdf in pdf_iter:
-            for ts_us in sorted(int(v) for v in pdf["ts_us"]):
-                if start_us is None:
-                    start_us, last_us, n = ts_us, ts_us, 1
-                elif ts_us - last_us > gap_us:
-                    closed.append((key[0], start_us, n))
-                    start_us, last_us, n = ts_us, ts_us, 1
-                else:
-                    last_us, n = ts_us, n + 1
-        state.update((start_us, last_us, n))
-        yield pd.DataFrame(
-            closed, columns=["user_id", "session_start_us", "n_events"]
-        )
-
-    tmp = tempfile.mkdtemp(prefix="st_sess_")
-    try:
-        import os
-
-        in_dir = f"{tmp}/in"
-        os.makedirs(in_dir)
+    with tempfile.TemporaryDirectory(
+        prefix="st_sess_", ignore_cleanup_errors=True
+    ) as tmp:
         # user 1: sessions [10:00,10:10], [11:00,11:05], open [12:00...]
         # user 2: session  [10:00], open [11:30...]
         # batch split lands INSIDE user 1's second session (11:00 in b1,
         # 11:05 in b2) => state must carry across micro-batches.
-        _write_batch(
+        stream = _land(
             spark,
+            f"{tmp}/in",
             [(1, _T0, 1, 1.0), (2, _T0 + 10 * _MIN, 1, 1.0),
              (3, _T0 + 60 * _MIN, 1, 1.0), (4, _T0, 2, 1.0)],
-            in_dir,
-            1,
-        )
-        _write_batch(
-            spark,
             [(5, _T0 + 65 * _MIN, 1, 1.0), (6, _T0 + 120 * _MIN, 1, 1.0),
              (7, _T0 + 90 * _MIN, 2, 1.0)],
-            in_dir,
-            2,
-        )
-        stream = (
-            spark.readStream.schema(
-                "event_id long, ts timestamp, user_id long, value double"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-            .select("user_id", F.unix_micros("ts").alias("ts_us"))
-        )
-        sessions = stream.groupBy("user_id").applyInPandasWithState(
-            sessionize,
-            outputStructType="user_id long, session_start_us long, n_events long",
-            stateStructType="start_us long, last_us long, n long",
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-        with _small_state(spark):
-            out = _run_to_memory(sessions, "append", tmp)
-        return out.localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        ).select("user_id", F.unix_micros("ts").alias("ts_us"))
+        return _drain(sessionize(stream), "append", tmp)
 
 
 @register(
@@ -460,30 +421,23 @@ def st_stateful_sessionizer(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def st_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_engine_confs(spark)
-    tmp = tempfile.mkdtemp(prefix="st_ssj_")
-    try:
-        import os
-
-        views_dir, buys_dir = f"{tmp}/views", f"{tmp}/buys"
-        os.makedirs(views_dir)
-        os.makedirs(buys_dir)
+    with tempfile.TemporaryDirectory(
+        prefix="st_ssj_", ignore_cleanup_errors=True
+    ) as tmp:
         # views: u1@10:00, u2@10:30 | buys: u1@10:20 (in window),
         # u1@11:30 (outside 1h window), u2@10:45 (in window)
-        _write_batch(spark, [(1, _T0, 1, 1.0), (2, _T0 + 30 * _MIN, 2, 1.0)],
-                     views_dir, 1)
-        _write_batch(spark, [(3, _T0 + 20 * _MIN, 1, 5.0),
-                             (4, _T0 + 150 * _MIN, 1, 7.0),
-                             (5, _T0 + 45 * _MIN, 2, 9.0)],
-                     buys_dir, 1)
-        schema = "event_id long, ts timestamp, user_id long, value double"
         views = (
-            spark.readStream.schema(schema).parquet(views_dir)
+            _land(spark, f"{tmp}/views",
+                  [(1, _T0, 1, 1.0), (2, _T0 + 30 * _MIN, 2, 1.0)])
             .select(F.col("user_id").alias("v_user"),
                     F.col("ts").alias("v_ts"))
             .withWatermark("v_ts", "2 hours")
         )
         buys = (
-            spark.readStream.schema(schema).parquet(buys_dir)
+            _land(spark, f"{tmp}/buys",
+                  [(3, _T0 + 20 * _MIN, 1, 5.0),
+                   (4, _T0 + 150 * _MIN, 1, 7.0),
+                   (5, _T0 + 45 * _MIN, 2, 9.0)])
             .select(F.col("user_id").alias("b_user"),
                     F.col("ts").alias("b_ts"),
                     F.col("value").alias("amount"))
@@ -500,11 +454,7 @@ def st_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.unix_micros("b_ts").alias("buy_us"),
             "amount",
         )
-        with _small_state(spark):
-            out = _run_to_memory(joined, "append", tmp)
-        return out.localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return _drain(joined, "append", tmp)
 
 
 @register(
@@ -528,12 +478,20 @@ def st_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "applyInPandasWithState for explicit state schemas and eviction.",
 )
 def st_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-
-    import pandas as pd
     from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 
     ensure_engine_confs(spark)
+
+    def advance(key, cursor, pdfs):
+        """Fold one user's rows into its (n, max_ts_us) cursor (``None``
+        before its first row); return the new cursor and its output row."""
+        n, mx = cursor if cursor is not None else (0, None)
+        for pdf in pdfs:
+            n += len(pdf)
+            batch_mx = int(pdf["ts_us"].max())
+            mx = batch_mx if mx is None or batch_mx > mx else mx
+        out = pd.DataFrame({"user_id": [key[0]], "n_events": [n], "max_ts_us": [mx]})
+        return (n, mx), out
 
     class CursorProcessor(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
@@ -542,47 +500,25 @@ def st_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
         def handleInputRows(self, key, rows, timer_values):
-            got = self._state.get()
-            n, mx = got if got is not None else (0, None)
-            for pdf in rows:
-                n += len(pdf)
-                batch_mx = int(pdf["ts_us"].max())
-                mx = batch_mx if mx is None or batch_mx > mx else mx
-            self._state.update((n, mx))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "max_ts_us": [mx]}
-            )
+            cursor, out = advance(key, self._state.get(), rows)
+            self._state.update(cursor)
+            yield out
 
         def close(self) -> None:
             pass
 
-    tmp = tempfile.mkdtemp(prefix="st_tws_")
-    try:
-        in_dir = f"{tmp}/in"
-        os.makedirs(in_dir)
+    with tempfile.TemporaryDirectory(
+        prefix="st_tws_", ignore_cleanup_errors=True
+    ) as tmp:
         # Two micro-batches; user 1 appears in both so its state must
         # carry (n: 2 then 3; max advances), user 2 only in batch 1.
-        _write_batch(
+        stream = _land(
             spark,
+            f"{tmp}/in",
             [(1, _T0, 1, 1.0), (2, _T0 + 10 * _MIN, 1, 1.0),
              (3, _T0 + 5 * _MIN, 2, 1.0)],
-            in_dir,
-            1,
-        )
-        _write_batch(
-            spark,
             [(4, _T0 + 20 * _MIN, 1, 1.0)],
-            in_dir,
-            2,
-        )
-        stream = (
-            spark.readStream.schema(
-                "event_id long, ts timestamp, user_id long, value double"
-            )
-            .option("maxFilesPerTrigger", "1")
-            .parquet(in_dir)
-            .select("user_id", F.unix_micros("ts").alias("ts_us"))
-        )
+        ).select("user_id", F.unix_micros("ts").alias("ts_us"))
         out_ddl = "user_id long, n_events long, max_ts_us long"
         try:
             # TWS state server speaks protobuf from the python worker.
@@ -601,15 +537,11 @@ def st_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
             def cursor_fn(key, pdf_iter, state: GroupState):
-                n, mx = state.get if state.exists else (0, None)
-                for pdf in pdf_iter:
-                    n += len(pdf)
-                    batch_mx = int(pdf["ts_us"].max())
-                    mx = batch_mx if mx is None or batch_mx > mx else mx
-                state.update((n, mx))
-                yield pd.DataFrame(
-                    {"user_id": [key[0]], "n_events": [n], "max_ts_us": [mx]}
+                cursor, out = advance(
+                    key, state.get if state.exists else None, pdf_iter
                 )
+                state.update(cursor)
+                yield out
 
             totals = stream.groupBy("user_id").applyInPandasWithState(
                 cursor_fn,
@@ -618,8 +550,4 @@ def st_transform_with_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                 outputMode="append",
                 timeoutConf=GroupStateTimeout.NoTimeout,
             )
-        with _small_state(spark):
-            out = _run_to_memory(totals, "append", tmp)
-        return out.localCheckpoint()
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
+        return _drain(totals, "append", tmp)
