@@ -95,15 +95,15 @@ def test_small_append_writes_one_nonempty_file(spark, tmp_path):
     assert len(seeded) == 3
 
     both = _weather_batch(spark, "2024-01-01 00:00:00", "2024-01-01 02:15:00")
-    assert idempotent_append(spark, both, sink, ["date"]) == 1
+    assert idempotent_append(spark, both, sink, ["date"]).rows == 1
     appended = _part_files(sink)
     assert len(appended - seeded) == 1 and seeded <= appended
     assert all(
         pq.read_metadata(f"{sink}/{name}").num_rows > 0 for name in appended
     )
 
-    assert idempotent_append(spark, both, sink, ["date"]) == 0
-    assert idempotent_append(spark, both.limit(0), sink, ["date"]) == 0
+    assert idempotent_append(spark, both, sink, ["date"]).rows == 0
+    assert idempotent_append(spark, both.limit(0), sink, ["date"]).rows == 0
     assert _part_files(sink) == appended
     assert spark.read.parquet(sink).count() == 9
 
@@ -115,7 +115,7 @@ def test_append_releases_its_checkpoint(spark, tmp_path, monkeypatch):
     sink = str(tmp_path / "sink")
     batch = _weather_batch(spark, "2024-01-01 00:00:00", "2024-01-01 01:00:00")
     before = _persistent_ids(spark)
-    assert idempotent_append(spark, batch, sink, ["date"]) == 4
+    assert idempotent_append(spark, batch, sink, ["date"]).rows == 4
     assert _persistent_ids(spark) == before
 
     bad = spark.range(3).select(
@@ -135,14 +135,7 @@ def test_append_releases_its_checkpoint(spark, tmp_path, monkeypatch):
     assert _persistent_ids(spark) == before
 
 
-def test_no_insert_run_reuses_the_cursor(spark, tmp_path, monkeypatch):
-    """A run that inserts nothing reports the sink's MAX(date) as its
-    latest cursor without re-reading the sink: discover_cursor runs
-    once (pre-run) instead of twice."""
-    sink = str(tmp_path / "sink")
-    batch = _weather_batch(spark, "2024-01-01 00:00:00", "2024-01-01 02:00:00")
-    assert run_incremental(spark, batch, sink, ["date"])["records_inserted"] == 8
-
+def _count_discover_calls(monkeypatch) -> list:
     calls = []
     discover = incremental.discover_cursor
 
@@ -151,12 +144,66 @@ def test_no_insert_run_reuses_the_cursor(spark, tmp_path, monkeypatch):
         return discover(*args, **kwargs)
 
     monkeypatch.setattr(incremental, "discover_cursor", counting_discover)
+    return calls
+
+
+def test_no_insert_run_reuses_the_cursor(spark, tmp_path, monkeypatch):
+    """A run that inserts nothing reports the sink's MAX(date) as its
+    latest cursor without re-reading the sink: discover_cursor runs
+    once (pre-run)."""
+    sink = str(tmp_path / "sink")
+    batch = _weather_batch(spark, "2024-01-01 00:00:00", "2024-01-01 02:00:00")
+    assert run_incremental(spark, batch, sink, ["date"])["records_inserted"] == 8
+
+    calls = _count_discover_calls(monkeypatch)
     replay = run_incremental(spark, batch, sink, ["date"])
     assert (replay["statusCode"], replay["records_inserted"]) == (200, 0)
     sink_max = spark.read.parquet(sink).agg(F.max("date")).first()[0]
     assert replay["latest_cursor"] == sink_max.isoformat()
     assert replay["pre_run_cursor"] == replay["latest_cursor"]
     assert len(calls) == 1
+
+
+def test_inserting_run_reads_the_cursor_once(spark, tmp_path, monkeypatch):
+    """A run that inserts rows takes its new cursor from the max the
+    append observed over them, so it scans the sink for MAX(date) once,
+    before the append, like a run that inserts nothing."""
+    sink = str(tmp_path / "sink")
+    batch = _weather_batch(spark, "2024-01-01 00:00:00", "2024-01-01 02:00:00")
+    assert run_incremental(spark, batch, sink, ["date"])["records_inserted"] == 8
+
+    calls = _count_discover_calls(monkeypatch)
+    later = _weather_batch(spark, "2024-01-01 01:00:00", "2024-01-01 03:00:00")
+    grown = run_incremental(spark, later, sink, ["date"])
+    assert (grown["statusCode"], grown["records_inserted"]) == (200, 4)
+    sink_max = spark.read.parquet(sink).agg(F.max("date")).first()[0]
+    assert grown["latest_cursor"] == sink_max.isoformat()
+    assert len(calls) == 1
+
+
+def test_replay_with_now_at_the_cursor(spark, tmp_path):
+    """``now`` equal to the sink's cursor leaves no row that passes both
+    bounds (A5/A6); Catalyst folds that filtered local relation to an
+    empty one, so the append's checkpoint reads no source at all.  The
+    run still reports every fetched row, inserts 0 and adds no file."""
+    sink = str(tmp_path / "sink")
+    rows = [
+        (datetime.datetime(2024, 1, 1, 0, 15 * i), float(i)) for i in range(4)
+    ]
+    batch = spark.createDataFrame(rows, "date timestamp, rain double")
+    assert run_incremental(spark, batch, sink, ["date"])["records_inserted"] == 4
+    files = _part_files(sink)
+
+    cursor = rows[-1][0]
+    replay = run_incremental(spark, batch, sink, ["date"], now=cursor)
+    assert replay == {
+        "statusCode": 200,
+        "records_fetched": 4,
+        "records_inserted": 0,
+        "pre_run_cursor": cursor.isoformat(),
+        "latest_cursor": cursor.isoformat(),
+    }
+    assert _part_files(sink) == files
 
 
 def test_cursor_strict_and_future_bound(spark):

@@ -85,6 +85,11 @@ def test_incremental_matches_model_and_is_idempotent(
         if inserted:
             mx = max(inserted.values())
             model_cursor = mx if model_cursor is None or mx > model_cursor else model_cursor
+        want_cursor = (
+            None if model_cursor is None
+            else model_cursor.replace(tzinfo=None).isoformat()
+        )
+        assert result["latest_cursor"] == want_cursor
 
         # Idempotence: replaying the SAME batch immediately is a no-op.
         replay = run_incremental(
@@ -92,6 +97,7 @@ def test_incremental_matches_model_and_is_idempotent(
         )
         assert replay["statusCode"] == 200
         assert replay["records_inserted"] == 0
+        assert replay["latest_cursor"] == want_cursor
 
     if model_keys:
         actual = spark.read.parquet(sink)

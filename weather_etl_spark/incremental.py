@@ -105,8 +105,10 @@ def run_incremental(
     * ``latest_cursor`` here is the POST-insert sink cursor (what the
       next run will resume from); the reference reports the PRE-run
       cursor.  Both are returned: ``pre_run_cursor`` carries the
-      reference's value.  The sink is re-read for it only when the run
-      inserted rows.
+      reference's value.  The sink is not re-read for it: the append
+      reports the max ts of the rows it inserted.  ``records_fetched``
+      stays its own ``count()``: when ``now`` equals the cursor the
+      filtered source folds to an empty relation that no job reads.
     """
     ensure_engine_confs(spark)
     ts_col = ts_col or key_cols[0]
@@ -121,16 +123,16 @@ def run_incremental(
         fresh = filter_new_records(source_df, ts_col, cursor, now=now)
         if float_cols:
             fresh = normalize_nans(fresh, float_cols)
-        inserted = idempotent_append(spark, fresh, sink_path, key_cols)
-        # A run that inserted nothing left the sink as it was, so the
-        # pre-run cursor is exact and the ts-column scan is skipped.
-        latest = (
-            discover_cursor(spark, sink_path, ts_field) if inserted else cursor
+        appended = idempotent_append(spark, fresh, sink_path, key_cols)
+        # The sink's new MAX(ts): the pre-run cursor or the inserted max.
+        latest = max(
+            (c for c in (cursor, appended.upper[ts_col]) if c is not None),
+            default=None,
         )
         return {
             "statusCode": 200,
             "records_fetched": fetched,
-            "records_inserted": inserted,
+            "records_inserted": appended.rows,
             "pre_run_cursor": None if cursor is None else cursor.isoformat(),
             "latest_cursor": None if latest is None else latest.isoformat(),
         }

@@ -20,7 +20,6 @@ from weather_etl_spark.sinks import (
     jdbc_create_keyed_table,
     jdbc_merge_append,
     jdbc_read_table,
-    write_partitioned,
 )
 
 
@@ -46,8 +45,8 @@ def snk_append_idem(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="snk_append_idem_")
     sink = f"{tmp}/sink"
     try:
-        first = idempotent_append(spark, ev, sink, ["event_id"])
-        second = idempotent_append(spark, ev, sink, ["event_id"])
+        first = idempotent_append(spark, ev, sink, ["event_id"]).rows
+        second = idempotent_append(spark, ev, sink, ["event_id"]).rows
         # Empty batches never create the sink (A12 short-circuit in
         # idempotent_append), so read back with the EXPLICIT batch
         # schema and treat a never-materialized sink as zero rows —
@@ -88,9 +87,7 @@ def snk_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="snk_partitioned_")
     sink = f"{tmp}/sink"
     try:
-        write_partitioned(
-            ev.repartition("event_date"), sink, ["event_date"]
-        )
+        ev.repartition("event_date").write.partitionBy("event_date").parquet(sink)
         # Explicit schema on read-back (fail-fast/no-inference contract,
         # SURVEY §1.3) — also makes a zero-row write (directory with no
         # data files) readable instead of an inference error.  Partition

@@ -1,4 +1,4 @@
-"""Parquet sinks: idempotent keyed append + partitioned writes.
+"""Sinks: the idempotent keyed Parquet append and the keyed JDBC merge.
 
 The reference's sink is ``INSERT ... ON CONFLICT (date) DO NOTHING``
 (/root/reference/lambda_function.py:176-186, operator A11) — an
@@ -7,6 +7,7 @@ MERGE or PK, so the engine's equivalent (SURVEY.md §7.5) is:
 
     new.dropDuplicates(key)                 # dedup within the batch
        .join(existing, key, "left_anti")    # drop keys already present
+       .observe(count, max per column)      # what the append inserts
        -> localCheckpoint                   # run the merge once
        -> write.mode("append")              # append only the novel rows
 
@@ -16,7 +17,9 @@ so a small batch coalesces from the dedup shuffle's partitions to one,
 and the append writes one Parquet file.  AQE may not change a cached
 plan's partitioning, and Spark's Parquet writer writes a file for
 partition 0 even when it is empty, so a ``persist()`` would add a
-0-row file beside nearly every small insert.
+0-row file beside nearly every small insert.  That job is also the
+only pass that counts, as the reference reads ``rowcount`` off its
+one INSERT.
 
 Crash safety: Spark's Parquet committer stages task output under
 ``_temporary`` and commits per job, so a failed write leaves no
@@ -39,11 +42,22 @@ from __future__ import annotations
 
 import os
 from collections.abc import Sequence
+from typing import Any, NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import AtomicType, SpatialType, StructType, VariantType
 
 from weather_etl_spark.checkpoints import release_rdds, tracked_local_checkpoint
+
+
+class Appended(NamedTuple):
+    """Rows inserted, and ``upper``: each orderable column's max over
+    them (None when nothing was inserted; map, array, struct, variant
+    and spatial columns are left out)."""
+
+    rows: int
+    upper: dict[str, Any]
 
 
 def idempotent_append(
@@ -51,20 +65,21 @@ def idempotent_append(
     new_rows: DataFrame,
     sink_path: str,
     key_cols: Sequence[str],
-) -> int:
+) -> Appended:
     """Append only rows whose key is not already in the sink.
 
-    Returns the number of rows inserted (the reference returns
-    ``cursor.rowcount`` the same way, lambda_function.py:186,190).
-    The sink's keys are read with the batch's own key types, so a sink
+    Returns the rows inserted (the reference returns ``cursor.rowcount``
+    the same way, lambda_function.py:186,190) and their column maxes,
+    so a caller can advance a cursor without re-reading the sink.  The
+    sink's keys are read with the batch's own key types, so a sink
     directory without data files yet reads as empty instead of failing
     schema inference.
 
-    The merge runs exactly once, into the checkpoint; the count and the
-    write both read it, so the count is the number of rows written.  A
-    count of 0 skips the write: an empty result adds no file (A12).
-    The checkpoint's blocks are released in ``finally``, on success and
-    on failure alike.
+    The merge runs exactly once, into the checkpoint; the observation
+    on it counts the rows that job materializes, so the count is the
+    number of rows written.  A count of 0 skips the write: an empty
+    result adds no file (A12).  The checkpoint's blocks are released in
+    ``finally``, on success and on failure alike.
     """
     deduped = new_rows.dropDuplicates(list(key_cols))
     if os.path.exists(sink_path):
@@ -73,14 +88,27 @@ def idempotent_append(
         to_insert = deduped.join(existing_keys, on=list(key_cols), how="left_anti")
     else:
         to_insert = deduped
+    cols = [
+        f.name
+        for f in to_insert.schema
+        if isinstance(f.dataType, AtomicType)
+        and not isinstance(f.dataType, (VariantType, SpatialType))
+    ]
+    seen = Observation()
+    to_insert = to_insert.observe(
+        seen,
+        F.count(F.lit(1)).alias("rows"),
+        *(F.max(c).alias(f"max{i}") for i, c in enumerate(cols)),
+    )
     to_insert, ids = tracked_local_checkpoint(to_insert)
     try:
-        inserted = to_insert.count()
-        if inserted > 0:
+        got = seen.get
+        upper = {c: got[f"max{i}"] for i, c in enumerate(cols)}
+        if got["rows"] > 0:
             to_insert.write.mode("append").parquet(sink_path)
     finally:
         release_rdds(spark, ids)
-    return inserted
+    return Appended(got["rows"], upper)
 
 
 def derby_url(db_path: str, create: bool = False) -> str:
@@ -217,17 +245,3 @@ def derby_shutdown(spark: SparkSession, db_path: str) -> None:
         _driver_connection(spark, f"jdbc:derby:{db_path};shutdown=true")
     except Exception:
         pass
-
-
-def write_partitioned(
-    df: DataFrame,
-    sink_path: str,
-    partition_cols: Sequence[str],
-    mode: str = "overwrite",
-) -> None:
-    """Partitioned Parquet write — the engine's 100 TB layout primitive.
-
-    Partition columns become directory keys (``col=value``), giving
-    free partition pruning to every downstream cursor/date filter.
-    """
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(sink_path)

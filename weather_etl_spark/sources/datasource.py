@@ -63,11 +63,10 @@ def make_weather_sim_datasource():
             # slice this shard, guaranteeing bit-identity with the
             # driver-side fetch path regardless of sharding.
             import numpy as np
-            import pyarrow as pa
 
             from weather_etl_spark.sources.fetch import (
-                MEASURES,
                 fake_columnar_transport,
+                weather_arrow,
             )
 
             cols = fake_columnar_transport(
@@ -76,19 +75,9 @@ def make_weather_sim_datasource():
             time_s = cols["time_s"]
             lo = np.searchsorted(time_s, partition.start_s, "left")
             hi = np.searchsorted(time_s, partition.end_s, "left")
-            arrays = [
-                pa.array((time_s[lo:hi] * 1_000_000).astype("int64")).cast(
-                    pa.timestamp("us")
-                )
-            ] + [
-                # float64 numpy -> Arrow keeps NaN as a VALUE (A10: NaN
-                # stays NaN until the sink boundary).
-                pa.array(cols[m][lo:hi].astype("float64"))
-                for m in MEASURES
-            ]
-            yield pa.RecordBatch.from_arrays(
-                arrays, names=["date"] + list(MEASURES)
-            )
+            yield from weather_arrow(
+                {k: v[lo:hi] for k, v in cols.items()}
+            ).to_batches()
 
     class WeatherSimDataSource(DataSource):
         @classmethod

@@ -198,24 +198,22 @@ def fetch_timeseries(
     else:  # pragma: no cover
         raise last_err  # type: ignore[misc]
 
-    # Arrow table, not pandas: pandas uses NaN as its missing-value
-    # sentinel, so createDataFrame(pandas) silently turns NaN into NULL —
-    # breaking the reference's "NaN stays NaN until the sink" invariant
-    # (A10).  Arrow keeps NaN as a value (null mask is separate), matching
-    # the zero-copy float-vector decode of the reference (A1).
+    return spark.createDataFrame(weather_arrow(cols), schema=WEATHER_SCHEMA)
+
+
+def weather_arrow(cols: dict):
+    """Decoded columns -> Arrow in ``WEATHER_SCHEMA`` order (µs time
+    axis, float64 measures), for the driver fetch and the DataSource.
+    Arrow, not pandas: pandas uses NaN as its missing-value sentinel,
+    so createDataFrame(pandas) silently turns NaN into NULL — breaking
+    the reference's "NaN stays NaN until the sink" invariant (A10)."""
     import pyarrow as pa
 
-    arrays = [
-        pa.array((cols["time_s"] * 1_000_000).astype("int64")).cast(
-            pa.timestamp("us")
-        )
-    ]
-    names = ["date"]
-    for m in MEASURES:
-        arrays.append(pa.array(cols[m].astype("float64"), from_pandas=False))
-        names.append(m)
-    table = pa.Table.from_arrays(arrays, names=names)
-    return spark.createDataFrame(table, schema=WEATHER_SCHEMA)
+    micros = (cols["time_s"] * 1_000_000).astype("int64")
+    return pa.table(
+        {"date": pa.array(micros, pa.timestamp("us"))}
+        | {m: pa.array(cols[m].astype("float64")) for m in MEASURES}
+    )
 
 
 @register(
