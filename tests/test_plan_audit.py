@@ -1,12 +1,12 @@
-"""Registry-wide physical-plan invariants (see tools/audit_plans.py).
+"""Registry-wide plan invariants (see tools/audit_plans.py).
 
 test_scale_plans.py pins the exact plan shape of individual operators;
-this file sweeps EVERY registered operator for the three red flags that
-are never acceptable by accident at 100 TB: a keyless CartesianProduct,
-an unbounded BroadcastNestedLoopJoin, and row-at-a-time Python outside
-the two deliberate slow-path demos.  Plans are built and scanned, never
-executed (only driver-side plan inputs — bounded collect()s such as
-centroid sets — run).
+this file sweeps EVERY registered operator for the red flags that are
+never acceptable by accident at 100 TB: a keyless join or a keyless
+Window that Catalyst cannot bound and no residual ledger lists, and
+row-at-a-time Python outside the two deliberate slow-path demos.
+Plans are built and scanned, never executed (only driver-side plan
+inputs — bounded collect()s such as centroid sets — run).
 """
 
 from __future__ import annotations
@@ -19,17 +19,15 @@ import pytest
 pytestmark = pytest.mark.full  # heavy lane (see pytest.ini)
 
 from weather_etl_spark.plan_audit import (
-    ALLOW_BNL,
-    ALLOW_KEYLESS_WINDOW,
-    AUDIT_SKIP,
+    RESIDUAL,
     audit_plan,
-    disallowed_flags,
-    keyless_windows,
+    keyless,
+    plan_audit,
 )
 from weather_etl_spark.registry import load_all
 
 SPECS = load_all()
-NAMES = sorted(n for n in SPECS if n not in AUDIT_SKIP)
+NAMES = sorted(SPECS)
 
 #: Committed per-query shuffle ledger (tools/emit_plan_snapshot.py):
 #: the number of shuffle Exchanges in each plan at the test SF.  A
@@ -44,21 +42,9 @@ SNAPSHOT: dict[str, int] = json.loads(
 def test_no_disallowed_plan_nodes(spark, sf_dir, name):
     df = SPECS[name].fn(spark, sf_dir)
     report = audit_plan(df)
-    bad = disallowed_flags(name, report)
+    bad = plan_audit(name, df)
     assert not bad, (
-        f"{name}: disallowed plan node(s) {bad}\n{report.text}"
-    )
-    # the BNL allowlist shrinks with the plans: an entry whose plan no
-    # longer nests a loop is stale and must be deleted
-    assert (
-        name not in ALLOW_BNL or "BroadcastNestedLoopJoin" in report.nodes
-    ), f"{name}: in ALLOW_BNL but its plan has no BroadcastNestedLoopJoin"
-    # single-partition Window funnel: admissible only with a declared
-    # bound (the r8 verdict's "window ledgers" radar item, mechanized)
-    hits = keyless_windows(df)
-    assert not hits or name in ALLOW_KEYLESS_WINDOW, (
-        f"{name}: keyless Window without a declared bound:\n"
-        + "\n".join(hits)
+        f"{name}: disallowed plan shape(s) {bad}\n{report.text}"
     )
     # shuffle-count regression net: the committed snapshot pins every
     # plan's Exchange count; a silently-gained shuffle fails here
@@ -75,11 +61,21 @@ def test_no_disallowed_plan_nodes(spark, sf_dir, name):
     )
 
 
-def test_keyless_window_allowlist_is_tight():
-    """Every ALLOW_KEYLESS_WINDOW entry names a registered query, so
-    renames/deletions can't leave stale reasons behind."""
-    stale = set(ALLOW_KEYLESS_WINDOW) - set(SPECS)
-    assert not stale, f"allowlist entries for unregistered queries: {stale}"
+@pytest.mark.parametrize(
+    "kind,name",
+    [(kind, name) for kind, ledger in RESIDUAL.items() for name in ledger],
+)
+def test_residual_ledgers_are_tight(spark, sf_dir, kind, name):
+    """Every residual-ledger entry names a registered query whose plan
+    still has a keyless node of its kind that Catalyst cannot bound:
+    an entry the rule now derives, or one left behind by a rename or
+    a plan change, is stale and must be deleted."""
+    assert name in SPECS, f"{kind} ledger names unregistered query {name}"
+    found = keyless(SPECS[name].fn(spark, sf_dir))
+    assert any(k.kind == kind and not k.bounded for k in found), (
+        f"{name}: listed in the {kind} ledger but its plan has no "
+        f"unbounded keyless {kind}: {[str(k) for k in found]}"
+    )
 
 
 def test_plan_snapshot_is_tight():

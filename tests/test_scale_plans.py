@@ -1247,7 +1247,7 @@ def test_tpch_q17_pushes_brand_filter(spark, sf_dir):
 def test_tpch_q22_anti_join_on_distinct_keys(spark, sf_dir):
     plan = _executed_plan(SPECS["q_tpch_q22"].fn(spark, sf_dir))
     assert "CartesianProduct" not in plan
-    # the only BNL is the 1-row threshold broadcast (plan_audit ALLOW_BNL)
+    # the only BNL is the 1-row threshold broadcast (Catalyst maxRows 1)
     assert plan.count("BroadcastNestedLoopJoin") <= 1
 
 

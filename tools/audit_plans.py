@@ -1,14 +1,17 @@
-"""Physical-plan red-flag audit across the whole registry.
+"""Plan red-flag audit across the whole registry.
 
 For every registered operator, build (don't execute) its DataFrame at
-the audit SF and scan the formatted physical plan for the node types
-that decide whether the plan survives a 100x scale-up:
+the audit SF and look for the plan shapes that decide whether it
+survives a 100x scale-up:
 
-- ``CartesianProduct`` — O(n*m) without a join key; only the one
-  operator that *means* cross join may contain it.
-- ``BroadcastNestedLoopJoin`` — fine when one side is provably tiny
-  (a 1-row aggregate crossJoin, a bounded probe matrix), fatal when it
-  appears by accident on two large relations.
+- keyless join (no equi-join key, walked on the optimized logical
+  plan) — planned as a ``CartesianProduct`` or a
+  ``BroadcastNestedLoopJoin``: fine when Catalyst bounds one side
+  (``maxRows`` of a 1-row aggregate crossJoin, a LIMIT, a
+  ``range(k)``) by ``plan_audit.MAX_KEYLESS_ROWS``, fatal when it
+  pairs two large relations.
+- keyless ``Window`` (empty partitionSpec) — a single-partition
+  funnel; fine when Catalyst bounds its input the same way.
 - ``BatchEvalPython`` / ``BatchEvalPythonUDTF`` — row-at-a-time Python,
   the ~100x-slower-than-Arrow path; allowed only in the two operators
   whose PURPOSE is to demonstrate that path next to its vectorized
@@ -16,16 +19,17 @@ that decide whether the plan survives a 100x scale-up:
 - ``Exchange`` count — shuffles; reported so a diff review catches a
   plan that silently gained one.
 - ``WholeStageCodegen`` span count — reported for codegen coverage.
-- keyless ``Window`` (empty partitionSpec, walked on the optimized
-  logical plan) — a single-partition funnel; admissible only with a
-  declared input bound in ``plan_audit.ALLOW_KEYLESS_WINDOW`` (ledger /
-  probe-panel / dim-scale inputs, or rows whose OUTPUT is the global
-  rank).
+
+A keyless join or Window that Catalyst cannot bound is admissible only
+when its query is listed, with the bound Catalyst cannot see, in
+``plan_audit.ALLOW_UNBOUNDED_JOIN`` or ``plan_audit.ALLOW_KEYLESS_WINDOW``;
+``plan_audit.plan_audit`` gives the verdict.
 
 Usage: ``python tools/audit_plans.py [sf_dir]`` prints one CSV row per
-operator (name, exchanges, codegen spans, flags) and a summary; exits
-non-zero if a disallowed red flag appears.  tests/test_plan_audit.py
-runs the same scan as a pytest invariant.
+operator (name, exchanges, codegen spans, each keyless node as
+``kind:rows`` with ``inf`` for unbounded, disallowed findings) and a
+summary; exits non-zero if a disallowed finding appears.
+tests/test_plan_audit.py runs the same verdict as a pytest invariant.
 
 Note: calling an operator's builder executes any *driver-side plan
 inputs* it needs (bounded collect()s such as k-means centroids or the
@@ -42,11 +46,9 @@ ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
 
 from weather_etl_spark.plan_audit import (  # noqa: E402
-    ALLOW_KEYLESS_WINDOW,
-    AUDIT_SKIP,
     audit_plan,
-    disallowed_flags,
-    keyless_windows,
+    keyless,
+    plan_audit,
 )
 from weather_etl_spark.registry import load_all  # noqa: E402
 from weather_etl_spark.session import get_spark  # noqa: E402
@@ -56,25 +58,19 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark("plan-audit")
     bad: list[str] = []
-    print("name,exchanges,codegen_spans,flags,keyless_window")
+    print("name,exchanges,codegen_spans,keyless,disallowed")
     for name, spec in sorted(load_all().items()):
-        if name in AUDIT_SKIP:
-            print(f"{name},-,-,skipped({AUDIT_SKIP[name]}),-")
-            continue
         df = spec.fn(spark, sf_dir)
         report = audit_plan(df)
-        flags = disallowed_flags(name, report)
-        kw = keyless_windows(df)
-        if kw and name not in ALLOW_KEYLESS_WINDOW:
-            flags = flags + ["keyless Window"]
-        bad.extend(f"{name}:{f}" for f in flags)
-        kw_col = "-" if not kw else (
-            "allowed" if name in ALLOW_KEYLESS_WINDOW else "FLAGGED"
+        found = plan_audit(name, df)
+        bad.extend(f"{name}:{f}" for f in found)
+        shapes = "|".join(
+            f"{k.kind}:{'inf' if k.rows is None else k.rows}"
+            for k in keyless(df)
         )
         print(
             f"{name},{report.exchanges},{report.codegen_spans},"
-            f"{'|'.join(sorted(report.nodes & report.FLAG_NODES)) or '-'},"
-            f"{kw_col}"
+            f"{shapes or '-'},{'|'.join(found) or '-'}"
         )
     if bad:
         print(f"DISALLOWED: {bad}", file=sys.stderr)
