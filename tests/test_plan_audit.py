@@ -20,9 +20,9 @@ pytestmark = pytest.mark.full  # heavy lane (see pytest.ini)
 
 from weather_etl_spark.plan_audit import (
     RESIDUAL,
-    audit_plan,
     keyless,
     plan_audit,
+    plan_nodes,
 )
 from weather_etl_spark.registry import load_all
 
@@ -41,23 +41,22 @@ SNAPSHOT: dict[str, int] = json.loads(
 @pytest.mark.parametrize("name", NAMES)
 def test_no_disallowed_plan_nodes(spark, sf_dir, name):
     df = SPECS[name].fn(spark, sf_dir)
-    report = audit_plan(df)
-    bad = plan_audit(name, df)
-    assert not bad, (
-        f"{name}: disallowed plan shape(s) {bad}\n{report.text}"
-    )
+    nodes = plan_nodes(df)
+    bad = plan_audit(name, df, nodes)
+    tree = df._jdf.queryExecution().executedPlan
+    assert not bad, f"{name}: disallowed plan shape(s) {bad}\n{tree()}"
     # shuffle-count regression net: the committed snapshot pins every
     # plan's Exchange count; a silently-gained shuffle fails here
     assert name in SNAPSHOT, (
         f"{name}: not in tests/plan_snapshot.json — regenerate with "
         "tools/emit_plan_snapshot.py"
     )
-    assert report.exchanges == SNAPSHOT[name], (
-        f"{name}: plan has {report.exchanges} shuffle Exchanges, "
+    assert nodes["Exchange"] == SNAPSHOT[name], (
+        f"{name}: plan has {nodes['Exchange']} shuffle Exchanges, "
         f"snapshot says {SNAPSHOT[name]} — if the plan change is "
         "intended, regenerate tests/plan_snapshot.json "
         "(tools/emit_plan_snapshot.py) in the same commit\n"
-        f"{report.text}"
+        f"{tree()}"
     )
 
 
@@ -93,10 +92,14 @@ def test_sf1_plan_snapshot_pins_heaviest_selection():
     exactly the TOP_N shuffle-heaviest snapshot rows (TOP_N lives in
     the tool — 60 since the r10 widening) per the mechanical selection
     rule, inline the committed sf0.01 counts it claims to diff
-    against, and carry the executed-join composition fields — so the
-    10x ledger can't silently drift from the sf0.01 snapshot it
-    annotates.  Regenerate with tools/emit_plan_snapshot_sf1.py when
-    plan_snapshot.json moves a top-TOP_N row."""
+    against, and carry the join composition fields — so the 10x
+    ledger can't silently drift from the sf0.01 snapshot it annotates.
+    Rows emitted before the tool ran each query through its own
+    QueryExecution carry exec_bhj/exec_smj/exec_shj counts of the
+    pre-execution plan, which AQE never finalized (see the tool's
+    docstring); a re-emission records the final plan's.  Regenerate
+    with tools/emit_plan_snapshot_sf1.py when plan_snapshot.json moves
+    a top-TOP_N row."""
     import sys
 
     root = str(Path(__file__).resolve().parent.parent)

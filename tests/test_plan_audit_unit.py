@@ -16,12 +16,20 @@ import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from weather_etl_spark.plan_audit import audit_plan, keyless, plan_audit
+from weather_etl_spark.plan_audit import (
+    keyless,
+    plan_audit,
+    plan_nodes,
+    run_final,
+)
 
 pytestmark = pytest.mark.fast
 
 #: A query name no ledger lists: the verdict sees only the plan.
 UNLISTED = "q_plan_audit_unit"
+
+#: The physical plans of a join without an equi-join key.
+KEYLESS_JOINS = {"CartesianProduct", "BroadcastNestedLoopJoin"}
 
 
 @pytest.fixture(scope="module")
@@ -73,51 +81,55 @@ def test_keyless_window_detector_sees_subquery_plans(spark, pair_df):
 
 
 def test_physical_flags_detector_fires(unbounded_cross):
-    report = audit_plan(unbounded_cross)
-    assert report.nodes & {
-        "CartesianProduct",
-        "BroadcastNestedLoopJoin",
-    }, report.text
+    nodes = plan_nodes(unbounded_cross)
+    assert nodes.keys() & KEYLESS_JOINS, nodes
 
 
 def test_physical_flags_detector_silent_on_equi_join(pair_df, spark):
     other = spark.range(10).withColumnRenamed("id", "k2")
     df = pair_df.join(other, pair_df.k == other.k2)
-    report = audit_plan(df)
-    assert not report.nodes & {
-        "CartesianProduct",
-        "BroadcastNestedLoopJoin",
-    }, report.text
+    nodes = plan_nodes(df)
+    assert not nodes.keys() & KEYLESS_JOINS, nodes
     assert keyless(df) == []
 
 
 def test_plan_nodes_name_the_equi_join(pair_df, spark):
     other = spark.range(10).withColumnRenamed("id", "k2")
-    report = audit_plan(pair_df.join(other, pair_df.k == other.k2))
-    assert "BroadcastHashJoin" in report.nodes, sorted(report.nodes)
+    nodes = plan_nodes(pair_df.join(other, pair_df.k == other.k2))
+    assert nodes["BroadcastHashJoin"] == 1, nodes
+
+
+def test_plan_nodes_walk_into_query_stages(pair_df, spark):
+    """Once the query ran, AQE's final plan hides each shuffle and the
+    join above it inside query stages: the walk must descend them."""
+    other = spark.range(10).withColumnRenamed("id", "k2")
+    df = pair_df.join(other.hint("merge"), pair_df.k == other.k2)
+    nodes = run_final(df)
+    assert nodes["ShuffleQueryStage"] == 2, nodes
+    assert nodes["Exchange"] == 2 and nodes["SortMergeJoin"] == 1, nodes
 
 
 def test_cross_join_with_global_aggregate_is_admissible(scan_df):
     df = scan_df.crossJoin(scan_df.agg(F.count("*").alias("n")))
     assert [(k.kind, k.rows) for k in keyless(df)] == [("join", 1)]
-    assert plan_audit(UNLISTED, df) == []
+    assert plan_audit(UNLISTED, df, plan_nodes(df)) == []
 
 
 def test_unbounded_keyless_join_is_flagged(unbounded_cross):
     assert [(k.kind, k.rows) for k in keyless(unbounded_cross)] == [
         ("join", None)
     ]
-    bad = plan_audit(UNLISTED, unbounded_cross)
+    bad = plan_audit(UNLISTED, unbounded_cross, plan_nodes(unbounded_cross))
     assert len(bad) == 1 and "Join[no equi-join key]" in bad[0], bad
 
 
 def test_keyless_window_over_limit_is_admissible(scan_df):
     df = _by_rank(scan_df.withColumnRenamed("r_regionkey", "rk").limit(20))
     assert [(k.kind, k.rows) for k in keyless(df)] == [("window", 20)]
-    assert plan_audit(UNLISTED, df) == []
+    assert plan_audit(UNLISTED, df, plan_nodes(df)) == []
 
 
 def test_keyless_window_over_unbounded_frame_is_flagged(scan_df):
     df = _by_rank(scan_df.withColumnRenamed("r_regionkey", "rk"))
-    bad = plan_audit(UNLISTED, df)
+    bad = plan_audit(UNLISTED, df, plan_nodes(df))
     assert len(bad) == 1 and "Window[no partitionBy] -> rn" in bad[0], bad

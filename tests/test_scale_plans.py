@@ -15,6 +15,7 @@ import pytest
 
 pytestmark = pytest.mark.full  # heavy lane (see pytest.ini)
 
+from weather_etl_spark.plan_audit import plan_nodes, run_final
 from weather_etl_spark.registry import load_all
 
 SPECS = load_all()
@@ -246,50 +247,10 @@ def test_aqe_splits_skewed_join_partition(spark, sf_dir):
         # groupBy(k) right after the join would pin the partitioning and
         # make AQE skip the skew split)
         joined = left.join(right, "k").agg(F.sum("payload").alias("s"))
-        joined.collect()
-        # Structural probe first: walk the executed plan for a
-        # SortMergeJoinExec and ask isSkewJoin() directly — survives
-        # plan-STRING format changes across Spark versions. Fall back to
-        # the known string markers; if neither probe is available on
-        # this build, skip loudly rather than fail on formatting.
-        exec_plan = joined._jdf.queryExecution().executedPlan()
-        skew_flags = []
-        try:
-            import py4j.java_gateway as jg
-
-            stack = [exec_plan]
-            while stack:
-                node = stack.pop()
-                cls = node.getClass().getName()
-                if "SortMergeJoin" in cls or "ShuffledHashJoin" in cls:
-                    skew_flags.append(bool(node.isSkewJoin()))
-                it = node.children().iterator()
-                while it.hasNext():
-                    stack.append(it.next())
-                # AQE wraps the real plan: descend through it
-                if "AdaptiveSparkPlan" in cls:
-                    stack.append(node.executedPlan())
-                elif "QueryStageExec" in cls or "WrapsReusedExchange" in cls:
-                    stack.append(node.plan())
-            del jg
-        except Exception:
-            skew_flags = None
-        if skew_flags is not None and len(skew_flags) > 0:
-            assert any(skew_flags), (
-                "AQE did not mark any join node isSkewJoin=true "
-                f"(flags={skew_flags})"
-            )
-        else:
-            plan = exec_plan.toString()
-            if "isFinalPlan=true" not in plan:
-                pytest.skip(
-                    "adaptive plan string format changed (no "
-                    "isFinalPlan marker) — re-derive the skew probe for "
-                    "this Spark build"
-                )
-            assert "skew=true" in plan or "isSkewJoin=true" in plan, (
-                "AQE did not mark the skewed join:\n" + plan[:2000]
-            )
+        nodes = run_final(joined)
+        assert nodes["SortMergeJoin(skew=true)"] == 1, (
+            f"AQE did not split the skewed join partition: {nodes}"
+        )
     finally:
         for k, v in old.items():
             if v is None:
@@ -1064,12 +1025,10 @@ def test_lifecycle_is_equi_join_only(spark, sf_dir):
 def test_checksum_is_shuffle_minimal(spark, sf_dir):
     """Three single-row aggregates unioned: no joins at all, and only
     the three final 1-row exchanges."""
-    from weather_etl_spark.plan_audit import audit_plan
-
-    report = audit_plan(SPECS["q_dq_checksum"].fn(spark, sf_dir))
-    assert "SortMergeJoin" not in report.nodes
-    assert "BroadcastHashJoin" not in report.nodes
-    assert "CartesianProduct" not in report.nodes
+    nodes = plan_nodes(SPECS["q_dq_checksum"].fn(spark, sf_dir))
+    assert "SortMergeJoin" not in nodes
+    assert "BroadcastHashJoin" not in nodes
+    assert "CartesianProduct" not in nodes
 
 
 def test_survival_runs_on_ledger(spark, sf_dir):
@@ -1084,22 +1043,18 @@ def test_vocab_coverage_joins_stay_small(spark, sf_dir):
 
 
 def test_embed_truncate_is_pure_aggregate(spark, sf_dir):
-    from weather_etl_spark.plan_audit import audit_plan
-
-    report = audit_plan(SPECS["q_llm_embed_truncate"].fn(spark, sf_dir))
-    assert "SortMergeJoin" not in report.nodes
-    assert "BroadcastHashJoin" not in report.nodes
-    assert "BroadcastNestedLoopJoin" not in report.nodes
-    assert "ArrowEvalPython" not in report.nodes  # stays JVM-side
+    nodes = plan_nodes(SPECS["q_llm_embed_truncate"].fn(spark, sf_dir))
+    assert "SortMergeJoin" not in nodes
+    assert "BroadcastHashJoin" not in nodes
+    assert "BroadcastNestedLoopJoin" not in nodes
+    assert "ArrowEvalPython" not in nodes  # stays JVM-side
 
 
 def test_rolling_corr_is_single_ledger_window(spark, sf_dir):
-    from weather_etl_spark.plan_audit import audit_plan
-
-    report = audit_plan(SPECS["q_win_rolling_corr"].fn(spark, sf_dir))
-    assert "SortMergeJoin" not in report.nodes
-    assert "BroadcastHashJoin" not in report.nodes
-    assert "Window" in report.text
+    nodes = plan_nodes(SPECS["q_win_rolling_corr"].fn(spark, sf_dir))
+    assert "SortMergeJoin" not in nodes
+    assert "BroadcastHashJoin" not in nodes
+    assert nodes["Window"] == 1
 
 
 def test_theilsen_pairs_on_equi_type_key(spark, sf_dir):
@@ -1149,12 +1104,10 @@ def test_bm25_prunes_terms_before_shuffle(spark, sf_dir):
 
 
 def test_ols2_is_single_aggregation_pass(spark, sf_dir):
-    from weather_etl_spark.plan_audit import audit_plan
-
-    report = audit_plan(SPECS["q_agg_ols2"].fn(spark, sf_dir))
-    assert "SortMergeJoin" not in report.nodes
-    assert "BroadcastHashJoin" not in report.nodes
-    assert "partial" in report.text.lower()  # map-side moment partials
+    nodes = plan_nodes(SPECS["q_agg_ols2"].fn(spark, sf_dir))
+    assert "SortMergeJoin" not in nodes
+    assert "BroadcastHashJoin" not in nodes
+    assert nodes["HashAggregate"] == 2  # map-side partials + final merge
 
 
 def test_backtest_frames_use_only_past_rows(spark, sf_dir):
@@ -1169,11 +1122,9 @@ def test_cuped_reduces_before_join(spark, sf_dir):
 
 
 def test_power_is_single_pass(spark, sf_dir):
-    from weather_etl_spark.plan_audit import audit_plan
-
-    report = audit_plan(SPECS["q_ab_power"].fn(spark, sf_dir))
-    assert "SortMergeJoin" not in report.nodes
-    assert "BroadcastNestedLoopJoin" not in report.nodes
+    nodes = plan_nodes(SPECS["q_ab_power"].fn(spark, sf_dir))
+    assert "SortMergeJoin" not in nodes
+    assert "BroadcastNestedLoopJoin" not in nodes
 
 
 def test_markov2_joins_on_ledger(spark, sf_dir):
@@ -1199,11 +1150,9 @@ def test_pipe_events_shares_the_user_shuffle(spark, sf_dir):
     """Sessionize flag, session cumsum and both rollups must reuse ONE
     user_id partitioning: at most 2 exchanges total (scan-side + the
     final 2-row arm ledger)."""
-    from weather_etl_spark.plan_audit import audit_plan
-
-    report = audit_plan(SPECS["pipe_events_e2e"].fn(spark, sf_dir))
-    assert report.exchanges <= 3
-    assert "CartesianProduct" not in report.nodes
+    nodes = plan_nodes(SPECS["pipe_events_e2e"].fn(spark, sf_dir))
+    assert nodes["Exchange"] <= 3
+    assert "CartesianProduct" not in nodes
 
 
 def test_rouge_overlap_join_is_hash_keyed(spark, sf_dir):
@@ -1252,13 +1201,10 @@ def test_tpch_q22_anti_join_on_distinct_keys(spark, sf_dir):
 
 
 def test_anova_is_two_level_aggregate(spark, sf_dir):
-    from weather_etl_spark.plan_audit import audit_plan
-
-    plan = _executed_plan(SPECS["q_agg_anova"].fn(spark, sf_dir))
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    report = audit_plan(SPECS["q_agg_anova"].fn(spark, sf_dir))
-    assert report.exchanges <= 2  # type shuffle + 1-row final gather
+    nodes = plan_nodes(SPECS["q_agg_anova"].fn(spark, sf_dir))
+    assert "CartesianProduct" not in nodes
+    assert "BroadcastNestedLoopJoin" not in nodes
+    assert nodes["Exchange"] <= 2  # type shuffle + 1-row final gather
 
 
 def test_hard_negatives_windowgrouplimit(spark, sf_dir):
@@ -1267,14 +1213,10 @@ def test_hard_negatives_windowgrouplimit(spark, sf_dir):
 
 
 def test_event_pattern_single_user_shuffle(spark, sf_dir):
-    from weather_etl_spark.plan_audit import audit_plan
-
-    df = SPECS["q_event_pattern"].fn(spark, sf_dir)
-    plan = _executed_plan(df)
-    assert "CartesianProduct" not in plan
-    assert "TakeOrderedAndProject" in plan
-    report = audit_plan(df)
-    assert report.exchanges <= 1  # one user_id shuffle feeds everything
+    nodes = plan_nodes(SPECS["q_event_pattern"].fn(spark, sf_dir))
+    assert "CartesianProduct" not in nodes
+    assert "TakeOrderedAndProject" in nodes
+    assert nodes["Exchange"] <= 1  # one user_id shuffle feeds everything
 
 
 def test_kruskal_no_cartesian_beyond_ledger(spark, sf_dir):
@@ -1315,25 +1257,17 @@ def test_levene_two_pass_ledger(spark, sf_dir):
 
 
 def test_cohort_ltv_windows_on_ledger(spark, sf_dir):
-    from weather_etl_spark.plan_audit import audit_plan
-
-    df = SPECS["q_cohort_ltv"].fn(spark, sf_dir)
-    plan = _executed_plan(df)
-    assert "CartesianProduct" not in plan
-    report = audit_plan(df)
+    nodes = plan_nodes(SPECS["q_cohort_ltv"].fn(spark, sf_dir))
+    assert "CartesianProduct" not in nodes
     # two event-table shuffles (cohort assign + revenue join); the
     # rest exchange only the months^2-bounded (cohort, age) ledger
-    assert report.exchanges <= 6
+    assert nodes["Exchange"] <= 6
 
 
 def test_span_corruption_no_explode_no_shuffle_before_ledger(spark, sf_dir):
-    from weather_etl_spark.plan_audit import audit_plan
-
-    df = SPECS["q_llm_span_corruption"].fn(spark, sf_dir)
-    plan = _executed_plan(df)
-    assert "Generate" not in plan, "span accounting must not explode"
-    report = audit_plan(df)
-    assert report.exchanges <= 2  # spans-bucket ledger + final sort
+    nodes = plan_nodes(SPECS["q_llm_span_corruption"].fn(spark, sf_dir))
+    assert "Generate" not in nodes, "span accounting must not explode"
+    assert nodes["Exchange"] <= 2  # spans-bucket ledger + final sort
 
 
 def test_preference_pairs_hash_self_join(spark, sf_dir):
@@ -1358,13 +1292,9 @@ def test_minhash_eval_no_cartesian(spark, sf_dir):
 
 
 def test_collate_single_shuffle(spark, sf_dir):
-    from weather_etl_spark.plan_audit import audit_plan
-
-    df = SPECS["q_fn_collate"].fn(spark, sf_dir)
-    plan = _executed_plan(df)
-    assert "CartesianProduct" not in plan
-    report = audit_plan(df)
-    assert report.exchanges <= 3  # collated-key agg + distinct + sort
+    nodes = plan_nodes(SPECS["q_fn_collate"].fn(spark, sf_dir))
+    assert "CartesianProduct" not in nodes
+    assert nodes["Exchange"] <= 3  # collated-key agg + distinct + sort
 
 
 def test_next_pred_model_broadcasts_back(spark, sf_dir):
@@ -1400,13 +1330,9 @@ def test_quantile_eval_bounded_bnl(spark, sf_dir):
 
 
 def test_dq_embeddings_no_explode(spark, sf_dir):
-    from weather_etl_spark.plan_audit import audit_plan
-
-    df = SPECS["q_dq_embeddings"].fn(spark, sf_dir)
-    plan = _executed_plan(df)
-    assert "Generate" not in plan, "vector audit must not explode"
-    report = audit_plan(df)
-    assert report.exchanges <= 2
+    nodes = plan_nodes(SPECS["q_dq_embeddings"].fn(spark, sf_dir))
+    assert "Generate" not in nodes, "vector audit must not explode"
+    assert nodes["Exchange"] <= 2
 
 
 def test_tpch_q13_outer_join_single_custkey_shuffle(spark, sf_dir):

@@ -18,7 +18,9 @@ survives a 100x scale-up:
   twin.
 - ``Exchange`` count — shuffles; reported so a diff review catches a
   plan that silently gained one.
-- ``WholeStageCodegen`` span count — reported for codegen coverage.
+
+Every physical fact comes from one walk of the Catalyst tree
+(``plan_audit.plan_nodes``), never from ``explain()`` text.
 
 A keyless join or Window that Catalyst cannot bound is admissible only
 when its query is listed, with the bound Catalyst cannot see, in
@@ -26,7 +28,7 @@ when its query is listed, with the bound Catalyst cannot see, in
 ``plan_audit.plan_audit`` gives the verdict.
 
 Usage: ``python tools/audit_plans.py [sf_dir]`` prints one CSV row per
-operator (name, exchanges, codegen spans, each keyless node as
+operator (name, exchanges, each keyless node as
 ``kind:rows`` with ``inf`` for unbounded, disallowed findings) and a
 summary; exits non-zero if a disallowed finding appears.
 tests/test_plan_audit.py runs the same verdict as a pytest invariant.
@@ -46,9 +48,9 @@ ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
 
 from weather_etl_spark.plan_audit import (  # noqa: E402
-    audit_plan,
     keyless,
     plan_audit,
+    plan_nodes,
 )
 from weather_etl_spark.registry import load_all  # noqa: E402
 from weather_etl_spark.session import get_spark  # noqa: E402
@@ -58,19 +60,19 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     spark = get_spark("plan-audit")
     bad: list[str] = []
-    print("name,exchanges,codegen_spans,keyless,disallowed")
+    print("name,exchanges,keyless,disallowed")
     for name, spec in sorted(load_all().items()):
         df = spec.fn(spark, sf_dir)
-        report = audit_plan(df)
-        found = plan_audit(name, df)
+        nodes = plan_nodes(df)
+        found = plan_audit(name, df, nodes)
         bad.extend(f"{name}:{f}" for f in found)
         shapes = "|".join(
             f"{k.kind}:{'inf' if k.rows is None else k.rows}"
             for k in keyless(df)
         )
         print(
-            f"{name},{report.exchanges},{report.codegen_spans},"
-            f"{shapes or '-'},{'|'.join(found) or '-'}"
+            f"{name},{nodes['Exchange']},{shapes or '-'},"
+            f"{'|'.join(found) or '-'}"
         )
     if bad:
         print(f"DISALLOWED: {bad}", file=sys.stderr)

@@ -22,7 +22,7 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(ROOT))
 
-from weather_etl_spark.plan_audit import audit_plan
+from weather_etl_spark.plan_audit import plan_nodes
 from weather_etl_spark.registry import load_all
 from weather_etl_spark.session import get_spark
 
@@ -37,7 +37,7 @@ def main() -> None:
     )
     snap: dict[str, int] = {}
     for name, spec in sorted(load_all().items()):
-        snap[name] = audit_plan(spec.fn(spark, SF_DIR)).exchanges
+        snap[name] = plan_nodes(spec.fn(spark, SF_DIR))["Exchange"]
         print(f"{name},{snap[name]}", flush=True)
     OUT.write_text(json.dumps(snap, indent=0, sort_keys=True) + "\n")
     print(f"wrote {OUT} ({len(snap)} rows)", file=sys.stderr)

@@ -9,11 +9,12 @@ doc/vec ids shift by replica * 10^ceil(log10(max+1)); constant dims
 region/nation copy through; event timestamps shift by replica days so
 the temporal density profile is preserved rather than stacked).
 
-Output: per-query seconds at the synthetic sf1, plus the
-BroadcastHashJoin/SortMergeJoin composition of the join composites so
-SCALE.md can record whether any plan changes shape 10x up
-(broadcast->SMJ flips are the interesting event for the de-hinted
-r6 queries).
+Output: per-query seconds at the synthetic sf1 (builder plus one full
+run of the query through its own QueryExecution), plus the
+BroadcastHashJoin/SortMergeJoin/ShuffledHashJoin composition of the
+join composites' AQE final plans so SCALE.md can record whether any
+plan changes shape 10x up (broadcast->SMJ flips are the interesting
+event for the de-hinted r6 queries).
 
 Usage:  python tools/sweep_sf1_synth.py [--rebuild]
 """
@@ -33,6 +34,7 @@ from pyspark.sql import functions as F
 
 from weather_etl_spark.checkpoints import release_session_checkpoints
 from weather_etl_spark.io import TABLES
+from weather_etl_spark.plan_audit import run_final
 from weather_etl_spark.registry import load_all
 from weather_etl_spark.session import get_spark
 
@@ -144,6 +146,23 @@ JOIN_COMPOSITES = {
     "q_tpch_q21", "q_join_spatial_grid",
 }
 
+#: final-plan node names of each join kind (AQE names a skew split apart)
+JOIN_NODES = {
+    "bhj": ("BroadcastHashJoin",),
+    "smj": ("SortMergeJoin", "SortMergeJoin(skew=true)"),
+    "shj": ("ShuffledHashJoin", "ShuffledHashJoin(skew=true)"),
+}
+
+
+def run_joins(df) -> dict[str, int]:
+    """Run ``df`` to completion and count the joins of each kind in its
+    AQE final plan."""
+    nodes = run_final(df)
+    return {
+        kind: sum(nodes[n] for n in names)
+        for kind, names in JOIN_NODES.items()
+    }
+
 
 def _pow10_unit(mx: int) -> int:
     return 10 ** math.ceil(math.log10(max(mx, 1) + 1))
@@ -206,20 +225,11 @@ def main() -> None:
         # them by 10-100x (caught r8: lpa read 0.16 s at sf1 vs 2.66 s
         # at sf0.1 — impossible; the loop ran before the clock started)
         t0 = time.perf_counter()
-        df = specs[name].fn(spark, DST)
-        df.count()
+        joins = run_joins(specs[name].fn(spark, DST))
         sec = round(time.perf_counter() - t0, 2)
         line = f"{name},{sec}"
         if name in JOIN_COMPOSITES:
-            plan = (
-                specs[name].fn(spark, DST)
-                ._jdf.queryExecution().executedPlan().toString()
-            )
-            line += (
-                f",BHJ={plan.count('BroadcastHashJoin')}"
-                f",SMJ={plan.count('SortMergeJoin')}"
-                f",SHJ={plan.count('ShuffledHashJoin')}"
-            )
+            line += "".join(f",{k.upper()}={v}" for k, v in joins.items())
         print(line, flush=True)
         release_session_checkpoints(spark)
     spark.stop()

@@ -1320,7 +1320,9 @@ def q_agg_hist_quantile(spark, sf_dir):
     cum = b.withColumn(
         "cum", F.sum("c").over(Window.orderBy("bin")).cast("bigint")
     )
-    qs = spark.createDataFrame([(50,), (90,), (99,)], "q int")
+    qs = spark.range(3).select(
+        F.array(*map(F.lit, (50, 90, 99)))[F.col("id")].alias("q")
+    )
     return (
         qs.crossJoin(cum)
         .crossJoin(F.broadcast(tot))

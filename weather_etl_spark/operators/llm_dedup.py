@@ -1721,11 +1721,7 @@ def q_llm_dedup_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     jac = overlap_all_pairs(shingles3(spark, sf_dir)).select(
         "id_a", "id_b", _jaccard().alias("j")
     )
-    th = spark.range(1).select(
-        F.explode(
-            F.array(*[F.lit(x / 10.0) for x in range(1, 10)])
-        ).alias("t")
-    )
+    th = spark.range(1, 10).select((F.col("id") / 10.0).alias("t"))
     q = jac.crossJoin(F.broadcast(th)).filter(F.col("j") >= F.col("t"))
     nd = read_table(spark, sf_dir, "documents").agg(
         F.count(F.lit(1)).cast("bigint").alias("total")

@@ -2049,39 +2049,53 @@ FROM ols
     "corpus needs) next to q_llm_vocab_coverage's fixed-budget "
     "view.",
     scale_notes="first-seen ledger = one token shuffle (vocabulary-"
-    "sized, map-combined); checkpoints are a ~docs/50-row ledger; "
-    "both cumulative measures are range joins against the BROADCAST "
-    "checkpoint ledger (grouped map-side), so nothing ever "
-    "single-partitions. OLS is a 5-number reduction.",
+    "sized, map-combined); both cumulative measures are running sums "
+    "over a block ledger (one row per 50 doc_ids: tokens, words first "
+    "seen, whether it holds a checkpoint), so the work is linear in "
+    "the corpus and only the docs/50-row ledger single-partitions. "
+    "OLS is a 5-number reduction.",
 )
 def q_llm_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.split("text", " ").alias("t"))
-    # checkpoint ledger (docs/50 rows) broadcasts into two range
-    # joins — a global cumsum window would single-partition the whole
-    # corpus; this shape keeps both cumulative measures parallel
-    ck = toks.filter(F.col("doc_id") % 50 == 49).select(
-        F.col("doc_id").alias("ckid")
+    # a null doc_id precedes no checkpoint
+    toks = docs.filter(F.col("doc_id").isNotNull()).select(
+        "doc_id", F.split("text", " ").alias("t")
     )
-    sizes = toks.select("doc_id", F.size("t").alias("sz"))
-    n_cum = (
-        sizes.join(F.broadcast(ck), F.col("doc_id") <= F.col("ckid"))
-        .groupBy("ckid")
-        .agg(F.sum("sz").cast("bigint").alias("n_cum"))
+
+    def block(c: str):
+        # checkpoint 50b + 49 is the last doc_id of block b, so "doc_id
+        # <= checkpoint" is "block <= b"
+        return F.floor(F.col(c) / 50).alias("b")
+
+    per_doc = toks.select(
+        block("doc_id"),
+        F.size("t").alias("sz"),
+        (F.col("doc_id") % 50 == 49).alias("ck"),
+        F.lit(0).alias("new"),
     )
-    firstseen = (
+    first_seen = (
         toks.select("doc_id", F.explode("t").alias("w"))
         .groupBy("w")
         .agg(F.min("doc_id").alias("first_doc"))
-    )
-    v_cum = (
-        firstseen.join(
-            F.broadcast(ck), F.col("first_doc") <= F.col("ckid")
+        .select(
+            block("first_doc"),
+            F.lit(None).cast("int").alias("sz"),
+            F.lit(False).alias("ck"),
+            F.lit(1).alias("new"),
         )
-        .groupBy("ckid")
-        .agg(F.count("w").cast("bigint").alias("v_cum"))
     )
-    pts = n_cum.join(v_cum, "ckid")
+    ledger = (
+        per_doc.unionByName(first_seen)
+        .groupBy("b")
+        .agg(F.sum("sz").alias("tok"), F.bool_or("ck").alias("ck"),
+             F.sum("new").alias("new"))
+    )
+    cum = Window.orderBy("b")
+    pts = ledger.select(
+        "ck",
+        F.sum("tok").over(cum).cast("bigint").alias("n_cum"),
+        F.sum("new").over(cum).cast("bigint").alias("v_cum"),
+    ).filter(F.col("ck") & (F.col("v_cum") > 0))  # log V needs V > 0
     lx = F.log(F.col("n_cum"))
     ly = F.log(F.col("v_cum"))
     dec = lambda c: F.round(c, 8).cast("decimal(20,8)")  # noqa: E731

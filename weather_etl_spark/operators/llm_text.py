@@ -1282,21 +1282,18 @@ def q_llm_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("c")
     )
     tot = ledger.agg(F.sum("c").cast("bigint").alias("n_docs"))
-    stage_axis = [(1, "exact_dup"), (2, "length"),
-                  (3, "no_stopwords"), (4, "repetition")]
-    axis = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(n).alias("stage"), F.lit(s).alias("stage_name")
-                )
-                for n, s in stage_axis
-            ]
-        )
-    ).alias("s")
+    # a range axis, so Catalyst bounds the keyless ledger join at 4
+    # rows; one partition, like the 1-row total it is crossed with, so
+    # the stage aggregate and its sort need no shuffle
+    stage_names = ["exact_dup", "length", "no_stopwords", "repetition"]
+    axis = spark.range(1, 5, numPartitions=1).select(
+        F.col("id").cast("int").alias("stage"),
+        F.array(*map(F.lit, stage_names))[F.col("id") - 1].alias(
+            "stage_name"
+        ),
+    )
     stages = (
-        tot.select(axis, "n_docs")
-        .select("s.stage", "s.stage_name", "n_docs")
+        axis.crossJoin(tot)
         .join(
             F.broadcast(ledger),
             F.col("killed_at") >= F.col("stage"),

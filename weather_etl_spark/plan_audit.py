@@ -3,15 +3,14 @@
 Shared by ``tools/audit_plans.py`` (CSV report over the registry) and
 ``tests/test_plan_audit.py`` (pytest invariant); both take their
 verdict from :func:`plan_audit`.  See the tool's docstring for what
-each finding means and why it is (dis)allowed.
+each finding means and why it is (dis)allowed.  Every plan fact the
+tools and tests read comes from the one tree walk here (:func:`_walk`,
+:func:`plan_nodes`), never from ``explain()`` text.
 """
 
 from __future__ import annotations
 
-import io
-import re
-from contextlib import redirect_stdout
-from dataclasses import dataclass, field
+from collections import Counter
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame
@@ -32,9 +31,6 @@ ALLOW_UNBOUNDED_JOIN: dict[str, str] = {
     "q_join_cross": "the operator MEANS cross join (region x nation dims)",
     "q_agg_chisq": "event-type marginal x 24 hour-of-day marginal: "
     "the bounded (types x 24) expected-count grid (drift.py)",
-    "q_agg_hist_quantile": "constant 3-row quantile axis x <=64-bin "
-    "histogram + 1-row total — all bounded by sketch geometry "
-    "(aggregates.py)",
     "q_fn_geo": "1-row anchor point (vec_id = 0) crossed into the "
     "<=51-row point set (vec_id <= 50) — key filters Catalyst does "
     "not bound (functions/scalar.py)",
@@ -48,19 +44,10 @@ ALLOW_UNBOUNDED_JOIN: dict[str, str] = {
     "(llm_vector.py)",
     "q_llm_cosine_pairs": "deliberate naive all-pairs oracle twin of "
     "llm_cosine_pairs_blocked (SCALE.md §10)",
-    "q_llm_dedup_curve": "9-row threshold ledger + 1-row doc total "
-    "crossed into the inverted-index pair ledger — bounded "
-    "broadcast sides (llm_dedup.py)",
     "q_llm_embed_dedup": "deliberate naive all-pairs oracle twin of "
     "llm_embed_dedup_blocked (SCALE.md §10)",
-    "q_llm_filter_funnel": "constant 4-row stage axis range-joined "
-    "to the <=5-row kill ledger + 1-row total — all funnel-geometry "
-    "bounded (llm_text.py)",
     "q_llm_hard_negatives": "5-row constant anchor matrix — the "
     "q_llm_knn bounded-probe pattern (llm_vector.py)",
-    "q_llm_heaps_law": "docs/50-row checkpoint ledger broadcast into "
-    "two range joins (cumulative tokens / cumulative vocab) — "
-    "bounded by the checkpoint count (llm_prep.py)",
     "q_llm_hubness": "deliberate eval-only all-pairs k-occurrence "
     "ranking over the bounded embeddings fixture; ANN answer lists "
     "at scale (llm_vector.py)",
@@ -115,6 +102,10 @@ ALLOW_KEYLESS_WINDOW: dict[str, str] = {
     "partition, never the corpus (eventseq.py)",
     "q_layout_compaction": "prefix sum over file METADATA (one row "
     "per file), kilobytes per row at 100 TB (layout.py)",
+    "q_llm_heaps_law": "running token and first-seen-word sums over "
+    "the block ledger (one row per 50 doc_ids): docs/50 rows on one "
+    "task, 2e7 rows for 1e9 documents; everything before it is "
+    "partition-parallel and linear in the corpus (llm_prep.py)",
     "q_llm_bpe_pairs": "top-20 pair ledger — TakeOrderedAndProject, "
     "per-partition heaps (llm_prep.py)",
     "q_llm_token_budget": "running sum over the 1000-row bin ledger; "
@@ -139,14 +130,6 @@ RESIDUAL: dict[str, dict[str, str]] = {
 }
 
 
-@dataclass
-class PlanReport:
-    exchanges: int
-    codegen_spans: int
-    nodes: set[str] = field(default_factory=set)
-    text: str = ""
-
-
 class Keyless(NamedTuple):
     """A join without an equi-join key or a Window without a
     partitionSpec; ``rows`` is Catalyst's bound on the join's smaller
@@ -165,35 +148,39 @@ class Keyless(NamedTuple):
         return f"{self.what} ({bound})"
 
 
-def plan_text(df: DataFrame) -> str:
-    """The simple-mode physical plan string (codegen stars included)."""
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        df.explain()
-    return buf.getvalue()
-
-
 def _walk(node):
     """Yield every node of a Catalyst plan, including the plans hanging
     off subquery expressions and, for an adaptive physical plan, its
-    current plan, the one ``explain()`` prints (py4j traversal)."""
+    current plan and the plan inside each of its query stages (py4j
+    traversal).  A ``ReusedExchange`` stays a leaf: the exchange it
+    reuses is walked where it was planned."""
     yield node
-    if node.nodeName() == "AdaptiveSparkPlan":
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
         yield from _walk(node.executedPlan())
+    elif name.endswith("QueryStage"):
+        yield from _walk(node.plan())
     for nodes in (node.children(), node.subqueries()):
         for i in range(nodes.length()):
             yield from _walk(nodes.apply(i))
 
 
-def audit_plan(df: DataFrame) -> PlanReport:
-    text = plan_text(df)
+def plan_nodes(df: DataFrame) -> Counter[str]:
+    """How many times each physical node occurs in ``df``'s executed
+    plan; ``nodes["Exchange"]`` is the shuffle count (a broadcast is a
+    ``BroadcastExchange``).  Names are stripped: a path scan is named
+    ``"Scan parquet "``.  Before ``df``'s own QueryExecution runs
+    (:func:`run_final`), an adaptive plan is its initial plan."""
     executed = df._jdf.queryExecution().executedPlan()
-    return PlanReport(
-        exchanges=len(re.findall(r"\bExchange\b", text)),
-        codegen_spans=len(set(re.findall(r"\*\((\d+)\)", text))),
-        nodes={node.nodeName() for node in _walk(executed)},
-        text=text,
-    )
+    return Counter(node.nodeName().strip() for node in _walk(executed))
+
+
+def run_final(df: DataFrame) -> Counter[str]:
+    """Run ``df`` through its own QueryExecution and return the nodes of
+    the AQE final plan.  ``df.count()`` or a noop write plans a new
+    QueryExecution and leaves ``df``'s adaptive plan non-final."""
+    df._jdf.queryExecution().toRdd().count()
+    return plan_nodes(df)
 
 
 def _max_rows(plan) -> int | None:
@@ -230,16 +217,17 @@ def keyless(df: DataFrame) -> list[Keyless]:
     return found
 
 
-def plan_audit(name: str, df: DataFrame) -> list[str]:
+def plan_audit(name: str, df: DataFrame, nodes: Counter[str]) -> list[str]:
     """The disallowed findings of query ``name``: each keyless join or
     Window that Catalyst does not bound within ``MAX_KEYLESS_ROWS`` and
     its residual ledger does not list, and row-at-a-time Python outside
-    ``ALLOW_ROW_PYTHON``.  Empty when the plan is admissible."""
+    ``ALLOW_ROW_PYTHON``.  Empty when the plan is admissible.  ``nodes``
+    is ``plan_nodes(df)``, walked once by the caller."""
     bad = [
         str(k) for k in keyless(df)
         if not k.bounded and name not in RESIDUAL[k.kind]
     ]
     row_python = {"BatchEvalPython", "BatchEvalPythonUDTF"}
-    if audit_plan(df).nodes & row_python and name not in ALLOW_ROW_PYTHON:
+    if nodes.keys() & row_python and name not in ALLOW_ROW_PYTHON:
         bad.append("row-at-a-time Python")
     return bad
