@@ -153,12 +153,13 @@ def test_cbo_stats_reach_the_optimizer(spark, sf_dir):
 
 
 def test_time_rollup_single_expand_single_shuffle(spark, sf_dir):
-    plan = _executed_plan(SPECS["q_time_rollup"].fn(spark, sf_dir))
+    df = SPECS["q_time_rollup"].fn(spark, sf_dir)
+    plan = _executed_plan(df)
     assert plan.count("Expand") == 1, "grouping sets must expand once"
     assert "partial_count" in plan or "partial" in plan.lower(), (
         "rollup must partial-aggregate map-side"
     )
-    assert plan.count("Exchange") <= 1, (
+    assert plan_nodes(df)["Exchange"] <= 1, (
         "all three grains must share ONE shuffle"
     )
 
@@ -306,11 +307,12 @@ def test_c4_filter_is_shuffle_free(spark, sf_dir):
 def test_time_interp_single_event_shuffle_no_join_on_facts(spark, sf_dir):
     # the as-of pairing must be window frames over one user_id sort, not
     # a range/cross join of events against the grid
-    plan = _executed_plan(SPECS["q_time_interp"].fn(spark, sf_dir))
+    df = SPECS["q_time_interp"].fn(spark, sf_dir)
+    plan = _executed_plan(df)
     assert "CartesianProduct" not in plan.replace(
         "BroadcastNestedLoopJoin", ""
     ), "grid pairing fell back to a cartesian join against events"
-    assert plan.count("Window") >= 1
+    assert plan_nodes(df)["Window"] >= 1
     # events shuffle once on user_id for the windows; the grid build may
     # add tiny exchanges (bounds agg + distinct users), never a second
     # events-sized one
@@ -404,9 +406,8 @@ def test_pagerank_checkpoints_loop_invariants(spark, sf_dir):
     assert "Scan parquet" not in plan, (
         "pagerank iteration re-scans base tables"
     )
-    assert plan.count("Exchange") <= 10, (
-        f"pagerank plan re-grew shuffles: {plan.count('Exchange')}"
-    )
+    n = plan_nodes(df)["Exchange"]
+    assert n <= 10, f"pagerank plan re-grew shuffles: {n}"
 
 
 def test_keywords_topk_compiles_to_window_group_limit(spark, sf_dir):
@@ -473,11 +474,11 @@ def test_eventseq_windows_share_one_user_shuffle(spark, sf_dir):
 
 
 def test_anomaly_single_event_type_shuffle_bounded_frame(spark, sf_dir):
-    plan = _executed_plan(SPECS["q_time_anomaly"].fn(spark, sf_dir))
-    n = plan.count("Exchange hashpartitioning(event_type")
+    df = SPECS["q_time_anomaly"].fn(spark, sf_dir)
+    n = _executed_plan(df).count("Exchange hashpartitioning(event_type")
     assert n == 1, f"expected 1 event_type exchange, saw {n}"
     # the three frame aggregates share one Window node
-    assert plan.count("Window") == 1
+    assert plan_nodes(df)["Window"] == 1
 
 
 def test_snapshot_diff_is_single_keyed_shuffle_join(spark, sf_dir):
@@ -534,8 +535,9 @@ def test_token_budget_has_no_corpus_wide_single_partition_window(
 
 
 def test_zorder_is_one_map_combined_aggregate(spark, sf_dir):
-    plan = _executed_plan(SPECS["q_layout_zorder"].fn(spark, sf_dir))
-    assert plan.count("Exchange") == 1, (
+    df = SPECS["q_layout_zorder"].fn(spark, sf_dir)
+    plan = _executed_plan(df)
+    assert plan_nodes(df)["Exchange"] == 1, (
         "bit interleave must stay in the scan stage; one cluster agg "
         "exchange only"
     )
@@ -571,11 +573,13 @@ def test_attribution_is_one_user_window_pass(spark, sf_dir):
 
 
 def test_corr_matrix_is_single_pass_partial_agg(spark, sf_dir):
-    plan = _executed_plan(SPECS["q_agg_corr_matrix"].fn(spark, sf_dir))
-    assert plan.count("Exchange") == 1, (
+    df = SPECS["q_agg_corr_matrix"].fn(spark, sf_dir)
+    assert plan_nodes(df)["Exchange"] == 1, (
         "all four correlations must share one grouped pass"
     )
-    assert "partial_" in plan, "corr partials must map-side combine"
+    assert "partial_" in _executed_plan(df), (
+        "corr partials must map-side combine"
+    )
 
 
 def test_weighted_median_single_flag_shuffle(spark, sf_dir):
@@ -647,9 +651,10 @@ def test_feature_hash_shuffle_bounded_by_buckets(spark, sf_dir):
 def test_ohlc_is_single_two_phase_aggregate(spark, sf_dir):
     """min_by/max_by over the (ts, event_id) struct must compile as
     one partial-aggregated exchange — no Window, no sort."""
-    plan = _executed_plan(SPECS["q_time_resample_ohlc"].fn(spark, sf_dir))
+    df = SPECS["q_time_resample_ohlc"].fn(spark, sf_dir)
+    plan = _executed_plan(df)
     assert "Window" not in plan, "OHLC must not fall back to a window"
-    assert plan.count("Exchange") == 1
+    assert plan_nodes(df)["Exchange"] == 1
     assert "partial_" in plan
 
 
@@ -708,16 +713,18 @@ def test_asof_tol_single_user_shuffle(spark, sf_dir):
 def test_event_trigrams_one_window_pass(spark, sf_dir):
     """Both lead() frames evaluate in a single WindowExec over one
     user_id shuffle; the trigram agg is map-combined (partial_count)."""
-    plan = _executed_plan(SPECS["q_event_trigrams"].fn(spark, sf_dir))
-    assert plan.count("Window") == 1
+    df = SPECS["q_event_trigrams"].fn(spark, sf_dir)
+    plan = _executed_plan(df)
+    assert plan_nodes(df)["Window"] == 1
     assert "partial_count" in plan
     assert "TakeOrderedAndProject" in plan  # top-20, no global sort
 
 
 def test_win_peaks_shares_lag_lead_window(spark, sf_dir):
-    plan = _executed_plan(SPECS["q_win_peaks"].fn(spark, sf_dir))
-    assert plan.count("Window") == 1, "lag+lead must share one WindowExec"
-    assert "partial_count" in plan  # map-side combine of the census
+    df = SPECS["q_win_peaks"].fn(spark, sf_dir)
+    assert plan_nodes(df)["Window"] == 1, "lag+lead must share one WindowExec"
+    # map-side combine of the census
+    assert "partial_count" in _executed_plan(df)
 
 
 def test_tpch_q10_prunes_and_take_ordered(spark, sf_dir):
@@ -747,8 +754,7 @@ def test_ppl_bucket_no_unconditional_vocab_broadcast(spark, sf_dir):
     df = SPECS["q_llm_ppl_bucket"].fn(spark, sf_dir)
     logical = df._jdf.queryExecution().optimizedPlan().toString()
     assert "ResolvedHint" not in logical
-    plan = _executed_plan(df)
-    assert plan.count("Window") >= 1  # the lang-partitioned NTILE
+    assert plan_nodes(df)["Window"] >= 1  # the lang-partitioned NTILE
 
 
 def test_holt_buckets_before_python(spark, sf_dir):
@@ -885,9 +891,9 @@ def test_tpch_q18_reduces_before_join(spark, sf_dir):
 
 
 def test_rolling_median_single_shuffle(spark, sf_dir):
-    plan = _executed_plan(SPECS["q_win_rolling_median"].fn(spark, sf_dir))
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert plan.count("Window") == 1
+    df = SPECS["q_win_rolling_median"].fn(spark, sf_dir)
+    assert _executed_plan(df).count("Exchange hashpartitioning") == 1
+    assert plan_nodes(df)["Window"] == 1
 
 
 def test_semdedup_pairs_are_bucket_scoped(spark, sf_dir):
@@ -1320,8 +1326,7 @@ def test_tpch_q6_pushes_every_predicate(spark, sf_dir):
         "LessThan(l_quantity,24",
     ):
         assert frag in info, f"missing pushed filter {frag}"
-    plan = _executed_plan(df)
-    assert "Exchange" in plan and plan.count("Exchange") == 1
+    assert plan_nodes(df)["Exchange"] == 1
 
 
 def test_quantile_eval_bounded_bnl(spark, sf_dir):

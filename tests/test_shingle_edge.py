@@ -63,3 +63,36 @@ def short_doc_sf_dir(spark, tmp_path_factory) -> str:
 def test_short_docs_parity(spark, short_doc_sf_dir, name):
     spec = load_all()[name]
     compare_to_oracle(spark, spec, short_doc_sf_dir)
+
+
+def test_word_ngrams_matches_python_slicing(spark):
+    """The n-gram kernel against Python slicing for n in 1..4 over token
+    arrays of length 0..n+1, with and without empty tokens (the raw
+    split of a double-spaced text); a NULL array stays NULL."""
+    from weather_etl_spark.functions.exact import word_ngrams
+
+    arrays = [None]
+    for size in range(6):
+        arrays.append([f"w{i}" for i in range(size)])
+        arrays.append(["" if i % 2 else f"w{i}" for i in range(size)])
+        arrays.append([""] * size)
+    df = spark.createDataFrame(
+        [(k, t) for k, t in enumerate(arrays)], "k int, t array<string>"
+    )
+    ns = (1, 2, 3, 4)
+    got = {
+        r["k"]: [r[f"g{n}"] for n in ns]
+        for r in df.select(
+            "k", *[word_ngrams("t", n).alias(f"g{n}") for n in ns]
+        ).collect()
+    }
+    for k, t in enumerate(arrays):
+        want = [
+            None
+            if t is None
+            else [" ".join(t[i : i + n]) for i in range(len(t) - n + 1)]
+            for n in ns
+        ]
+        assert got[k] == want, (t, got[k], want)
+    # the 2-token, n=3 case: empty, not a short gram or a runtime error
+    assert got[arrays.index(["w0", "w1"])][2] == []

@@ -6,8 +6,8 @@ text operators' edge behavior — empty documents, single-token
 documents, runs of repeated tokens, exact-duplicate texts under
 different doc_ids, markup fragments, multi-space runs, unicode — is
 untested against the oracles before these rows reach a driver window.
-Two fabricated corpora re-run the registered DuckDB oracles with full
-value parity.
+Three fabricated corpora re-run the registered DuckDB oracles with full
+value parity; the short-and-gapped one runs every word n-gram row.
 
 Full lane: a ~50-case sweep (see pytest.ini).
 """
@@ -58,6 +58,8 @@ TEXT_OPS = [
     "llm_multimodal", "llm_mm_framesample", "llm_mm_decode",
     "llm_mm_pixel_dedup", "llm_mm_audio_window", "llm_mm_resize",
     "llm_mm_phash_dedup", "llm_mm_scenechange",
+    # the edge corpus's 1-token "solo" doc has no bigram
+    "q_llm_repetition",
 ]
 # dedupe while preserving order
 TEXT_OPS = list(dict.fromkeys(TEXT_OPS))
@@ -153,6 +155,60 @@ def _dup_corpus():
     return docs
 
 
+def _gap_corpus():
+    """Short and gapped documents: empty text, 1- and 2-token docs,
+    inner, leading and trailing double spaces (the raw split then holds
+    '' tokens), and a source made only of docs under 3 tokens.  Even /
+    odd doc_id neighbors are the generation-eval (reference, candidate)
+    pairs, so gapped candidates meet clean references."""
+    rng = random.Random(battery_seed(31337))
+    docs = [
+        (0, "the fast table", "en", "srcA"),
+        (1, "the  fast table", "en", "srcA"),      # inner double space
+        (2, "", "en", "srcA"),
+        (3, "solo", "en", "srcA"),
+        (4, "pair token", "en", "srcA"),
+        (5, " pair token", "en", "srcA"),          # leading space
+        (6, "scan merge join", "en", "srcA"),
+        (7, "scan merge join ", "en", "srcA"),     # trailing space
+        (8, "hash  join", "de", "srcA"),
+        (9, "  ", "de", "srcA"),                   # only blank tokens
+    ]
+    did = len(docs)
+    for _ in range(12):                            # short-only source
+        n = rng.choice([0, 1, 2])
+        docs.append(
+            (did, " ".join(rng.choice(_VOCAB) for _ in range(n)), "en",
+             "srcShort")
+        )
+        did += 1
+    for _ in range(60):                            # bulk with gaps
+        n = rng.choice([1, 2, 3, 9, 30])
+        toks = [rng.choice(_VOCAB) for _ in range(n)]
+        for _ in range(rng.choice([0, 1, 2])):
+            toks.insert(rng.randrange(len(toks) + 1), "")
+        docs.append(
+            (did, " ".join(toks), rng.choice(["en", "es"]),
+             rng.choice(["srcA", "srcB"]))
+        )
+        did += 1
+    return docs
+
+
+#: Every row that builds word n-grams through ``word_ngrams`` (the
+#: oracled ones; llm_near_dedup is rows-only), plus the generation-eval
+#: pair over the same grams.
+NGRAM_OPS = [
+    "q_llm_ngram_jaccard", "llm_jaccard_prefix", "llm_minhash_banded",
+    "q_llm_minhash_eval", "q_llm_minhash_mae", "q_llm_dedup_curve",
+    "q_llm_decontaminate", "q_llm_bpe_pairs", "q_llm_bpe_train",
+    "q_llm_apply_bpe", "q_llm_gram_novelty", "q_llm_boilerplate",
+    "q_llm_distinct_n", "q_llm_collocations", "q_llm_repetition",
+    "q_llm_perplexity", "q_llm_entropy_rate", "q_llm_kneser_ney",
+    "q_llm_ppl_holdout", "q_llm_rouge", "q_llm_bleu",
+]
+
+
 @pytest.fixture(scope="module")
 def edge_dir(tmp_path_factory):
     return _write_docs(tmp_path_factory.mktemp("advtext"), "edge", _edge_corpus())
@@ -161,6 +217,13 @@ def edge_dir(tmp_path_factory):
 @pytest.fixture(scope="module")
 def dup_dir(tmp_path_factory):
     return _write_docs(tmp_path_factory.mktemp("advtext"), "dup", _dup_corpus())
+
+
+@pytest.fixture(scope="module")
+def gap_dir(tmp_path_factory):
+    return _write_docs(
+        tmp_path_factory.mktemp("advtext"), "gap", _gap_corpus()
+    )
 
 
 def test_funnel_stage_exhaustion_parity(spark, tmp_path):
@@ -187,3 +250,8 @@ def test_adversarial_edge_corpus_parity(spark, edge_dir, name):
 @pytest.mark.parametrize("name", TEXT_OPS)
 def test_adversarial_dup_corpus_parity(spark, dup_dir, name):
     compare_to_oracle(spark, SPECS[name], dup_dir)
+
+
+@pytest.mark.parametrize("name", NGRAM_OPS)
+def test_adversarial_gap_corpus_parity(spark, gap_dir, name):
+    compare_to_oracle(spark, SPECS[name], gap_dir)

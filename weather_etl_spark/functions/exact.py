@@ -59,6 +59,34 @@ def md5_prefix_int(c: Column | str, digits: int) -> Column:
     ).cast("bigint")
 
 
+def word_ngrams(tokens: Column | str, n: int) -> Column:
+    """The space-joined word n-grams of a token array, in order —
+    Python's ``[" ".join(t[i:i + n]) for i in range(len(t) - n + 1)]``,
+    the engine's one n-gram kernel (shingles, bigrams, BPE pairs).  An
+    array of fewer than ``n`` tokens yields an EMPTY array, as DuckDB's
+    ``range(1, len(t) - n + 2)`` does; a NULL array yields NULL.
+
+    The gram starts are the indices of ``slice(t, n, size(t))`` (one
+    element per gram, empty once ``n`` passes the end), not
+    ``sequence(1, size(t) - n + 1)``: Spark's ``sequence`` counts DOWN
+    when its stop is below its start, so a document shorter than ``n``
+    tokens gets starts ``[1, 0]`` or ``[1, 0, -1, ...]``.  Start 0
+    makes ``slice`` throw at runtime, a negative start emits a
+    spurious gram from the array's tail, and ``element_at(t, i + 1)``
+    pairs emit NULL grams.
+
+    ``tokens`` is read once per gram: pass a column already split in
+    an earlier projection, not a ``split(...)`` expression.
+    """
+    t = _col(tokens)
+    if n == 1:  # the unigrams are the tokens themselves
+        return t
+    return F.transform(
+        F.slice(t, n, F.size(t)),
+        lambda _, i: F.concat_ws(" ", *[t[i + j] for j in range(n)]),
+    )
+
+
 def ltr_dot(
     a: np.ndarray, b: np.ndarray, product=np.multiply
 ) -> np.ndarray:

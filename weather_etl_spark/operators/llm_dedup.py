@@ -34,6 +34,7 @@ from weather_etl_spark.functions.exact import (
     md5_prefix_int,
     ratio_round4_sql,
     signed_ratio_round_sql,
+    word_ngrams,
 )
 from weather_etl_spark.io import read_table
 from weather_etl_spark.registry import register
@@ -42,30 +43,17 @@ from weather_etl_spark.registry import register
 def shingles3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, shingle) table of distinct 3-token shingles — shared by
     the exact-oracled shingle family (ngram_jaccard, jaccard_prefix,
-    minhash_banded).
-
-    Docs with fewer than 3 tokens emit NO shingles: the filter runs
-    BEFORE the transform because Spark's ``sequence(1, size-2)``
-    descends to ``[1, 0]`` for 2-token docs (``slice(toks, 0, 3)``
-    then throws at runtime) and emits a spurious short shingle for
-    1-token docs via a negative start, while the DuckDB oracles'
-    ``generate_series`` returns empty — the guard pins both engines to
-    the oracle's empty-set semantics regardless of corpus.
-    """
+    minhash_banded).  Docs with fewer than 3 tokens emit NO shingles,
+    the DuckDB oracles' empty ``generate_series`` (see
+    :func:`word_ngrams`)."""
     return (
         read_table(spark, sf_dir, "documents")
         .select("doc_id", F.split("text", " ").alias("toks"))
-        .filter(F.size("toks") >= 3)
         .select(
             "doc_id",
-            F.explode(
-                F.array_distinct(
-                    F.expr(
-                        "transform(sequence(1, size(toks) - 2),"
-                        " i -> concat_ws(' ', slice(toks, i, 3)))"
-                    )
-                )
-            ).alias("shingle"),
+            F.explode(F.array_distinct(word_ngrams("toks", 3))).alias(
+                "shingle"
+            ),
         )
     )
 
@@ -484,14 +472,19 @@ def llm_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
 def llm_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
-    docs = read_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.array_distinct(
-            F.expr(
-                "transform(sequence(1, greatest(size(split(text, ' ')) - 2, 1)),"
-                " i -> concat_ws(' ', slice(split(text, ' '), i, 3)))"
-            )
-        ).alias("toks"),
+    # MinHashLSH rejects an empty set: a doc under 3 tokens is one
+    # whole-document shingle
+    docs = (
+        read_table(spark, sf_dir, "documents")
+        .select("doc_id", F.split("text", " ").alias("t"))
+        .select(
+            "doc_id",
+            F.array_distinct(
+                F.when(F.size("t") >= 3, word_ngrams("t", 3)).otherwise(
+                    F.array(F.concat_ws(" ", "t"))
+                )
+            ).alias("toks"),
+        )
     )
     tf = HashingTF(
         inputCol="toks", outputCol="features", numFeatures=1 << 18, binary=True

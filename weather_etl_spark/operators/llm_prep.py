@@ -26,6 +26,7 @@ from weather_etl_spark.functions.exact import (
     md5_prefix_int,
     ratio_round4_sql,
     signed_ratio_round_sql,
+    word_ngrams,
 )
 from weather_etl_spark.io import read_table
 from weather_etl_spark.registry import register
@@ -72,18 +73,8 @@ GROUP BY train.doc_id
 )
 def q_llm_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.split("text", " ").alias("t")).filter(
-        F.size("t") >= _GRAM
-    )
-    sh = toks.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, size(t) - {_GRAM - 1}),"
-                f" i -> concat_ws(' ', slice(t, i, {_GRAM})))"
-            )
-        ).alias("g"),
-    )
+    toks = docs.select("doc_id", F.split("text", " ").alias("t"))
+    sh = toks.select("doc_id", F.explode(word_ngrams("t", _GRAM)).alias("g"))
     bench = (
         sh.filter(F.col("doc_id") % _BENCH_MOD == 0).select("g").distinct()
     )
@@ -495,18 +486,8 @@ ORDER BY cnt DESC, pair LIMIT 20
 )
 def q_llm_bpe_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
-    toks = docs.select(F.split("text", " ").alias("t")).filter(
-        F.size("t") >= 2
-    )
-    pairs = toks.select(
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(t) - 1),"
-                " i -> concat_ws(' ', element_at(t, i),"
-                " element_at(t, i + 1)))"
-            )
-        ).alias("pair")
-    )
+    toks = docs.select(F.split("text", " ").alias("t"))
+    pairs = toks.select(F.explode(word_ngrams("t", 2)).alias("pair"))
     counted = pairs.groupBy("pair").agg(F.count(F.lit(1)).alias("cnt"))
     w = Window.orderBy(F.col("cnt").desc(), F.col("pair").asc())
     return (
@@ -1040,17 +1021,9 @@ FROM scored
 )
 def q_llm_gram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.split("text", " ").alias("t")).filter(
-        F.size("t") >= _NOVEL_GRAM
-    )
+    toks = docs.select("doc_id", F.split("text", " ").alias("t"))
     grams = toks.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, size(t) - {_NOVEL_GRAM - 1}),"
-                f" i -> concat_ws(' ', slice(t, i, {_NOVEL_GRAM})))"
-            )
-        ).alias("g"),
+        "doc_id", F.explode(word_ngrams("t", _NOVEL_GRAM)).alias("g")
     ).distinct()
     first_seen = grams.groupBy("g").agg(F.min("doc_id").alias("first_doc"))
     joined = grams.join(first_seen, "g")
@@ -1260,19 +1233,9 @@ def _bpe_train_oracle(rounds: int = _BPE_ROUNDS) -> str:
 def _bpe_best(docs: DataFrame) -> DataFrame:
     """One round's merge selection: count adjacent pairs over the
     current corpus, pick the (cnt DESC, pair ASC) argmax (1 row)."""
-    toks = docs.select(F.split("txt", " ").alias("t")).filter(
-        F.size("t") >= 2
-    )
     counted = (
-        toks.select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(t) - 1),"
-                    " i -> concat_ws(' ', element_at(t, i),"
-                    " element_at(t, i + 1)))"
-                )
-            ).alias("pair")
-        )
+        docs.select(F.split("txt", " ").alias("t"))
+        .select(F.explode(word_ngrams("t", 2)).alias("pair"))
         .groupBy("pair")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -1772,23 +1735,9 @@ def q_llm_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"),
     )
     nd = docs.groupBy("source").agg(F.count(F.lit(1)).alias("n_docs"))
-    toks = docs.select(
-        "doc_id", "source", F.split("text", " ").alias("t")
-    ).filter(F.size("t") >= 3)
+    toks = docs.select("doc_id", "source", F.split("text", " ").alias("t"))
     grams = toks.select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("t") - 3),
-                lambda i: F.concat_ws(
-                    " ",
-                    F.col("t")[i],
-                    F.col("t")[i + 1],
-                    F.col("t")[i + 2],
-                ),
-            )
-        ).alias("gram"),
+        "doc_id", "source", F.explode(word_ngrams("t", 3)).alias("gram")
     ).distinct()
     df = grams.groupBy("source", "gram").agg(
         F.count(F.lit(1)).cast("bigint").alias("df")
@@ -1866,18 +1815,7 @@ def q_llm_distinct_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select("source", F.split("text", " ").alias("t"))
 
     def grams(n: int) -> DataFrame:
-        return toks.filter(F.size("t") >= n).select(
-            "source",
-            F.explode(
-                F.transform(
-                    F.sequence(F.lit(0), F.size("t") - n),
-                    lambda i: F.concat_ws(
-                        " ",
-                        *[F.col("t")[i + j] for j in range(n)],
-                    ),
-                )
-            ).alias("g"),
-        )
+        return toks.select("source", F.explode(word_ngrams("t", n)).alias("g"))
 
     def ratio(df: DataFrame, out: str) -> DataFrame:
         # exact integer half-up (rule-8 batch-2 sweep)
@@ -1903,9 +1841,11 @@ def q_llm_distinct_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     r2 = ratio(grams(2), "distinct_2").drop("_n_distinct_2")
     r3 = ratio(grams(3), "distinct_3").drop("_n_distinct_3")
+    # left joins: a source whose docs are all shorter than 2 (or 3)
+    # tokens has no bigram (trigram) ledger row, and keeps a NULL ratio
     return (
-        r1.join(r2, "source")
-        .join(r3, "source")
+        r1.join(r2, "source", "left")
+        .join(r3, "source", "left")
         .select(
             "source", "n_unigrams", "distinct_1", "distinct_2", "distinct_3"
         )
@@ -2168,14 +2108,7 @@ def q_llm_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(F.split("text", " ").alias("t")).filter(
         F.size("t") >= 2
     )
-    bg = toks.select(
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(t) - 1),"
-                " i -> concat_ws(' ', element_at(t, i), element_at(t, i + 1)))"
-            )
-        ).alias("bigram")
-    )
+    bg = toks.select(F.explode(word_ngrams("t", 2)).alias("bigram"))
     c2 = bg.groupBy("bigram").agg(
         F.count(F.lit(1)).cast("bigint").alias("n12")
     )

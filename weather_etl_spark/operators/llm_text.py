@@ -21,6 +21,7 @@ from weather_etl_spark.functions.exact import (
     md5_prefix_int,
     ratio_round4_sql,
     signed_ratio_round_sql,
+    word_ngrams,
 )
 from weather_etl_spark.io import read_table
 from weather_etl_spark.registry import register
@@ -542,13 +543,8 @@ FROM counts WHERE n_bigrams > 0
 )
 def q_llm_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    bigrams = F.expr(
-        "transform(sequence(1, size(toks) - 1),"
-        " i -> concat(toks[i-1], ' ', toks[i]))"
-    )
-    d = docs.select("doc_id", toks.alias("toks")).select(
-        "doc_id", bigrams.alias("bigrams")
+    d = docs.select("doc_id", F.split("text", " ").alias("toks")).select(
+        "doc_id", word_ngrams("toks", 2).alias("bigrams")
     )
     return (
         d.filter(F.size("bigrams") > 0)
@@ -780,6 +776,22 @@ def q_llm_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _prefix_counts(c2: DataFrame) -> DataFrame:
+    """(w1, n1) from a (bigram, n2) count ledger: n1(w1) is the sum of
+    n2 over the bigrams starting with w1 — exactly a recount of the
+    bigram stream's prefixes, read off the vocabulary-sized ledger
+    instead of a second pass over the stream (at 100 TB a full corpus
+    pass)."""
+    return (
+        c2.select(
+            F.split_part(F.col("bigram"), F.lit(" "), F.lit(1)).alias("w1"),
+            "n2",
+        )
+        .groupBy("w1")
+        .agg(F.sum("n2").alias("n1"))
+    )
+
+
 @register(
     "q_llm_perplexity",
     oracle=f"""
@@ -831,18 +843,8 @@ FROM scored
 )
 def q_llm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.split("text", " ").alias("t")).filter(
-        F.size("t") >= 2
-    )
-    bg = toks.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(t) - 1),"
-                " i -> concat_ws(' ', element_at(t, i), element_at(t, i + 1)))"
-            )
-        ).alias("bigram"),
-    )
+    toks = docs.select("doc_id", F.split("text", " ").alias("t"))
+    bg = toks.select("doc_id", F.explode(word_ngrams("t", 2)).alias("bigram"))
     # r12 (guide §2.3 aggregate-before-shuffle + §5 lineage cut): the
     # bigram count table feeds two consumers (the NLL join build side
     # and, below, the unigram derivation), and Catalyst re-plans the
@@ -853,19 +855,7 @@ def q_llm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     c2 = bg.groupBy("bigram").agg(
         F.count(F.lit(1)).alias("n2")
     ).localCheckpoint()
-    # n1(w1) = Σ n2 over the bigrams starting with w1 — EXACTLY the old
-    # full-corpus recount, derived from c2 instead of a second
-    # scan+explode of every document (profiled at sf0.1: corpus passes
-    # 3 -> 2, the dropped pass was ~0.65 s of the 2.0 s executor
-    # total; at 100 TB it is a full corpus pass).
-    c1 = (
-        c2.select(
-            F.split_part(F.col("bigram"), F.lit(" "), F.lit(1)).alias("w1"),
-            "n2",
-        )
-        .groupBy("w1")
-        .agg(F.sum("n2").alias("n1"))
-    )
+    c1 = _prefix_counts(c2)
     # c2/c1 are bigram-/unigram-vocabulary-sized and grow with the
     # corpus: NO broadcast hints (a hint never degrades — at 100 TB it
     # would OOM the driver).  AQE broadcasts them while they fit under
@@ -1046,25 +1036,11 @@ GROUP BY tot.n
 )
 def q_llm_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
-    toks = docs.select(F.split("text", " ").alias("t")).filter(
-        F.size("t") >= 2
-    )
-    bg = toks.select(
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(t) - 1),"
-                " i -> concat_ws(' ', element_at(t, i), element_at(t, i + 1)))"
-            )
-        ).alias("bigram")
+    bg = docs.select(F.split("text", " ").alias("t")).select(
+        F.explode(word_ngrams("t", 2)).alias("bigram")
     )
     c2 = bg.groupBy("bigram").agg(F.count(F.lit(1)).alias("n2"))
-    c1 = (
-        bg.select(
-            F.split_part(F.col("bigram"), F.lit(" "), F.lit(1)).alias("w1")
-        )
-        .groupBy("w1")
-        .agg(F.count(F.lit(1)).alias("n1"))
-    )
+    c1 = _prefix_counts(c2)
     tot = c2.agg(F.sum("n2").cast("bigint").alias("n"))
     term = F.round(
         -(F.col("n2").cast("double") / F.col("n"))
@@ -1373,33 +1349,29 @@ _EVAL_NGRAM_CTES = """tok AS (
 def _eval_pair_ngrams(docs: DataFrame) -> DataFrame:
     """(pair_id, n, overlap, cand_c, ref_c) clipped n-gram overlap
     ledger for n in (1, 2) — the DataFrame twin of _EVAL_NGRAM_CTES,
-    shared by the ROUGE and BLEU heads."""
-    tok = (
-        docs.select(
-            "doc_id",
-            F.expr("doc_id DIV 2").alias("pair_id"),
-            (F.col("doc_id") % 2 == 1).alias("is_cand"),
-            F.posexplode(F.split("text", " ")).alias("pos", "t"),
-        )
-        .filter(F.col("t") != "")
+    shared by the ROUGE and BLEU heads.  Grams run over the raw split
+    and keep only those whose tokens are all non-empty, the oracle's
+    adjacent-position join: "the  fast" has no bigram."""
+    toks = docs.select(
+        F.expr("doc_id DIV 2").alias("pair_id"),
+        (F.col("doc_id") % 2 == 1).alias("is_cand"),
+        F.split("text", " ").alias("t"),
     )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    uni = tok.groupBy("pair_id", "is_cand", F.col("t").alias("g")).agg(
-        F.count(F.lit(1)).alias("c")
-    ).select("pair_id", "is_cand", F.lit(1).alias("n"), "g", "c")
-    bi = (
-        tok.select(
-            "pair_id",
-            "is_cand",
-            F.concat_ws(">", "t", F.lead("t", 1).over(w)).alias("g2"),
-            F.lead("t", 1).over(w).alias("nxt"),
-        )
-        .filter(F.col("nxt").isNotNull())
-        .groupBy("pair_id", "is_cand", F.col("g2").alias("g"))
+    by_n = F.array(
+        *[
+            F.struct(F.lit(n).alias("n"), word_ngrams("t", n).alias("gs"))
+            for n in (1, 2)
+        ]
+    )
+    grams = (
+        toks.select("pair_id", "is_cand", F.inline(by_n))
+        .select("pair_id", "is_cand", "n", F.explode("gs").alias("g"))
+        # tokens hold no space, so an empty token shows as two adjacent
+        # spaces once the gram is padded with one on each side
+        .filter(~F.concat(F.lit(" "), "g", F.lit(" ")).contains("  "))
+        .groupBy("pair_id", "is_cand", "n", "g")
         .agg(F.count(F.lit(1)).alias("c"))
-        .select("pair_id", "is_cand", F.lit(2).alias("n"), "g", "c")
     )
-    grams = uni.unionByName(bi)
     ca = grams.filter("is_cand").select(
         "pair_id", "n", "g", F.col("c").alias("cc")
     )
@@ -1653,25 +1625,27 @@ GROUP BY tot.t, tot.b
     "distinct bigram/unigram types — the two vocabulary joins are "
     "hash joins on w1/w2 with NO broadcast hints (the r5 "
     "perplexity ruling: vocabulary grows with the corpus), and the "
-    "1-row (B, T) total crosses in broadcast. Shuffles carry "
-    "(gram, count) pairs, never text.",
+    "1-row (B, T) total crosses in broadcast. The bigram ledger is "
+    "materialized once, so the corpus is read in one pass. Shuffles "
+    "carry (gram, count) pairs, never text.",
 )
 def q_llm_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
-    toks = docs.select(F.split("text", " ").alias("t")).filter(
-        F.size("t") >= 2
-    )
-    bg = toks.select(
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(t) - 1),"
-                " i -> struct(element_at(t, i) AS w1,"
-                "             element_at(t, i + 1) AS w2))"
-            )
-        ).alias("p")
-    ).select("p.w1", "p.w2")
-    c2 = bg.groupBy("w1", "w2").agg(
-        F.count(F.lit(1)).cast("bigint").alias("c")
+    # tokens hold no space, so a bigram's two words are its split_parts.
+    # The ledger feeds four consumers, and the joins' pushed isnotnull
+    # filters defeat ReuseExchange, so it is materialized once (the
+    # q_llm_perplexity lineage cut): one corpus pass, not four.
+    c2 = (
+        docs.select(F.split("text", " ").alias("t"))
+        .select(F.explode(word_ngrams("t", 2)).alias("bigram"))
+        .groupBy("bigram")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+        .select(
+            F.split_part("bigram", F.lit(" "), F.lit(1)).alias("w1"),
+            F.split_part("bigram", F.lit(" "), F.lit(2)).alias("w2"),
+            "c",
+        )
+        .localCheckpoint()
     )
     g1 = c2.groupBy("w1").agg(
         F.sum("c").cast("bigint").alias("c1"),
@@ -1765,7 +1739,8 @@ FROM nll GROUP BY doc_id
     "bigram-key shuffle of the test stream against the train count "
     "ledgers (unhinted: AQE broadcasts while small, shuffle-joins at "
     "corpus scale); the 1-row vocab size is the q_filter_ts_cursor "
-    "crossJoin. The train filter rides the same scan.",
+    "crossJoin. The train ledger is materialized once; n1 and the "
+    "vocab size derive from it.",
 )
 def q_llm_ppl_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, sf_dir, "documents")
@@ -1774,28 +1749,20 @@ def q_llm_ppl_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     toks = docs.select(
         "doc_id", bucket.alias("bucket"), F.split("text", " ").alias("t")
-    ).filter(F.size("t") >= 2)
+    )
     bg = toks.select(
-        "doc_id",
-        "bucket",
-        F.explode(
-            F.expr(
-                "transform(sequence(1, size(t) - 1),"
-                " i -> concat_ws(' ', element_at(t, i), element_at(t, i + 1)))"
-            )
-        ).alias("bigram"),
+        "doc_id", "bucket", F.explode(word_ngrams("t", 2)).alias("bigram")
     )
-    train = bg.filter(F.col("bucket") < 80)
-    c2 = train.groupBy("bigram").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n2")
+    # the train ledger feeds the bigram join, n1 and the vocab size;
+    # materialized once (the q_llm_perplexity lineage cut), so the train
+    # split is read in one pass, not three
+    c2 = (
+        bg.filter(F.col("bucket") < 80)
+        .groupBy("bigram")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n2"))
+        .localCheckpoint()
     )
-    c1 = (
-        train.select(
-            F.split_part(F.col("bigram"), F.lit(" "), F.lit(1)).alias("w1")
-        )
-        .groupBy("w1")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n1"))
-    )
+    c1 = _prefix_counts(c2)
     v = c1.agg(F.count(F.lit(1)).cast("bigint").alias("vsize"))
     # train count ledgers are vocabulary-sized: NO broadcast hints
     # (AQE broadcasts while small, shuffle-joins at corpus scale)
